@@ -103,12 +103,11 @@ def _prefix_counts(
     stage ×6 funnel variants) with this generator projection (guide
     §2.4 — remove the join outright). Row-for-row identical: the inner
     θ-join emitted exactly the prefixes 1..depth per user and nothing
-    for depth 0; the step-name lookup is ``element_at`` on a literal.
-    Output columns: [*group_before, step, step_name, *group_after,
-    n_users] — the exact former join+groupBy order."""
-    names_arr = "array(" + ", ".join(
-        "'" + s.replace("'", "\\'") + "'" for s in steps
-    ) + ")"
+    for depth 0; the step-name lookup is ``element_at`` on an array of
+    literals (built column-wise, so no step name is ever spliced into
+    SQL text). Output columns: [*group_before, step, step_name,
+    *group_after, n_users] — the exact former join+groupBy order."""
+    names_arr = F.array(*[F.lit(s) for s in steps])
     return (
         depths.filter(F.col("depth") >= 1)
         .select(
@@ -121,7 +120,7 @@ def _prefix_counts(
         .select(
             *group_before,
             "step",
-            F.expr(f"element_at({names_arr}, step)").alias("step_name"),
+            F.element_at(names_arr, F.col("step")).alias("step_name"),
             *group_after,
             "n_users",
         )

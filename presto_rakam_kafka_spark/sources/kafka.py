@@ -301,6 +301,11 @@ class KafkaEventSource:
                     cols["_offset"].append(int(off))
                     for n in names:
                         cols[n].append(rec.get(n))
+                if not cols["_offset"]:
+                    # every record dropped: empty lists would type as
+                    # float64 columns that Arrow cannot cast to e.g.
+                    # TIMESTAMP — an empty batch contributes nothing
+                    continue
                 yield pd.DataFrame(cols, columns=["_offset", *names])
 
         decoded = raw.select("offset", "value").mapInPandas(

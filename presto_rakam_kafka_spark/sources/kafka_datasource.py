@@ -27,6 +27,10 @@ in ``KafkaSplitManager``:
   stats, before any executor starts (``KafkaSplitManager.java:153-178``).
   Non-offset filters are returned to Spark and evaluated post-scan.
 
+The pruning itself is one driver-side function, :func:`plan_segments`;
+the serving tier calls it directly and hands the surviving files to
+Spark's native parquet scan (no Python worker on its read path).
+
 Scale notes: ``partitions()`` runs driver-side and reads only directory
 listings + one parquet footer per segment (the same metadata a Kafka
 admin-client offset lookup costs the reference). ``read()`` streams
@@ -497,6 +501,120 @@ def _arrow_schema():
     )
 
 
+def _ts_overlaps(fpath: str, ts_lo, ts_hi) -> bool:
+    """False iff the segment's footer ts stats prove it disjoint from
+    the closed interval [ts_lo, ts_hi]. Stats-less segments are kept
+    (never silently pruned, same stance as offset stats)."""
+    if ts_lo is None and ts_hi is None:
+        return True
+    lo, hi = _segment_ts_meta(fpath)
+    if lo is None or hi is None:
+        return True
+    if ts_lo is not None and hi < ts_lo:
+        return False
+    if ts_hi is not None and lo > ts_hi:
+        return False
+    return True
+
+
+def _bloom_overlaps(fpath: str, keys) -> bool:
+    """False iff the segment's bloom sidecar proves NO key of ``keys``
+    can be in it. Sidecar-less segments are kept — the index is an
+    optimization, never a semantic filter."""
+    bpath = os.path.join(
+        os.path.dirname(fpath), _bloom_sidecar_name(os.path.basename(fpath))
+    )
+    if not os.path.exists(bpath):
+        return True
+    with open(bpath, "rb") as fh:
+        parsed = _bloom_parse(fh.read())
+    if parsed is None:
+        return True
+    m_bits, bits = parsed
+    return any(_bloom_might_contain(bits, m_bits, k) for k in keys)
+
+
+@dataclass(frozen=True)
+class SegmentPlan:
+    """What a scan of the log must read: the surviving segments as
+    ``(partition_id, file, lo, hi_exclusive)`` with each span clamped
+    to the offset bounds, how many segments the bounds pruned, and the
+    partitions with a segment the offset bounds cut through (or
+    without offset stats) — the only partitions whose rows an exact
+    offset filter can drop."""
+
+    segments: tuple[tuple[int, str, int, int], ...]
+    pruned: int
+    cut: frozenset[int]
+
+    @property
+    def files(self) -> list[str]:
+        return [f for _pid, f, _lo, _hi in self.segments]
+
+
+def plan_segments(
+    path: str,
+    start: int | None = None,
+    end: int | None = None,
+    lower: dict | None = None,
+    ts_lo=None,
+    ts_hi=None,
+    keys=None,
+) -> SegmentPlan:
+    """The log's one split planner (``KafkaSplitManager.java:153-178``),
+    driver-side: directory listings, one footer per segment, and the
+    pruning axes every scan of the log shares.
+
+    * ``start``/``end`` — global offset bounds ``[start, end)``;
+    * ``lower`` — per-partition lower bounds ``{pid: first offset
+      needed}`` (a serving store's HWM); partitions absent from it are
+      unbounded;
+    * ``ts_lo``/``ts_hi`` — a closed event-time interval (naive UTC
+      datetimes, as in the footers), pruned by footer ts stats (the
+      ``offsetsForTimes`` analog);
+    * ``keys`` — a key set: on a key-routed log only the keys'
+      partitions survive, and each segment's bloom sidecar is probed.
+
+    Pruning is segment-granular and conservative (stats-less segments
+    scan the full span, a missing sidecar keeps its segment), so every
+    reader still applies its exact row filters. Offset bounds are
+    checked first: they come from the listing's footers, so covered
+    segments never cost a ts footer read or a bloom probe. Raises
+    :class:`KafkaLogLayoutError` on a layout with no segment files."""
+    by_pid = _enumerate_segments(path)
+    keep_pids = None
+    if keys and _read_routing(path) == "key":
+        # on a key-routed log every key lives in exactly one partition
+        keep_pids = {_route_key(k, len(by_pid)) for k in keys}
+    total = 0
+    kept: list[tuple[int, str, int, int]] = []
+    cut: set[int] = set()
+    for pid in sorted(by_pid):
+        floor = None if lower is None else lower.get(pid)
+        for fpath, seg_lo, seg_hi, _nrows in by_pid[pid]:
+            total += 1
+            if keep_pids is not None and pid not in keep_pids:
+                continue
+            lo, hi = (0, 2**62) if seg_lo is None else (seg_lo, seg_hi)
+            for bound in (start, floor):
+                if bound is not None:
+                    lo = max(lo, int(bound))
+            if end is not None:
+                hi = min(hi, int(end))
+            if lo >= hi:
+                continue
+            if not _ts_overlaps(fpath, ts_lo, ts_hi):
+                continue
+            if keys and not _bloom_overlaps(fpath, keys):
+                continue
+            kept.append((pid, fpath, lo, hi))
+            if seg_lo is None or (lo, hi) != (seg_lo, seg_hi):
+                cut.add(pid)
+    if total == 0:
+        raise KafkaLogLayoutError(f"no segment files under {path}")
+    return SegmentPlan(tuple(kept), total - len(kept), frozenset(cut))
+
+
 class KafkaLogLayoutError(Exception):
     """The log directory has no ``partition=N`` dirs / no segments —
     scanning it silently as empty would be the under-scan failure mode
@@ -512,6 +630,11 @@ class OffsetSplit(InputPartition):
     start: int  # inclusive
     end: int  # exclusive
 
+    @property
+    def segments(self) -> tuple[str, ...]:
+        """The segment files this task reads (none when empty)."""
+        return (self.path,) if self.start < self.end else ()
+
 
 @dataclass(frozen=True)
 class PackedSplit(InputPartition):
@@ -523,6 +646,17 @@ class PackedSplit(InputPartition):
     identical to the unpacked splits."""
 
     chunks: tuple[OffsetSplit, ...]
+
+    @property
+    def partition_id(self) -> int:
+        """The log partition every chunk belongs to (packing never
+        crosses partitions)."""
+        return self.chunks[0].partition_id
+
+    @property
+    def segments(self) -> tuple[str, ...]:
+        """The segment files this task reads, in scan order."""
+        return tuple(f for c in self.chunks for f in c.segments)
 
 
 class KafkaSegmentDataSource(DataSource):
@@ -701,41 +835,6 @@ class KafkaSegmentReader(DataSourceReader):
     def _clamp_end(self, v: int) -> None:
         self._end = v if self._end is None else min(self._end, v)
 
-    def _ts_overlaps(self, fpath: str) -> bool:
-        """False iff the segment's footer ts stats prove it disjoint
-        from the pushed timestamp bounds. Stats-less segments are kept
-        (never silently pruned, same stance as offset stats)."""
-        if self._ts_lo is None and self._ts_hi is None:
-            return True
-        lo, hi = _segment_ts_meta(fpath)
-        if lo is None or hi is None:
-            return True
-        if self._ts_lo is not None and hi < self._ts_lo:
-            return False
-        if self._ts_hi is not None and lo > self._ts_hi:
-            return False
-        return True
-
-    def _bloom_overlaps(self, fpath: str) -> bool:
-        """False iff the segment's bloom sidecar proves NO pushed key
-        can be in it. Sidecar-less segments are kept — the index is an
-        optimization, never a semantic filter."""
-        bpath = os.path.join(
-            os.path.dirname(fpath),
-            _bloom_sidecar_name(os.path.basename(fpath)),
-        )
-        if not os.path.exists(bpath):
-            return True
-        with open(bpath, "rb") as fh:
-            payload = fh.read()
-        parsed = _bloom_parse(payload)
-        if parsed is None:
-            return True
-        m_bits, bits = parsed
-        return any(
-            _bloom_might_contain(bits, m_bits, k) for k in self._keys
-        )
-
     # -- A2/A3: segment enumeration → splits ---------------------------
     def partitions(self) -> list[InputPartition]:
         # Returns OffsetSplit splits, or PackedSplit groups when segment
@@ -743,81 +842,25 @@ class KafkaSegmentReader(DataSourceReader):
         # packBytes=128MB whenever minSplits did not subdivide — task
         # layout and split ordering change for every consumer; readers
         # relying on one-task-per-segment must set packBytes=0).
-        # Parquet footer stats give each segment's offset span — the
-        # planner's analog of a segment index lookup. One footer read
-        # per segment, driver-side only. Stats-less segments scan the
-        # conservative full span (never silently pruned).
-        by_pid = _enumerate_segments(self._path)
-        # Key-conjunct routing (VERDICT r9 next-4): on a KEY-routED log
-        # every requested key lives in exactly one partition — other
-        # partitions never plan a split. Offset-routed or unmarked logs
-        # keep every partition (correct for both layouts; bloom pruning
-        # below still applies). Falls back to the full scan when the
-        # log is unindexed (a missing sidecar keeps its segment).
-        keep_pids = None
-        if self._keys:
-            if _read_routing(self._path) == "key":
-                n = len(by_pid)
-                keep_pids = {_route_key(k, n) for k in self._keys}
-        segments: list[tuple[int, str, int, int]] = []  # (pid, file, lo, hi+1)
-        for pid in sorted(by_pid):
-            if keep_pids is not None and pid not in keep_pids:
-                continue
-            for fpath, lo, hi, _nrows in by_pid[pid]:
-                # ts-stat pruning first (one extra footer read per
-                # segment, only when a ts bound was pushed): a segment
-                # whose whole ts span misses the bound never plans a
-                # split — WHERE ts >= X becomes segment pruning, the
-                # consumer `offsetsForTimes` analog.
-                if not self._ts_overlaps(fpath):
-                    continue
-                # per-segment bloom probe: a sidecar that says "no key
-                # in this conjunct can be here" prunes the segment at
-                # plan time; a missing/unparsable sidecar keeps it
-                # (correctness never depends on the index)
-                if self._keys and not self._bloom_overlaps(fpath):
-                    continue
-                if lo is None:
-                    segments.append((pid, fpath, 0, 2**62))
-                else:
-                    segments.append((pid, fpath, lo, hi))
-
+        # Pruning is the shared driver-side planner (plan_segments);
+        # this method only turns its surviving segments into tasks.
+        segments = plan_segments(
+            self._path, start=self._start, end=self._end,
+            ts_lo=self._ts_lo, ts_hi=self._ts_hi, keys=self._keys,
+        ).segments
         if not segments:
-            all_files = [
-                (pid, f)
-                for pid in sorted(by_pid)
-                for f, _, _, _ in by_pid[pid]
-            ]
-            if all_files:
-                # Layout is fine; ts pruning removed every segment —
-                # a fully-pruned (empty) scan, like the offset path.
-                pid, fpath = all_files[0]
-                return [OffsetSplit(fpath, pid, 0, 0)]
-            raise KafkaLogLayoutError(f"no segment files under {self._path}")
-
-        # Clamp by pushed offset bounds; prune non-overlapping segments.
-        clamped: list[tuple[int, str, int, int]] = []
-        for pid, fpath, lo, hi in segments:
-            if self._start is not None:
-                lo = max(lo, self._start)
-            if self._end is not None:
-                hi = min(hi, self._end)
-            if lo < hi:
-                clamped.append((pid, fpath, lo, hi))
-        if not clamped:
             # Fully pruned scan still needs ≥1 (empty) split.
-            pid, fpath, _, _ = segments[0]
-            return [OffsetSplit(fpath, pid, 0, 0)]
+            return [OffsetSplit("", 0, 0, 0)]
 
         # A2: subdivide segment offset spans until the split count
         # reaches minSplits (the reference's more-workers-than-partitions
         # property; Spark-Kafka's minPartitions).
         per_split = 0
-        if self._min_splits > len(clamped):
-            total_span = sum(hi - lo for _, _, lo, hi in clamped)
+        if self._min_splits > len(segments):
+            total_span = sum(hi - lo for _, _, lo, hi in segments)
             per_split = max(1, math.ceil(total_span / self._min_splits))
         splits: list[OffsetSplit] = []
-        for pid, fpath, lo, hi in clamped:
+        for pid, fpath, lo, hi in segments:
             if per_split and hi - lo > per_split:
                 for s in range(lo, hi, per_split):
                     splits.append(OffsetSplit(fpath, pid, s, min(s + per_split, hi)))

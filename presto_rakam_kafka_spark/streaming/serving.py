@@ -14,9 +14,10 @@ serving shape, Spark-first:
 * **maintenance** (:func:`maintain_rollup` batch, or
   :func:`run_rollup_maintenance` as a streaming foreachBatch fold)
   folds ONLY the log tail beyond the stored HWM into the store.
-  Per-trigger I/O is ∝ new segments (the tail scan pushes
-  ``offset >= min(hwm)`` into split planning — the same pre-scan
-  pruning as ``plans/offset_pushdown.py``) + touched days: each
+  Per-trigger I/O is ∝ new segments (the tail scan's driver-side
+  planner, ``kafka_datasource.plan_segments``, drops every segment
+  wholly below its partition's HWM before any read) + touched days:
+  each
   generation rewrites only the day buckets the tail touched and
   carries every other day's files BY REFERENCE in a per-generation
   ``_MANIFEST.json`` (the object-store-safe Delta/Iceberg carry,
@@ -26,7 +27,7 @@ serving shape, Spark-first:
   the full log at the cost of (cells + tail segments), never a full
   rescan. A fresh store degrades to exactly the reference's behavior
   (whole-log scan); a fully-maintained store reads zero log segments
-  past the HWM (the planner emits one empty split).
+  past the HWM (the tail is an empty local frame).
 
 Aggregates must be split into algebraic partials: the per-batch
 ``cell_fn`` computes them (count, raw sums, min/max), ``merge_exprs``
@@ -461,23 +462,28 @@ def read_store_cells_at(
     ]
     if not files:
         return None
-    # Schema-migration tolerance: generations written before a cell-
-    # schema migration lack the new measure columns. mergeSchema=true
-    # gave that, but it launches a footer-reading SPARK JOB on every
-    # serve build (measured ~1.4 s of the serve's driver latency at
-    # sf0.1). The manifest is a bounded file list, so merge the footers
-    # DRIVER-side with pyarrow (µs per file) and hand Spark the final
-    # schema — missing columns read as nulls exactly as mergeSchema
-    # produced. Any surprise (type conflict, exotic type) falls back to
-    # the mergeSchema job: slower, never wrong (round-13 optimization).
-    # Scope note (ADVICE r13 #3): this try/except covers DRIVER-side
-    # schema construction only — the returned read is lazy, so a
-    # pyarrow→Spark type mapping that Spark's own parquet reader
-    # disagrees with (foreign-writer timestamp units, unsigned ints)
-    # would surface at action time, outside the fallback. Safe for
-    # cells this repo's Spark wrote (the only writer of a store);
-    # stores ingested from foreign writers should read via the
-    # mergeSchema path.
+    return _read_cell_files(spark, files)
+
+
+def _read_cell_files(spark: SparkSession, files: list[str]) -> DataFrame:
+    """Read stored cell files under the union of their footer schemas.
+
+    Schema-migration tolerance: generations written before a cell-
+    schema migration lack the new measure columns. mergeSchema=true
+    gave that, but it launches a footer-reading SPARK JOB on every
+    serve build (measured ~1.4 s of the serve's driver latency at
+    sf0.1). A manifest's file list is bounded, so the footers merge
+    DRIVER-side with pyarrow (µs per file) and Spark gets the final
+    schema — missing columns read as nulls exactly as mergeSchema
+    produced. Any surprise (type conflict, exotic type) falls back to
+    the mergeSchema job: slower, never wrong (round-13 optimization).
+    Scope note (ADVICE r13 #3): the fallback covers DRIVER-side schema
+    construction only — the returned read is lazy, so a pyarrow→Spark
+    type mapping that Spark's own parquet reader disagrees with
+    (foreign-writer timestamp units, unsigned ints) would surface at
+    action time, outside the fallback. Safe for cells this repo's
+    Spark wrote (the only writer of a store); stores ingested from
+    foreign writers should read via the mergeSchema path."""
     try:
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -615,21 +621,25 @@ def _per_partition_offset_filter(
     Partitions absent from ``bounds`` pass when ``lower`` (unknown at
     snapshot time → uncovered, scan them) and are EXCLUDED when not
     (no committed coverage target → fold next tick). Two physical
-    strategies, same semantics: a literal chain for dashboards-scale
+    strategies, same semantics: a literal predicate for dashboard-scale
     partition counts, a broadcast hash join against the bounds map
     (partitions × 16 bytes — always broadcastable) beyond the codegen
     cutoff."""
     if not bounds:
         return df
     if len(bounds) <= _BOUNDS_EXPR_MAX_PARTITIONS:
-        cond = None
-        for p, h in bounds.items():
-            c = (F.col("partition") == int(p)) & (
-                F.col("offset") >= int(h) if lower else F.col("offset") < int(h)
-            )
-            cond = c if cond is None else (cond | c)
-        known = F.col("partition").isin([int(p) for p in bounds])
-        return df.filter((~known | cond) if lower else (known & cond))
+        # one SQL predicate over integers, not a Column tree: every
+        # Column operator is a py4j round trip on the serve's build path
+        op = ">=" if lower else "<"
+        cond = " OR ".join(
+            f"(`partition` = {int(p)} AND `offset` {op} {int(h)})"
+            for p, h in bounds.items()
+        )
+        known = "`partition` IN ({})".format(
+            ", ".join(str(int(p)) for p in bounds)
+        )
+        pred = f"NOT {known} OR {cond}" if lower else f"{known} AND ({cond})"
+        return df.filter(F.expr(pred))
     spark = df.sparkSession
     bdf = spark.createDataFrame(
         [(int(p), int(h)) for p, h in bounds.items()],
@@ -648,30 +658,80 @@ def _per_partition_offset_filter(
 
 
 def _tail_scan(
-    spark: SparkSession, log_dir: str, hwm: dict, up_to: int | None = None
+    spark: SparkSession,
+    log_dir: str,
+    hwm: dict,
+    up_to: int | None = None,
+    ts_lo=None,
+    ts_hi=None,
+    keys=None,
 ) -> DataFrame:
-    """Raw frames not yet covered by the store: ``offset >= min(hwm)``
-    is a plain conjunct Catalyst hands to ``pushFilters`` (segments
-    wholly below it never plan splits); the exact per-partition
-    residual (coverage is per partition) is
-    :func:`_per_partition_offset_filter` — a literal chain at
+    """Raw frames not yet covered by the store, read natively.
+
+    Pruning happens driver-side, in
+    :func:`~presto_rakam_kafka_spark.sources.kafka_datasource.plan_segments`:
+    segments wholly below their partition's HWM (or at/after
+    ``up_to``), outside the closed event-time interval
+    ``[ts_lo, ts_hi]`` (naive UTC datetimes, pruned by footer ts
+    stats) or bloom-negative for ``keys`` are never read. The
+    surviving files go straight to Spark's parquet scan — no Python
+    DataSource planning round trips, no Python-worker read — and the
+    EXACT per-partition offset residual (coverage is per partition) is
+    :func:`_per_partition_offset_filter`, applied to the partitions
+    whose segments the bounds cut through: a literal predicate at
     dashboard-scale partition counts, a broadcast-joined bounds map
-    beyond the codegen cutoff. JVM-side either way, no driver loop
-    over data."""
+    beyond the codegen cutoff. Timestamp and key predicates stay the
+    caller's to apply; pruning is segment-granular.
+
+    The file list is fixed when the frame is built, the same moment a
+    serve takes its pointer snapshot; a tail with no surviving segment
+    is a zero-row frame."""
     from presto_rakam_kafka_spark.sources.kafka_datasource import (
-        ensure_segments_source,
+        RAW_FRAME_SCHEMA,
+        plan_segments,
     )
 
-    # registration-time session prep (conf touched once per session,
-    # never per serve — ADVICE r10 #4)
-    ensure_segments_source(spark)
-    df = spark.read.format("kafka_segments").option("path", log_dir).load()
-    if hwm:
-        df = df.filter(F.col("offset") >= int(min(hwm.values())))
-        df = _per_partition_offset_filter(df, hwm, lower=True)
-    if up_to is not None:
+    plan = plan_segments(
+        log_dir, end=up_to, lower=hwm, ts_lo=ts_lo, ts_hi=ts_hi, keys=keys
+    )
+    if not plan.segments:
+        return spark.createDataFrame([], RAW_FRAME_SCHEMA)
+    df = spark.read.schema(RAW_FRAME_SCHEMA).parquet(*plan.files)
+    # Only a segment the bounds cut through holds rows outside them; a
+    # tail of whole segments (every serve right after a tick) needs no
+    # row filter at all.
+    floors = {p: h for p, h in hwm.items() if p in plan.cut}
+    if floors:
+        df = _per_partition_offset_filter(df, floors, lower=True)
+    if up_to is not None and plan.cut:
         df = df.filter(F.col("offset") < int(up_to))
     return df
+
+
+def _day_span_utc(spark: SparkSession, first_day: str, last_day: str):
+    """``(ts_lo, ts_hi)`` for :func:`_tail_scan`: the closed interval
+    from midnight starting ``first_day`` to midnight ending
+    ``last_day`` in the session time zone, as the naive UTC datetimes
+    the segment footers' ts stats hold. A zone id ``zoneinfo`` cannot
+    parse (``+08:00``) widens both ends by a day instead — no zone is
+    a day away from UTC, so pruning stays conservative."""
+    import datetime as _dt
+    from zoneinfo import ZoneInfo
+
+    one = _dt.timedelta(days=1)
+    lo = _dt.datetime.fromisoformat(first_day)
+    hi = _dt.datetime.fromisoformat(last_day) + one
+    try:
+        tz = ZoneInfo(spark.conf.get("spark.sql.session.timeZone"))
+    except (KeyError, ValueError):  # offsets, unknown or malformed ids
+        return lo - one, hi + one
+
+    def utc(t):
+        return t.replace(tzinfo=tz).astimezone(_dt.timezone.utc).replace(
+            tzinfo=None
+        )
+
+    return utc(lo), utc(hi)
 
 
 def _log_end_offsets(log_dir: str) -> dict[int, int]:
@@ -1078,7 +1138,13 @@ def serve_rollup_tail(
     (plan-asserted in tests); on the tail side it filters the
     freshly-built cells before the merge. Exactness is unchanged —
     cells are keyed by the group columns, so filtering cells by a group
-    predicate commutes with the merge."""
+    predicate commutes with the merge.
+
+    The tail side is pruned driver-side by ``plan_segments`` (segments
+    wholly below their partition's HWM are never read) when the serve
+    is BUILT, and the surviving files are read by Spark's native
+    parquet scan; the frame's file list is thus fixed with its pointer
+    snapshot."""
     gen, _txns, hwm = _read_pointer(store)
     if _after_pointer_snapshot_hook is not None:
         _after_pointer_snapshot_hook()
@@ -1186,13 +1252,13 @@ def repair_rollup_days(
     (segments overlapping ``days``) + (rewritten day buckets): the scan
     combines the store's committed per-partition upper bound (the
     repaired cells must cover EXACTLY what the old cells covered, so
-    serves stay exact against the live tail) with per-day timestamp
-    bounds that prune at split planning (footer ts stats — the same
-    two-axis prune as :func:`serve_rollup_day`). Every other day
-    carries by manifest reference; a repaired day whose rows were all
-    purged disappears from the manifest. HWM is UNCHANGED (repair
-    rewrites history, it does not advance coverage). Returns the list
-    of day buckets actually rewritten.
+    serves stay exact against the live tail) with the repaired days'
+    event-time span, which prunes segments at planning (footer ts
+    stats — the same two-axis prune as :func:`serve_rollup_day`).
+    Every other day carries by manifest reference; a repaired day
+    whose rows were all purged disappears from the manifest. HWM is
+    UNCHANGED (repair rewrites history, it does not advance coverage).
+    Returns the list of day buckets actually rewritten.
 
     ``days`` is the caller's responsibility and must be computed
     BEFORE purging the log (e.g. the victims' distinct event days from
@@ -1219,7 +1285,10 @@ def _repair_days_locked(
     if gen_prev is None or not days:
         return []  # nothing materialized / nothing asked: no-op
     days = sorted(set(days))
-    scan = _tail_scan(spark, log_dir, {}, up_to=max(hwm.values()))
+    ts_lo, ts_hi = _day_span_utc(spark, days[0], days[-1])
+    scan = _tail_scan(
+        spark, log_dir, {}, up_to=max(hwm.values()), ts_lo=ts_lo, ts_hi=ts_hi
+    )
     scan = _per_partition_offset_filter(scan, hwm, lower=False)
     day_pred = None
     for d in days:
@@ -1313,11 +1382,12 @@ def serve_rollup_day(
 ) -> DataFrame:
     """Single-tile refresh: the rollup for ONE day at the cost of one
     manifest day bucket + a doubly-pruned tail. The stored side reads
-    only ``day``'s files (manifest lookup — no scan of other days);
-    the tail side combines BOTH prune axes: ``offset >= hwm`` (covered
-    segments out) AND ``timestamp >= day`` (segments whose footer ts
-    stats end before the day out — the offsetsForTimes-analog pruning
-    of ``KafkaSegmentReader._ts_overlaps``). Day cells are closed by
+    only ``day``'s files (manifest lookup — no scan of other days,
+    footer schemas merged driver-side); the tail side combines BOTH
+    prune axes, driver-side in ``plan_segments`` when the serve is
+    built: ``offset >= hwm`` per partition (covered segments out) AND
+    the day's event-time span (segments whose footer ts stats miss the
+    day out — the offsetsForTimes analog). Day cells are closed by
     event time, so the residual day filter after the segment prune is
     exact. ``cell_filter`` adds the key-predicate prune of
     :func:`serve_rollup_tail` as a THIRD axis (day bucket × row
@@ -1330,19 +1400,19 @@ def serve_rollup_day(
             for f in _read_manifest(store, gen).get(day, [])
         ]
         if files:
-            stored = spark.read.option("mergeSchema", "true").parquet(*files)
             # a day bucket holds exactly one day, but stay exact if a
             # caller hand-built a store with coarser buckets
-            stored = stored.filter(F.col(day_col) == day)
+            stored = _read_cell_files(spark, files).filter(
+                F.col(day_col) == day
+            )
     import datetime as _dt
 
     nxt = (
         _dt.date.fromisoformat(day) + _dt.timedelta(days=1)
     ).isoformat()
-    # both bounds as plain literals so each reaches pushFilters'
-    # footer-ts pruning (an arithmetic expression would not)
+    ts_lo, ts_hi = _day_span_utc(spark, day, day)
     tail = (
-        _tail_scan(spark, log_dir, hwm)
+        _tail_scan(spark, log_dir, hwm, ts_lo=ts_lo, ts_hi=ts_hi)
         .filter(F.col("timestamp") >= F.to_timestamp(F.lit(day)))
         .filter(F.col("timestamp") < F.to_timestamp(F.lit(nxt)))
     )
@@ -1373,10 +1443,10 @@ def serve_rollup_range(
 ) -> DataFrame:
     """Date-range serve (the dashboard date picker): manifest lookup
     of exactly the days in ``[start_day, end_day]`` on the stored side,
-    the same two-axis prune (offset ≥ HWM + the range's timestamp
-    bounds) on the tail side. Cost ∝ (days in range) + (tail segments
-    overlapping the range), independent of the days outside it.
-    ``cell_filter`` composes the key-predicate prune on top (see
+    the same driver-side two-axis prune (offset ≥ HWM + the range's
+    event-time span) on the tail side. Cost ∝ (days in range) + (tail
+    segments overlapping the range), independent of the days outside
+    it. ``cell_filter`` composes the key-predicate prune on top (see
     :func:`serve_rollup_tail`)."""
     import datetime as _dtmod
 
@@ -1391,16 +1461,15 @@ def serve_rollup_range(
             for f in fs
         ]
         if files:
-            stored = (
-                spark.read.option("mergeSchema", "true")
-                .parquet(*files)
-                .filter(F.col(day_col).between(start_day, end_day))
+            stored = _read_cell_files(spark, files).filter(
+                F.col(day_col).between(start_day, end_day)
             )
     nxt = (
         _dtmod.date.fromisoformat(end_day) + _dtmod.timedelta(days=1)
     ).isoformat()
+    ts_lo, ts_hi = _day_span_utc(spark, start_day, end_day)
     tail = (
-        _tail_scan(spark, log_dir, hwm)
+        _tail_scan(spark, log_dir, hwm, ts_lo=ts_lo, ts_hi=ts_hi)
         .filter(F.col("timestamp") >= F.to_timestamp(F.lit(start_day)))
         .filter(F.col("timestamp") < F.to_timestamp(F.lit(nxt)))
     )
@@ -1450,9 +1519,13 @@ def victim_rollup_days(
     gen, _txns, hwm = _read_pointer(store)
     if gen is None or not hwm or not keys:
         return []
-    scan = _tail_scan(spark, log_dir, {}, up_to=max(hwm.values()))
+    small = len(keys) <= _VICTIM_ISIN_MAX
+    scan = _tail_scan(
+        spark, log_dir, {}, up_to=max(hwm.values()),
+        keys={bytes(k) for k in keys} if small else None,
+    )
     scan = _per_partition_offset_filter(scan, hwm, lower=False)
-    if len(keys) <= _VICTIM_ISIN_MAX:
+    if small:
         scan = scan.filter(F.col("key").isin([bytes(k) for k in keys]))
     else:
         kdf = spark.createDataFrame(

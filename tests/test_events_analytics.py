@@ -45,6 +45,25 @@ def test_funnel_requires_order_not_just_presence(spark):
     assert got == {"view": 2, "click": 2, "purchase": 1}
 
 
+def test_funnel_step_names_with_backslash_and_quote(spark):
+    """Step names reach the output verbatim, whatever characters they
+    hold: a backslash (which a SQL string literal would treat as an
+    escape) and a quote."""
+    base = dt.datetime(2024, 1, 1)
+    steps = ("a\\b", "it's", "c\\")
+    rows = [
+        (i + 1, base + dt.timedelta(minutes=i), 1, s, 1.0, "{}")
+        for i, s in enumerate(steps)
+    ] + [(9, base, 2, steps[0], 1.0, "{}")]
+    df = spark.createDataFrame(
+        rows, "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE, props STRING"
+    )
+    got = {
+        r["step_name"]: r["n_users"] for r in ev.funnel(df, steps).collect()
+    }
+    assert got == {"a\\b": 2, "it's": 1, "c\\": 1}
+
+
 def test_funnel_window_boundary(spark):
     """A step exactly AT the window edge converts; one microsecond past
     does not — and the windowed funnel can never exceed the unwindowed

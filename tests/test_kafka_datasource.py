@@ -776,6 +776,34 @@ def test_catalog_native_avro_scan_pushdown_and_evolution(spark, sf_dir):
             assert ">= 100" not in ln and "< 300" not in ln, plan
 
 
+def test_catalog_avro_all_corrupt_segment_with_timestamp_field(spark, tmp_path):
+    """A14 on the pure-Python Avro decode: one segment whose 40
+    payloads are all corrupt scans to zero rows without an error, also
+    when the table has a TIMESTAMP field (a batch that decodes nothing
+    must not reach Arrow as untyped float64 columns)."""
+    from pyspark.sql import types as T
+
+    from presto_rakam_kafka_spark.catalog import EventCatalog
+    from presto_rakam_kafka_spark.metastore import InMemoryMetastore
+    from presto_rakam_kafka_spark.sources.kafka_datasource import write_segments
+
+    raw = spark.createDataFrame(
+        [(i, None, b"\xff\xff\xff\xff\xff", None) for i in range(40)],
+        "offset LONG, key BINARY, value BINARY, timestamp TIMESTAMP",
+    )
+    log = str(tmp_path / "corrupt_avro")
+    write_segments(raw, log, num_partitions=1, segment_rows=0)
+    assert len(os.listdir(os.path.join(log, "partition=0"))) == 1
+    ms = InMemoryMetastore()
+    catalog = EventCatalog(spark, ms)
+    ms.register_struct("t", "ev", T.StructType([
+        T.StructField("user_id", T.LongType()),
+        T.StructField("ts", T.TimestampType()),
+    ]))
+    catalog.register_kafka_segments("t", "ev", log, value_format="avro")
+    assert catalog.table("t", "ev").collect() == []
+
+
 def test_ts_pushdown_prunes_segments(spark, sf_dir, log_dir):
     """A timestamp bound must prune whole segments at PLAN time via
     footer ts stats (the `offsetsForTimes` analog), while the filter
@@ -1524,20 +1552,26 @@ def test_lookup_history_spark_equals_driver_form(spark, tmp_path):
     assert 0 < read < total_segments, (read, total_segments)
 
 
-def test_key_in_pushdown_plans_only_bloom_surviving_segments(spark, tmp_path):
+@pytest.mark.parametrize("width", [1, 4, 64])
+def test_key_in_pushdown_plans_only_bloom_surviving_segments(
+    spark, tmp_path, width
+):
     """SQL key pushdown (VERDICT r9 next-4): a `key IN (…)` conjunct
     reaches `KafkaSegmentReader.pushFilters`, routes to the keys'
     partitions on a key-routed log, probes each segment's bloom at
     PLAN time, and only bloom-surviving segments plan splits. The
     filter is also handed back (exact row check). Fallbacks: unindexed
     log → full scan; offset-routed log → all partitions, blooms still
-    prune; bloom-negative key set → empty scan, zero rows."""
+    prune; bloom-negative key set → empty scan, zero rows. Counts are
+    segments from `plan_segments`; the reader's tasks, at every pack
+    width, read exactly those segments."""
     from pyspark.sql.datasource import In
 
     from presto_rakam_kafka_spark.sources.kafka_datasource import (
         KafkaSegmentDataSource,
         KafkaSegmentReader,
         build_key_blooms,
+        plan_segments,
         write_segments,
     )
 
@@ -1557,19 +1591,26 @@ def test_key_in_pushdown_plans_only_bloom_surviving_segments(spark, tmp_path):
                    route_by_key=True)
     build_key_blooms(log)
 
-    def splits_for(filters, path):
-        r = KafkaSegmentReader({"path": path})
-        rem = list(r.pushFilters(list(filters)))
+    def plan_for(path, keys=()):
+        """(surviving segments, reader tasks) for a `key IN keys`."""
+        filters = [In(("key",), tuple(keys))] if keys else []
+        r = KafkaSegmentReader({"path": path, "packParallelism": str(width)})
+        rem = list(r.pushFilters(filters))
         # key filters are ALWAYS returned for exact row evaluation
         assert len(rem) == len(filters)
-        return r.partitions()
+        splits = r.partitions()
+        plan = plan_segments(path, keys=set(keys) or None)
+        read = sorted(f for sp in splits for f in sp.segments)
+        assert read == sorted(plan.files)
+        return plan.segments, splits
 
-    full = splits_for([], log)
-    pruned = splits_for([In(("key",), (b"7",))], log)
+    full, _ = plan_for(log)
+    pruned, pruned_splits = plan_for(log, (b"7",))
     # partition routing alone halves the plan; blooms cut further
     assert len(pruned) < len(full) / 2, (len(pruned), len(full))
     # one partition's segment dirs only
-    assert len({s.partition_id for s in pruned}) == 1
+    assert len({pid for pid, *_ in pruned}) == 1
+    assert len({s.partition_id for s in pruned_splits}) == 1
 
     # end-to-end SQL equality with the unpruned scan
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
@@ -1582,8 +1623,9 @@ def test_key_in_pushdown_plans_only_bloom_surviving_segments(spark, tmp_path):
     assert sorted(r["offset"] for r in got) == [7, 167]
 
     # bloom-negative key: planned away entirely, still zero rows
-    absent = splits_for([In(("key",), (b"zzz-absent",))], log)
-    assert len(absent) <= 1  # the single empty split
+    absent, absent_splits = plan_for(log, (b"zzz-absent",))
+    assert absent == ()
+    assert len(absent_splits) <= 1  # the single empty split
     n = spark.sql(
         "SELECT count(*) AS n FROM pushlog "
         "WHERE key = CAST('zzz-absent' AS BINARY)"
@@ -1594,26 +1636,26 @@ def test_key_in_pushdown_plans_only_bloom_surviving_segments(spark, tmp_path):
     log2 = str(tmp_path / "pushlog_offset")
     write_segments(raw, log2, num_partitions=2, segment_rows=20)
     build_key_blooms(log2)
-    full2 = splits_for([], log2)
+    full2, _ = plan_for(log2)
     # keys "6"/"7" land at offsets rnd*40+{6,7} → opposite parities →
     # both partitions hold hits; no partition may be routed away
-    pruned2 = splits_for([In(("key",), (b"6", b"7"))], log2)
-    assert len({s.partition_id for s in pruned2}) == 2
+    pruned2, pruned2_splits = plan_for(log2, (b"6", b"7"))
+    assert len({pid for pid, *_ in pruned2}) == 2
+    assert len({s.partition_id for s in pruned2_splits}) == 2
     assert len(pruned2) < len(full2), (len(pruned2), len(full2))
 
     # unindexed log: graceful full-scan fallback, same answers
     log3 = str(tmp_path / "pushlog_noidx")
     write_segments(raw, log3, num_partitions=2, segment_rows=20,
                    route_by_key=True)
-    full3 = splits_for([], log3)
+    full3, _ = plan_for(log3)
     # routing still prunes partitions (layout metadata, no index), but
     # within the routed partition every segment survives
-    pruned3 = splits_for([In(("key",), (b"7",))], log3)
-    routed_pid = {s.partition_id for s in pruned3}
+    pruned3, pruned3_splits = plan_for(log3, (b"7",))
+    routed_pid = {pid for pid, *_ in pruned3}
     assert len(routed_pid) == 1
-    per_pid_full = sum(
-        1 for s in full3 if s.partition_id in routed_pid
-    )
+    assert {s.partition_id for s in pruned3_splits} == routed_pid
+    per_pid_full = sum(1 for pid, *_ in full3 if pid in routed_pid)
     assert len(pruned3) == per_pid_full
     view3 = spark.read.format("kafka_segments").option("path", log3).load()
     view3.createOrReplaceTempView("pushlog3")
@@ -1640,6 +1682,7 @@ def test_catalog_pull_query_prunes_through_decode_projection(spark, tmp_path):
     from presto_rakam_kafka_spark.sources.kafka_datasource import (
         KafkaSegmentReader,
         build_key_blooms,
+        plan_segments,
         write_segments,
     )
 
@@ -1688,13 +1731,17 @@ def test_catalog_pull_query_prunes_through_decode_projection(spark, tmp_path):
             si = st.getStageInfo(s)
             if si:
                 task_counts.add(si.numTasks)
+    # pruning, in segments: the bloom survivors are a small share
+    n_pruned = len(plan_segments(log, keys={b"7"}).segments)
+    n_full = len(plan_segments(log).segments)
+    assert n_pruned < n_full / 3, (n_pruned, n_full)
+    # ... and the scan ran the reader's tasks for that pushed filter
     r_pruned = KafkaSegmentReader({"path": log})
     r_pruned.pushFilters([In(("key",), (b"7",))])
     expected = len(r_pruned.partitions())
     r_full = KafkaSegmentReader({"path": log})
     r_full.pushFilters([])
     full = len(r_full.partitions())
-    assert expected < full / 3
     assert expected in task_counts, (expected, task_counts)
     assert full not in task_counts, (full, task_counts)
 

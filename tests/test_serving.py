@@ -112,45 +112,43 @@ def test_serve_equals_full_scan(spark, sf_dir, tmp_path):
 
 
 def test_tail_scan_plans_only_uncovered_segments(spark, sf_dir, tmp_path):
-    """The serve-time tail scan launches exactly the splits whose
-    segments reach past the HWM — covered segments are pruned at PLAN
-    time (pushFilters), not filtered after a read."""
+    """The serve-time tail scan reads exactly the segment files that
+    reach past their partition's HWM — covered segments are pruned at
+    PLAN time by the driver-side planner, not filtered after a read —
+    and reads them with Spark's own parquet scan, not the Python
+    ``kafka_segments`` DataSource."""
+    from urllib.parse import urlparse
+
     from presto_rakam_kafka_spark.sources.kafka_datasource import (
         _enumerate_segments,
+        plan_segments,
     )
+    from presto_rakam_kafka_spark.streaming.serving import _tail_scan
 
     log = str(tmp_path / "log")
     _write_log(spark, sf_dir, log, hi=900, segment_rows=100)
     store = str(tmp_path / "store")
     maintain_rollup(spark, log, store, _cells, GROUP, _merge(), up_to=600)
+    _g, _t, hwm = _read_pointer(store)
 
     segs = _enumerate_segments(log)
     n_total = sum(len(s) for s in segs.values())
-    n_tail = sum(
-        1 for ss in segs.values() for (_f, _lo, hi, _n) in ss if hi > 600
-    )
-    assert 0 < n_tail < n_total / 2
+    tail_files = {
+        f for pid, ss in segs.items() for (f, _lo, hi, _n) in ss
+        if hi > hwm[pid]
+    }
+    assert 0 < len(tail_files) < n_total / 2
 
-    sc = spark.sparkContext
-    sc.setJobGroup("serve_tail_probe", "serve_tail_probe")
-    try:
-        serve_rollup_tail(
-            spark, log, store, _cells, GROUP, _merge(), finish_fn=_finish
-        ).collect()
-    finally:
-        sc.setJobGroup(None, None)
-    st = sc.statusTracker()
-    task_counts = set()
-    for j in st.getJobIdsForGroup("serve_tail_probe"):
-        info = st.getJobInfo(j)
-        if info is None:
-            continue
-        for s in info.stageIds:
-            si = st.getStageInfo(s)
-            if si:
-                task_counts.add(si.numTasks)
-    assert n_tail in task_counts, (n_tail, task_counts)
-    assert n_total not in task_counts, (n_total, task_counts)
+    assert plan_segments(log, lower=hwm).pruned == n_total - len(tail_files)
+    tail = _tail_scan(spark, log, hwm)
+    assert {urlparse(u).path for u in tail.inputFiles()} == tail_files
+
+    served = serve_rollup_tail(
+        spark, log, store, _cells, GROUP, _merge(), finish_fn=_finish
+    )
+    assert _got(served) == _expected(spark, sf_dir, hi=900)
+    plan = served._jdf.queryExecution().executedPlan().toString()
+    assert "BatchScan kafka_segments" not in plan, plan
 
 
 def test_incremental_maintenance_carries_untouched_days(spark, sf_dir, tmp_path):
@@ -464,7 +462,7 @@ def test_day_serve_prunes_both_axes_and_is_exact(spark, sf_dir, tmp_path):
     """serve_rollup_day reads one manifest day bucket plus a tail
     pruned on BOTH axes: segments below the HWM are out (offset) and
     tail segments whose footer ts stats miss the day are out
-    (timestamp) — asserted at the split-planning level; the result is
+    (timestamp) — asserted on planned segments; the result is
     the exact day slice whether the day is fully covered, fully in the
     tail, or straddling the cut."""
     import datetime as dt
@@ -474,6 +472,7 @@ def test_day_serve_prunes_both_axes_and_is_exact(spark, sf_dir, tmp_path):
 
     from presto_rakam_kafka_spark.sources.kafka_datasource import (
         KafkaSegmentReader,
+        plan_segments,
     )
     from presto_rakam_kafka_spark.streaming.serving import serve_rollup_day
 
@@ -511,23 +510,33 @@ def test_day_serve_prunes_both_axes_and_is_exact(spark, sf_dir, tmp_path):
         )
         assert got == day_slice(day), day
 
-    # planning-level: the day-bounded tail plans strictly fewer splits
-    # than the offset-bounded tail, which plans fewer than the full log
+    # planning-level: the day-bounded tail plans strictly fewer
+    # segments than the offset-bounded tail, which plans fewer than the
+    # full log ...
     lo = min(hwm.values())
-    r_full = KafkaSegmentReader({"path": log})
-    r_full.pushFilters([])
-    r_off = KafkaSegmentReader({"path": log})
-    r_off.pushFilters([GTE(("offset",), lo)])
-    r_day = KafkaSegmentReader({"path": log})
-    r_day.pushFilters([
-        GTE(("offset",), lo),
-        GTE(("timestamp",), dt.datetime(2024, 1, 28)),
-        LT(("timestamp",), dt.datetime(2024, 1, 29)),
-    ])
-    n_full = len(r_full.partitions())
-    n_off = len(r_off.partitions())
-    n_day = len(r_day.partitions())
+    day_lo, day_hi = dt.datetime(2024, 1, 28), dt.datetime(2024, 1, 29)
+    full = plan_segments(log)
+    off = plan_segments(log, start=lo)
+    day = plan_segments(log, start=lo, ts_lo=day_lo, ts_hi=day_hi)
+    n_full, n_off, n_day = (len(p.segments) for p in (full, off, day))
     assert n_day < n_off < n_full, (n_day, n_off, n_full)
+    # ... and the serve's own tail scan (per-partition HWM, day span)
+    # prunes at least as far as the global offset bound does
+    tail = plan_segments(log, lower=hwm, ts_lo=day_lo, ts_hi=day_hi)
+    assert set(tail.files) <= set(day.files)
+    # the DataSource reader, whatever its pack width, reads exactly the
+    # planner's segments for the same pushed filters
+    for width in (1, 4, 64):
+        for filters, plan in (
+            ([], full),
+            ([GTE(("offset",), lo)], off),
+            ([GTE(("offset",), lo), GTE(("timestamp",), day_lo),
+              LT(("timestamp",), day_hi)], day),
+        ):
+            r = KafkaSegmentReader({"path": log, "packParallelism": str(width)})
+            r.pushFilters(filters)
+            read = sorted(f for sp in r.partitions() for f in sp.segments)
+            assert read == sorted(plan.files), (width, filters)
 
 
 def test_append_during_tick_never_double_counts(spark, sf_dir, tmp_path, monkeypatch):
@@ -855,27 +864,27 @@ def test_serve_respects_user_conf_override(spark, sf_dir, tmp_path):
     """ADVICE r10 #4: the pushdown conf is enabled once per session at
     source registration — a serve is a read path and must not keep
     re-flipping it, so a user's explicit later override SURVIVES
-    subsequent serves. With the conf off, PySpark itself refuses to
-    plan a source that implements pushFilters (a loud, conf-naming
-    error) — failing loudly on an explicit override is the honest
-    behavior; silently re-enabling it per serve was the r10 bug."""
-    import pyspark.errors as pe
-
+    subsequent serves. A serve reads the log tail natively (segment
+    pruning is driver-side, no Python-source planning), so it still
+    answers exactly with the conf off; silently re-enabling it per
+    serve was the r10 bug."""
     log = str(tmp_path / "log")
     _write_log(spark, sf_dir, log, hi=100)
     store = str(tmp_path / "store")
     key = "spark.sql.python.filterPushdown.enabled"
-    # first use preps the session (conf set once)
+    # a first serve, before the override
     serve_rollup_tail(
         spark, log, store, _cells, GROUP, _merge(), finish_fn=_finish
     ).collect()
     orig = spark.conf.get(key)
     try:
         spark.conf.set(key, "false")
-        with pytest.raises(pe.AnalysisException, match="filterPushdown"):
+        got = _got(
             serve_rollup_tail(
                 spark, log, store, _cells, GROUP, _merge(), finish_fn=_finish
-            ).collect()
+            )
+        )
+        assert got == _expected(spark, sf_dir, hi=100)
         assert spark.conf.get(key) == "false"  # override survived the serve
     finally:
         spark.conf.set(key, orig)
