@@ -21,17 +21,11 @@ Shape per micro-batch:
    entire snapshot every micro-batch, the one shape that gets worse
    as the target grows (the reason Delta/Iceberg MERGE does
    file-level pruning);
-3. publish the new snapshot under ``gen-<n>/`` and atomically flip
-   the ``_CURRENT`` pointer (``os.replace``) — readers always see
-   exactly one complete generation (the `kafka_segments` compactor's
-   pointer discipline). The pointer also carries the per-writer
-   transaction record ``{app_id: last_epoch}`` (Delta's foreachBatch
-   txnAppId/txnVersion recipe): a replayed epoch from the SAME writer
-   is skipped exactly-once, while a writer restarted with a fresh
-   checkpoint (epochs restart at 0) presents a NEW app_id and is
-   applied rather than silently swallowed — the r7 epoch-only key
-   treated every post-restart batch as a replay, unbounded silent
-   data loss.
+3. publish the new snapshot as the next ``gen-<n>/`` through the
+   ``genstore`` commit protocol — readers always see exactly one
+   complete generation, and the pointer's (app_id, epoch) txn record
+   skips a replayed epoch from the SAME writer while a writer restarted
+   with a fresh checkpoint (a NEW app_id) is applied, not swallowed.
 
 100 TB: the per-batch cost is (batch shuffle on the key) + (scan +
 rewrite of touched buckets) + (metadata-only linking of the rest);
@@ -45,12 +39,15 @@ from __future__ import annotations
 
 import json
 import os
+import sys
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_POINTER = "_CURRENT"
+from presto_rakam_kafka_spark import genstore
+
 _META = "_META.json"
+_TIER = sys.modules[__name__]
 
 #: bounded queue wait on the store's whole-op guard — a hung-holder
 #: detector (a crashed holder releases via the kernel instantly; ops
@@ -73,110 +70,28 @@ def _read_meta(path: str) -> dict:
         return json.load(fh)
 
 
-def _read_pointer(path: str) -> tuple[str, dict[str, int]]:
+def _read_pointer(path: str) -> tuple[str | None, dict[str, int]]:
     """(current generation, {app_id: last committed epoch})."""
-    with open(os.path.join(path, _POINTER)) as fh:
-        lines = fh.read().strip().splitlines()
-    txns = json.loads(lines[1])["txns"] if len(lines) > 1 else {}
-    return lines[0], {str(k): int(v) for k, v in txns.items()}
+    return genstore.read_pointer(path)[:2]
 
 
 def _fenced_flip(
     path: str, gen_read: str, gen: str, txns: dict[str, int]
 ) -> None:
-    """Flip the snapshot pointer iff the generation hasn't moved since
-    this writer read it — the serving-store commit discipline
-    (``streaming/serving.py:_fenced_flip``) applied to the CDC tier
-    (round 12). The snapshot's contract is ONE owning writer (the
-    foreachBatch of one streaming query — Delta's txnAppId recipe is
-    also per-writer), but a misconfigured second maintainer or a
-    zombie resumed from an old checkpoint must get a loud
-    ``FencedMaintenanceError``, not silently last-writer-win the
-    pointer and unlink the other's commit at the next GC. The
-    check-then-flip pair is serialized by the shared
-    ``locks.flock_guard`` (crash-released; degrades to fence-only on
-    filesystems without flock semantics, same as serving). Whole
-    merges additionally queue on ``.MAINT_GUARD`` (see
-    :func:`merge_into_snapshot`) — this inner lock covers flips from
-    paths outside that guard."""
-    from presto_rakam_kafka_spark.locks import flock_guard
-    from presto_rakam_kafka_spark.streaming.serving import (
-        FencedMaintenanceError,
-    )
-
-    with flock_guard(os.path.join(path, ".FLIP_LOCK")):
-        cur, _t = _read_pointer(path)
-        if cur != gen_read:
-            raise FencedMaintenanceError(
-                f"snapshot generation moved {gen_read!r} → {cur!r} during "
-                f"this merge; refusing stale commit {gen!r} (a second "
-                f"writer owns this snapshot — run one maintainer per "
-                f"store); the unreferenced generation dir is left for GC"
-            )
-        _flip_pointer(path, gen, txns)
-
-
-def _flip_pointer(path: str, gen: str, txns: dict[str, int]) -> None:
-    """Atomic two-line pointer: line 1 the committed generation (what
-    readers resolve), line 2 the writer transaction record — one file,
-    one ``os.replace``, so generation and txn state can never be seen
-    half-updated."""
-    tmp = os.path.join(path, f".{_POINTER}.tmp")
-    with open(tmp, "w") as fh:
-        fh.write(gen + "\n" + json.dumps({"txns": txns}, sort_keys=True))
-    os.replace(tmp, os.path.join(path, _POINTER))
-
-
-_MANIFEST = "_MANIFEST.json"
-
-
-def _write_manifest(gdir: str, buckets: dict[int, list[str]],
-                    extra: list[str]) -> None:
-    """Atomic per-generation file manifest (the object-store-safe
-    carry-forward): ``buckets`` maps bucket → data-file paths RELATIVE
-    TO THE STORE ROOT, and an entry may point into a PRIOR generation's
-    directory — Delta/Iceberg's trick: an untouched bucket is carried
-    by REFERENCE, no hard link, no copy, nothing a blob store can't
-    do. ``extra`` carries the zero-row schema file when every bucket
-    is empty."""
-    tmp = os.path.join(gdir, f".{_MANIFEST}.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(
-            {"buckets": {str(k): sorted(v) for k, v in buckets.items()},
-             "extra": sorted(extra)},
-            fh, sort_keys=True,
-        )
-    os.replace(tmp, os.path.join(gdir, _MANIFEST))
+    genstore.fenced_flip(path, gen_read, gen, txns, {}, _TIER)
 
 
 def _read_manifest(path: str, gen: str) -> dict:
-    mpath = os.path.join(path, gen, _MANIFEST)
-    if not os.path.exists(mpath):
-        raise FileNotFoundError(
-            f"generation {gen!r} has no manifest under {path} "
-            "(expired by gc_snapshots or written before manifest mode)"
-        )
-    with open(mpath) as fh:
-        return json.load(fh)
+    """``{"buckets": {bucket: files}, "extra": files}`` — store-relative
+    files, an untouched bucket's pointing into a PRIOR generation
+    (carried by reference: no link, no copy, nothing a blob store can't
+    do); ``extra`` is the zero-row schema file when every bucket is
+    empty."""
+    return genstore.read_manifest(path, gen)
 
 
 def _manifest_files(path: str, man: dict) -> list[str]:
-    rels = [f for fs in man["buckets"].values() for f in fs]
-    rels += man.get("extra", [])
-    return [os.path.join(path, r) for r in rels]
-
-
-def _list_bucket_files(path: str, gen: str, bucket: int) -> list[str]:
-    """Store-root-relative data files of one bucket dir in one
-    generation (the freshly-written side of a manifest entry)."""
-    bdir = os.path.join(path, gen, f"_shard={bucket}")
-    if not os.path.isdir(bdir):
-        return []
-    return [
-        os.path.join(gen, f"_shard={bucket}", f)
-        for f in sorted(os.listdir(bdir))
-        if f.endswith(".parquet")
-    ]
+    return [os.path.join(path, r) for r in genstore.manifest_files(man)]
 
 
 def read_snapshot(spark, path: str, generation: str | None = None) -> DataFrame:
@@ -209,10 +124,11 @@ def init_snapshot(
     num_buckets: int = 16,
     carry: str = "link",
 ) -> None:
-    """Write the base table as ``gen-0000000000`` and point ``_CURRENT``
-    at it. With ``key_col`` the store is BUCKET-SHARDED: every
-    generation is partitioned by ``_shard = md5-bucket(key)`` so
-    incremental merges rewrite only touched buckets (see module doc).
+    """Write the base table as the store's first generation
+    (``gen-0000000000``) and commit it. With ``key_col`` the store is
+    BUCKET-SHARDED: every generation is partitioned by ``_shard =
+    md5-bucket(key)`` so incremental merges rewrite only touched
+    buckets (see module doc).
     ``key_col=None`` keeps the unsharded legacy layout (every merge
     rewrites the whole snapshot — fixture-scale only).
 
@@ -226,49 +142,43 @@ def init_snapshot(
         raise ValueError(f"carry must be 'link' or 'manifest', got {carry!r}")
     if carry == "manifest" and key_col is None:
         raise ValueError("carry='manifest' requires a sharded store (key_col)")
-    gen = "gen-0000000000"
     nb = num_buckets if key_col is not None else 0
-    tmp_meta = os.path.join(path, f".{_META}.tmp")
     os.makedirs(path, exist_ok=True)
-    with open(tmp_meta, "w") as fh:
-        json.dump({"num_buckets": nb, "key_col": key_col, "carry": carry}, fh)
-    os.replace(tmp_meta, os.path.join(path, _META))
-    gdir = os.path.join(path, gen)
-    if nb:
-        _write_generation(
-            base.withColumn("_shard", _shard_col(key_col, nb)), gdir
-        )
-    else:
-        base.write.mode("overwrite").parquet(gdir)
-    if carry == "manifest":
-        buckets = {
-            b: fs for b in range(nb)
-            if (fs := _list_bucket_files(path, gen, b))
-        }
-        extra = (
-            []
-            if buckets
-            else [os.path.join(gen, f) for f in sorted(os.listdir(gdir))
-                  if f.endswith(".parquet")]
-        )
-        _write_manifest(gdir, buckets, extra)
-    _flip_pointer(path, gen, {})
+    genstore.write_json(
+        os.path.join(path, _META),
+        {"num_buckets": nb, "key_col": key_col, "carry": carry},
+    )
+    with genstore.Generation(path, _read_pointer(path)[0], _TIER) as g:
+        man = None
+        if nb:
+            base = base.withColumn("_shard", _shard_col(key_col, nb))
+            base.write.mode("overwrite").partitionBy("_shard").parquet(g.dir)
+            man = _bucket_manifest(g, base, nb)
+        else:
+            base.write.mode("overwrite").parquet(g.dir)
+        g.commit({}, manifest=man if carry == "manifest" else None)
 
 
-def _write_generation(merged: DataFrame, gdir: str) -> None:
-    """Write one sharded generation. A ZERO-ROW partitioned write leaves
-    no parquet file at all (no schema to read back — an empty CDC base
-    via ``limit(0)`` hits this); fall back to an unpartitioned zero-row
-    file so every generation is readable, with ``_shard`` as a plain
-    column the pruning filter still accepts."""
-    merged.write.mode("overwrite").partitionBy("_shard").parquet(gdir)
-    has_data = any(e.startswith("_shard=") for e in os.listdir(gdir))
-    if not has_data:
-        merged.write.mode("overwrite").parquet(gdir)
-
-
-def _next_gen(current: str) -> str:
-    return f"gen-{int(current.rsplit('-', 1)[1]) + 1:010d}"
+def _bucket_manifest(
+    g: genstore.Generation, df: DataFrame, nb: int,
+    carried: dict[str, list[str]] | None = None,
+) -> dict:
+    """The manifest of sharded generation ``g``, whose ``_shard=``
+    buckets are written (or linked): each bucket's files in ``g``, else
+    its ``carried`` entry (files of a prior generation, by reference).
+    A generation with no bucket file at all — a zero-row partitioned
+    write (an empty base via ``limit(0)``) or every key deleted — gets
+    ``df``'s zero-row schema as one unpartitioned file, so every
+    generation stays readable (``_shard`` a plain column the pruning
+    filter still accepts)."""
+    carried = carried or {}
+    buckets = {
+        str(b): fs for b in range(nb)
+        if (fs := g.files(f"_shard={b}") or carried.get(str(b)))
+    }
+    if not buckets:
+        df.write.mode("overwrite").parquet(g.dir)
+    return {"buckets": buckets, "extra": g.files()}
 
 
 def merge_into_snapshot(
@@ -278,18 +188,13 @@ def merge_into_snapshot(
     delete_col: str | None = None,
     txn: tuple[str, int] | None = None,
 ) -> tuple[str, list[int]]:
-    """Public entry: the whole merge runs under the store's flock guard
-    (round-12 second review): generation names are a deterministic
-    store-level sequence and the generation DATA is written before the
-    flip, so two writers that read the same base both target the same
-    ``gen-N+1`` dir — the later ``mode=overwrite`` write clobbers the
-    earlier one's data and the earlier writer's fence then passes over
-    the clobbered files (only the LOSER got the error). Queued on the
-    guard, the second writer's pointer read sees the first's commit and
-    its stale base is refused by the fence as intended. flock doesn't
-    span object stores; there the documented single-owning-writer
-    contract is the guarantee. The queue wait is BOUNDED (round 13,
-    VERDICT r12 #1): a holder that neither finishes nor crashes raises
+    """Public entry: the whole merge runs under the store's flock guard,
+    so two writers QUEUE — the second's pointer read sees the first's
+    commit and both land — instead of both basing on one generation and
+    the later commit being fenced. flock doesn't span object stores;
+    there the fence refuses the loser and the documented
+    single-owning-writer contract is the guarantee. The queue wait is
+    BOUNDED: a holder that neither finishes nor crashes raises
     :class:`~presto_rakam_kafka_spark.locks.FlockTimeoutError` naming
     the holder after ``_MAINT_GUARD_TIMEOUT_S`` instead of blocking
     every later merge forever behind a wedged process."""
@@ -299,9 +204,9 @@ def merge_into_snapshot(
         os.path.join(path, ".MAINT_GUARD"),
         timeout_s=_MAINT_GUARD_TIMEOUT_S,
         op_name="merge_into_snapshot",
-    ):
+    ) as held:
         return _merge_into_snapshot_locked(
-            updates, path, key_col, delete_col, txn
+            updates, path, key_col, delete_col, txn, held
         )
 
 
@@ -311,6 +216,7 @@ def _merge_into_snapshot_locked(
     key_col: str,
     delete_col: str | None = None,
     txn: tuple[str, int] | None = None,
+    held: bool = True,
 ) -> tuple[str, list[int]]:
     """One bucket-pruned MERGE INTO the snapshot store (the batch entry;
     :func:`cdc_batch_fn` wraps it with latest-per-key + the epoch/txn
@@ -319,12 +225,12 @@ def _merge_into_snapshot_locked(
     Steps: bucket the updates, collect the touched-bucket set (bounded
     by num_buckets), full-outer-MERGE against a partition-pruned scan
     of just those buckets, write ONLY them into the next generation,
-    hard-link every untouched bucket's files across (metadata-only —
-    and GC of the old generation later just unlinks, the shared file
-    survives), then flip the pointer ONCE, recording ``txn``
-    (app_id, epoch) in the same atomic replace when given — generation
-    and idempotence state can never diverge. Returns
-    (generation, touched).
+    carry every untouched bucket across — hard links in link mode
+    (metadata-only; GC of the old generation later just unlinks, the
+    shared file survives), manifest references in manifest mode — then
+    commit ONCE, recording ``txn`` (app_id, epoch) in the same pointer
+    replace when given: generation and idempotence state can never
+    diverge. Returns (generation, touched).
 
     On an UNSHARDED legacy store this degrades to the whole-snapshot
     merge with the same publication."""
@@ -333,121 +239,76 @@ def _merge_into_snapshot_locked(
     spark = updates.sparkSession
     meta = _read_meta(path)
     nb = int(meta["num_buckets"])
+    by_ref = meta.get("carry") == "manifest"
     current, txns = _read_pointer(path)
-    if txn is not None:
-        # never move a writer's committed high-water mark BACKWARDS: a
-        # direct caller passing a stale epoch must not re-open the
-        # window for replaying in-between epochs (ADVICE r8)
-        txns = dict(txns)
-        txns[txn[0]] = max(int(txn[1]), txns.get(txn[0], -1))
-    gen = _next_gen(current)
     cur_dir = os.path.join(path, current)
-    gdir = os.path.join(path, gen)
+    with genstore.Generation(path, current, _TIER, reclaim=held) as g:
+        if not nb:
+            merge_upsert(
+                spark.read.parquet(cur_dir), updates, key_col,
+                delete_col=delete_col,
+            ).write.mode("overwrite").parquet(g.dir)
+            g.commit(txns, txn)
+            return g.name, []
 
-    if not nb:
-        merged = merge_upsert(
-            spark.read.parquet(cur_dir), updates, key_col, delete_col=delete_col
+        # persist the bucketed updates: the touched-set collect and the
+        # MERGE both consume them, and without the cache the upstream
+        # latest-per-key aggregate would run twice (the ranks.py r7
+        # fill-on-fit lesson — measured 2× on the 5M-change receipt)
+        upd = updates.withColumn("_shard", _shard_col(key_col, nb)).persist()
+        touched = sorted(
+            int(r["_shard"])
+            for r in upd.select("_shard").distinct().collect()
         )
-        merged.write.mode("overwrite").parquet(gdir)
-        _fenced_flip(path, current, gen, txns)
-        return gen, []
-
-    # persist the bucketed updates: the touched-set collect and the
-    # MERGE both consume them, and without the cache the upstream
-    # latest-per-key aggregate would run twice (the ranks.py r7
-    # fill-on-fit lesson — measured 2× on the 5M-change receipt)
-    upd = updates.withColumn("_shard", _shard_col(key_col, nb)).persist()
-    touched = sorted(
-        int(r["_shard"]) for r in upd.select("_shard").distinct().collect()
-    )
-
-    if meta.get("carry") == "manifest":
-        # object-store-safe path: the pruned target scan reads the
-        # touched buckets' files straight from the CURRENT manifest
-        # (which may point into older generations), the MERGE writes
-        # only those buckets into the new generation, and every
-        # untouched bucket is carried BY REFERENCE — the new manifest
-        # copies its entry verbatim. No link, no copy, no rewrite.
-        man = _read_manifest(path, current)
-        prev_buckets: dict[str, list[str]] = man["buckets"]
-        touched_rel = [
-            f for b in touched for f in prev_buckets.get(str(b), [])
-        ]
-        if touched_rel:
+        if by_ref:
+            # object-store-safe path: the pruned target scan reads the
+            # touched buckets' files straight from the CURRENT manifest
+            # (which may point into older generations); every untouched
+            # bucket's entry is copied verbatim into the new manifest.
+            prev = _read_manifest(path, current)["buckets"]
+            touched_rel = [f for b in touched for f in prev.get(str(b), [])]
             # direct-file reads lose the _shard partition column;
             # recompute it from the key (same md5 bucket by definition)
-            target = spark.read.parquet(
-                *[os.path.join(path, r) for r in touched_rel]
-            ).withColumn("_shard", _shard_col(key_col, nb))
+            target = (
+                spark.read.parquet(
+                    *[os.path.join(path, r) for r in touched_rel]
+                ).withColumn("_shard", _shard_col(key_col, nb))
+                if touched_rel
+                else upd.limit(0)
+            )
         else:
-            target = upd.limit(0)
+            target = spark.read.parquet(cur_dir)
+            if len(touched) < nb:
+                target = target.filter(F.col("_shard").isin(touched))
         merged = merge_upsert(target, upd, key_col, delete_col=delete_col)
+        # repartition on the bucket first: ONE file per touched bucket per
+        # generation (instead of shuffle-partitions × buckets), so the
+        # hard-link inventory and the per-bucket scan stay O(buckets)
         (
             merged.repartition(max(len(touched), 1), "_shard")
             .write.mode("overwrite")
             .partitionBy("_shard")
-            .parquet(gdir)
+            .parquet(g.dir)
         )
-        buckets: dict[int, list[str]] = {}
-        touched_set = set(touched)
-        for b in range(nb):
-            if b in touched_set:
-                fs = _list_bucket_files(path, gen, b)
-                if fs:
-                    buckets[b] = fs
-            elif str(b) in prev_buckets:
-                buckets[b] = prev_buckets[str(b)]
-        extra: list[str] = []
-        if not buckets:
-            # every key deleted: keep a zero-row schema file readable
-            merged.write.mode("overwrite").parquet(gdir)
-            extra = [
-                os.path.join(gen, f) for f in sorted(os.listdir(gdir))
-                if f.endswith(".parquet")
-            ]
-        _write_manifest(gdir, buckets, extra)
+        carried = {}
+        if by_ref:
+            carried = {
+                b: fs for b, fs in prev.items() if int(b) not in touched
+            }
+        else:
+            for b in set(range(nb)) - set(touched):
+                src = os.path.join(cur_dir, f"_shard={b}")
+                if not os.path.isdir(src):
+                    continue  # bucket empty in the current generation
+                dst = os.path.join(g.dir, f"_shard={b}")
+                os.makedirs(dst)
+                for f in os.listdir(src):
+                    if f.endswith(".parquet"):
+                        os.link(os.path.join(src, f), os.path.join(dst, f))
+        man = _bucket_manifest(g, merged, nb, carried)
         upd.unpersist()
-        _fenced_flip(path, current, gen, txns)
-        return gen, touched
-
-    target = spark.read.parquet(cur_dir)
-    pruned = (
-        target
-        if len(touched) == nb
-        else target.filter(F.col("_shard").isin(touched))
-    )
-    merged = merge_upsert(pruned, upd, key_col, delete_col=delete_col)
-    # overwrite clears any orphan generation left by a crash before the
-    # flip (including previously linked buckets), then linking restores
-    # the untouched set — a replay converges to the same layout.
-    # repartition on the bucket first: ONE file per touched bucket per
-    # generation (instead of shuffle-partitions × buckets), so the
-    # hard-link inventory and the per-bucket scan stay O(buckets)
-    (
-        merged.repartition(max(len(touched), 1), "_shard")
-        .write.mode("overwrite")
-        .partitionBy("_shard")
-        .parquet(gdir)
-    )
-    touched_set = set(touched)
-    for b in range(nb):
-        if b in touched_set:
-            continue
-        src = os.path.join(cur_dir, f"_shard={b}")
-        if not os.path.isdir(src):
-            continue  # bucket empty in the current generation
-        dst = os.path.join(gdir, f"_shard={b}")
-        os.makedirs(dst, exist_ok=True)
-        for f in os.listdir(src):
-            if f.endswith(".parquet"):
-                os.link(os.path.join(src, f), os.path.join(dst, f))
-    if not any(e.startswith("_shard=") for e in os.listdir(gdir)):
-        # every key deleted and nothing to link: the zero-row
-        # partitioned write left no readable file (see _write_generation)
-        merged.write.mode("overwrite").parquet(gdir)
-    upd.unpersist()
-    _fenced_flip(path, current, gen, txns)
-    return gen, touched
+        g.commit(txns, txn, manifest=man if by_ref else None)
+    return g.name, touched
 
 
 def cdc_batch_fn(
@@ -523,87 +384,15 @@ def gc_snapshots(
     path: str, keep_last: int = 2, min_age_s: float | None = None
 ) -> list[str]:
     """Retire superseded snapshot generations, keeping the committed one
-    plus ``keep_last − 1`` predecessors (time-travel window). Never
-    touches the pointed generation or anything NEWER than it (a newer
-    orphan is an in-flight epoch about to commit). Round 13 (VERDICT
-    r12 #2b): victims additionally survive for ``min_age_s`` (default
-    `serving.GC_GRACE_S`) after a GC pass first observes them
-    superseded — a slow reader that resolved the pointer before several
-    merges keeps its snapshot inside the window instead of failing
-    mid-scan; ``min_age_s=0.0`` is the explicit force-override (the
-    Delta vacuum retention escape hatch). Sharded stores GC safely:
-    untouched buckets are hard links, so removing an old generation
-    unlinks its names while every file still referenced by a newer
-    generation survives. Returns the removed generation names."""
-    import shutil
-
-    from presto_rakam_kafka_spark.streaming.serving import (
-        GC_GRACE_S,
-        _retirement_age_s,
-    )
-
-    eff = GC_GRACE_S if min_age_s is None else float(min_age_s)
-    current, _ = _read_pointer(path)
-    meta = _read_meta(path)
-    gens = sorted(
-        e for e in os.listdir(path)
-        if e.startswith("gen-") and os.path.isdir(os.path.join(path, e))
-    )
-    older = [g for g in gens if g < current]
-    keep = max(0, keep_last - 1)
-    victims = older[: len(older) - keep] if keep else older
-    # a retained generation must carry no stale marker: a prior call
-    # with a smaller keep_last may have observed it as a victim, and
-    # that old clock would zero its grace when it is next vacated
-    from presto_rakam_kafka_spark.gc_utils import clear_retirement_marker
-
-    for g in gens:
-        if g not in victims:
-            clear_retirement_marker(os.path.join(path, g))
-    if eff > 0:
-        aged = []
-        for g in victims:
-            age = _retirement_age_s(os.path.join(path, g))
-            if age is not None and age >= eff:
-                aged.append(g)
-        victims = aged
-    if meta.get("carry") != "manifest":
-        for g in victims:
-            shutil.rmtree(os.path.join(path, g), ignore_errors=True)
-        return victims
-
-    # manifest mode: REFCOUNT — a victim's data file survives iff some
-    # retained generation's manifest still references it (the
-    # Delta/Iceberg vacuum shape: manifests are the ownership record,
-    # not directory containment). The victim's own manifest is always
-    # removed, so time travel to it fails loudly even when its files
-    # live on as references.
-    # Refcount on STORE-RELATIVE normalized paths, never joined absolute
-    # strings: manifests record relative paths while victims come from
-    # os.walk, and a non-normalized store path (trailing slash,
-    # 'dir/../dir', symlinked prefix) would make absolute strings
-    # disagree and delete a still-referenced data file (ADVICE r9).
-    store_root = os.path.realpath(path)
-    retained = [g for g in gens if g not in victims]
-    referenced: set[str] = set()
-    for g in retained:
-        mpath = os.path.join(store_root, g, _MANIFEST)
-        if os.path.exists(mpath):
-            with open(mpath) as fh:
-                man = json.load(fh)
-            rels = [f for fs in man["buckets"].values() for f in fs]
-            rels += man.get("extra", [])
-            referenced.update(os.path.normpath(r) for r in rels)
-    for g in victims:
-        gdir = os.path.join(store_root, g)
-        for root, _dirs, files in os.walk(gdir, topdown=False):
-            for f in files:
-                fp = os.path.join(root, f)
-                if os.path.relpath(fp, store_root) not in referenced:
-                    os.remove(fp)
-            if not os.listdir(root):
-                os.rmdir(root)
-    return victims
+    plus ``keep_last − 1`` predecessors (time-travel window) — the
+    ``genstore.gc`` retirement: never the pointed generation or anything
+    NEWER (an in-flight epoch about to commit); each victim survives
+    ``min_age_s`` (default ``gc_utils.GC_GRACE_S``; 0.0 forces, the Delta
+    vacuum escape hatch) after a pass first observes it superseded; and
+    a victim's files survive while a retained manifest references them
+    (manifest mode), or as the hard links a newer generation shares
+    (link mode). Returns the removed generation names."""
+    return genstore.gc(path, keep_last=keep_last, grace_s=min_age_s)
 
 
 def rebase_snapshot(spark, path: str) -> tuple[str, int]:
@@ -634,39 +423,29 @@ def rebase_snapshot(spark, path: str) -> tuple[str, int]:
         os.path.join(path, ".MAINT_GUARD"),
         timeout_s=_MAINT_GUARD_TIMEOUT_S,
         op_name="rebase_snapshot",
-    ):
-        return _rebase_locked(spark, path, nb, key_col)
+    ) as held:
+        return _rebase_locked(spark, path, nb, key_col, held)
 
 
-def _rebase_locked(spark, path: str, nb: int, key_col: str) -> tuple[str, int]:
+def _rebase_locked(
+    spark, path: str, nb: int, key_col: str, held: bool
+) -> tuple[str, int]:
     current, txns = _read_pointer(path)
-    gen = _next_gen(current)
-    gdir = os.path.join(path, gen)
-    files = _manifest_files(path, _read_manifest(path, current))
-    snap = spark.read.parquet(*files)
-    if "_shard" not in snap.columns:
-        snap = snap.withColumn("_shard", _shard_col(key_col, nb))
-    (
-        snap.repartition(max(nb, 1), "_shard")
-        .write.mode("overwrite")
-        .partitionBy("_shard")
-        .parquet(gdir)
-    )
-    buckets = {}
-    for b in range(nb):
-        fs = _list_bucket_files(path, gen, b)
-        if fs:
-            buckets[b] = fs
-    extra: list[str] = []
-    if not buckets:
-        snap.limit(0).write.mode("overwrite").parquet(gdir)
-        extra = [
-            os.path.join(gen, f) for f in sorted(os.listdir(gdir))
-            if f.endswith(".parquet")
-        ]
-    _write_manifest(gdir, buckets, extra)
-    _fenced_flip(path, current, gen, txns)
-    return gen, len(buckets)
+    with genstore.Generation(path, current, _TIER, reclaim=held) as g:
+        snap = spark.read.parquet(
+            *_manifest_files(path, _read_manifest(path, current))
+        )
+        if "_shard" not in snap.columns:
+            snap = snap.withColumn("_shard", _shard_col(key_col, nb))
+        (
+            snap.repartition(max(nb, 1), "_shard")
+            .write.mode("overwrite")
+            .partitionBy("_shard")
+            .parquet(g.dir)
+        )
+        man = _bucket_manifest(g, snap, nb)
+        g.commit(txns, manifest=man)
+    return g.name, len(man["buckets"])
 
 
 def lookup_snapshot(spark, path: str, keys: list) -> DataFrame:

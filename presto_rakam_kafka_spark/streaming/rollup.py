@@ -24,14 +24,11 @@ module gives window-bounded finishes a fold whose state is bounded by
   The emitted ∪ live-tail union equals the unbounded finish
   row-for-row for every event inside the slack.
 
-Both folds follow the repo's exactly-once discipline: each trigger
-writes a fresh state generation (named by a STORE-level sequence, the
-serving.py rule — epoch-named gens collide when a later maintainer's
-epoch ids restart) and commits it with an atomic ``_CURRENT`` pointer
-flip carrying the (app_id, epoch) txn record — a replayed epoch within
-one checkpoint lineage is a no-op (pointer unchanged), and a fresh
-checkpoint presents a fresh app_id (the r8 lesson: epoch-only keys
-swallow new streams as replays).
+Both folds are exactly-once through the ``genstore`` commit protocol:
+each trigger publishes one state generation with the (app_id, epoch)
+txn record, so a replayed epoch within one checkpoint lineage is a
+no-op (pointer unchanged) and a fresh checkpoint presents a fresh
+app_id. The pointer's payload is ``emitted_thru``.
 
 Which rollups need this: window-bounded finishes (trailing-N-day
 audiences, rolling distincts). Lifetime-bounded rollups — retention
@@ -48,16 +45,16 @@ all) — this bounds the beyond-reference streaming tier.
 from __future__ import annotations
 
 import datetime as _dt
-import json
 import os
-import shutil
+import sys
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from presto_rakam_kafka_spark import genstore
 from presto_rakam_kafka_spark.fixtures import staging_mkdtemp
 
-_CURRENT = "_CURRENT"
+_TIER = sys.modules[__name__]
 
 #: bounded queue wait on the state store's whole-op guard — a
 #: hung-holder detector (crashed holders release via the kernel; folds
@@ -69,108 +66,23 @@ _MAINT_GUARD_TIMEOUT_S = 600.0
 def _read_pointer(path: str) -> tuple[str | None, dict, str | None]:
     """(current_gen, txns, emitted_thru) — all None/empty on a fresh
     store."""
-    p = os.path.join(path, _CURRENT)
-    if not os.path.exists(p):
-        return None, {}, None
-    with open(p) as fh:
-        d = json.load(fh)
-    return d.get("gen"), d.get("txns", {}), d.get("emitted_thru")
+    gen, txns, payload = genstore.read_pointer(path)
+    return gen, txns, payload.get("emitted_thru")
 
 
 def _flip_pointer(
     path: str, gen: str, txns: dict, emitted_thru: str | None = None
 ) -> None:
-    tmp = os.path.join(path, f".{_CURRENT}.tmp")
-    with open(tmp, "w") as fh:
-        json.dump({"gen": gen, "txns": txns, "emitted_thru": emitted_thru}, fh)
-    os.replace(tmp, os.path.join(path, _CURRENT))
+    genstore.write_pointer(path, gen, txns, {"emitted_thru": emitted_thru})
 
 
 def _fenced_flip(
     path: str, gen_read: str | None, gen: str, txns: dict,
     emitted_thru: str | None = None,
-    renames: list[tuple[str, str]] | None = None,
-    lock_held: bool = True,
 ) -> None:
-    """Flip the state pointer iff the generation hasn't moved since
-    this fold read it — the serving/CDC commit fence applied to the
-    rollup state store (ADVICE r12 #2): the folds queue on the store's
-    ``.MAINT_GUARD`` flock, but on a filesystem without flock semantics
-    the guard is a no-op and two maintainers that read the same base
-    would derive the SAME next-gen name. The fence alone was not
-    enough (round-13 second review): the loser's ``mode('overwrite')``
-    generation write clobbered the winner's committed data BEFORE its
-    fence raised. Folds therefore write into uniquely-named temp dirs
-    and pass ``renames=[(wdir, final_name)]`` — the renames happen
-    HERE, after the fence passes, so a loser never mutates a path the
-    winner published. An existing final dir is crash residue (renamed
-    but never flipped — the fence just proved the pointer is below it)
-    and is reclaimed under the held guard; on a flock-less filesystem
-    it may be a concurrent racer's just-renamed data, so refuse
-    loudly."""
-    from presto_rakam_kafka_spark.streaming.serving import (
-        FencedMaintenanceError,
+    genstore.fenced_flip(
+        path, gen_read, gen, txns, {"emitted_thru": emitted_thru}, _TIER
     )
-
-    if _before_flip_hook is not None:
-        _before_flip_hook()
-    cur, _t, _e = _read_pointer(path)
-    if cur != gen_read:
-        raise FencedMaintenanceError(
-            f"rollup state generation moved {gen_read!r} → {cur!r} during "
-            f"this fold; refusing stale commit {gen!r} (a second maintainer "
-            f"committed first — this store's flock guard does not span "
-            f"this filesystem); the unreferenced temp dirs are left for "
-            f"the aged-residue reclaim"
-        )
-    for wdir, final in (renames or []):
-        fdir = os.path.join(path, final)
-        if os.path.isdir(fdir):
-            if not lock_held:
-                raise FencedMaintenanceError(
-                    f"state dir {fdir} already exists and this filesystem "
-                    f"has no flock semantics — cannot tell crash residue "
-                    f"from a concurrent maintainer's just-renamed commit; "
-                    f"remove it manually if the other maintainer is known "
-                    f"dead"
-                )
-            shutil.rmtree(fdir)
-        os.rename(wdir, fdir)
-    _flip_pointer(path, gen, txns, emitted_thru)
-
-
-def _fresh_state_dir(store: str, final_name: str) -> str:
-    """A uniquely-named temp dir for one generation's data, renamed to
-    ``final_name`` by :func:`_fenced_flip` after the fence passes. The
-    ``w-`` prefix keeps it invisible to every reader (pointer
-    resolution, ``_gc_gens``, ``_emitted_parts`` all match ``gen``
-    prefixes)."""
-    wdir = os.path.join(store, f"w-{final_name}-{os.urandom(4).hex()}")
-    os.makedirs(os.path.dirname(wdir), exist_ok=True)
-    return wdir
-
-
-def _reclaim_aged_tempdirs(store: str, lock_held: bool) -> None:
-    """Remove crashed folds' leaked ``w-*`` temp dirs — only under a
-    held guard, and only when quiet past the shared GC grace (a fresh
-    temp dir on a false-flock mount may be a LIVE remote fold's
-    in-progress write — the segment log's reclaim discipline)."""
-    from presto_rakam_kafka_spark.gc_utils import (
-        GC_GRACE_S,
-        newest_content_age_s,
-    )
-
-    if not lock_held:
-        return
-    for root in (store, os.path.join(store, "emitted")):
-        if not os.path.isdir(root):
-            continue
-        for e in os.listdir(root):
-            if not e.startswith("w-"):
-                continue
-            age = newest_content_age_s(os.path.join(root, e))
-            if age is not None and age > GC_GRACE_S:
-                shutil.rmtree(os.path.join(root, e), ignore_errors=True)
 
 
 #: test-injection point: called right before a fold commit's fence
@@ -179,29 +91,40 @@ def _reclaim_aged_tempdirs(store: str, lock_held: bool) -> None:
 _before_flip_hook = None
 
 
-def _gc_gens(path: str, keep: str, grace_s: float | None = None) -> None:
-    """Drop superseded state generations (anything newer than ``keep``
-    is an in-flight epoch about to commit), retaining each one for the
-    serving tier's time grace after it is first observed superseded
-    (round 13, VERDICT r12 #2b): a reader that resolved the pointer
-    just before a trigger's commit — `live_state_size`, a monitoring
-    scan — keeps its snapshot across any number of triggers inside the
-    window. State is live-window-bounded, so the lingering dirs are
-    small."""
-    from presto_rakam_kafka_spark.streaming.serving import (
-        GC_GRACE_S,
-        _retirement_age_s,
-    )
+def _drain(stream_df: DataFrame, store: str, name: str, app_id: str,
+           op_name: str, fold) -> tuple[str | None, dict, str | None]:
+    """Drain ``stream_df`` (AvailableNow) through
+    ``fold(batch_df, epoch_id, gen, txns, emitted_thru, held)`` and
+    return the final pointer. Each fold runs under the store's
+    ``.MAINT_GUARD`` flock — two maintainers would derive the same next
+    generation from one pointer read; guarded, they queue and the second
+    reads the first's commit — and a replayed epoch never reaches it.
+    A caller-supplied ``store`` need not exist yet: the guard's O_CREAT
+    open needs the dir."""
+    from presto_rakam_kafka_spark.locks import flock_guard
 
-    eff = GC_GRACE_S if grace_s is None else float(grace_s)
-    for e in sorted(os.listdir(path)):
-        if not (e.startswith("gen-") and e < keep):
-            continue
-        if eff > 0:
-            age = _retirement_age_s(os.path.join(path, e))
-            if age is None or age < eff:
-                continue
-        shutil.rmtree(os.path.join(path, e), ignore_errors=True)
+    os.makedirs(store, exist_ok=True)
+
+    def on_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        with flock_guard(
+            os.path.join(store, ".MAINT_GUARD"),
+            timeout_s=_MAINT_GUARD_TIMEOUT_S,
+            op_name=op_name,
+        ) as held:
+            cur, txns, emitted_thru = _read_pointer(store)
+            if txns.get(app_id, -1) >= epoch_id:
+                return  # replayed epoch: exact no-op
+            fold(batch_df, epoch_id, cur, txns, emitted_thru, held)
+
+    (
+        stream_df.writeStream.foreachBatch(on_batch)
+        .queryName(name)
+        .option("checkpointLocation", staging_mkdtemp(f"ckpt_{name}_"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    return _read_pointer(store)
 
 
 def run_windowed_cells(
@@ -240,68 +163,26 @@ def run_windowed_cells(
     output-preserving under arbitrary lateness (tested)."""
     spark = stream_df.sparkSession
     store = path or staging_mkdtemp(f"rollup_{name}_")
-    # a caller-supplied path need not exist yet: the flock guard's
-    # O_CREAT open inside on_batch requires the parent dir (the
-    # generation write used to create it lazily — round-12 second
-    # review #4)
-    os.makedirs(store, exist_ok=True)
 
-    def on_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        # the whole fold runs under the store's flock guard (round 12):
-        # two maintainers derive the SAME store-level next-gen name from
-        # one pointer read, so unguarded they clobber each other's
-        # generation write and last-writer-win the pointer; under the
-        # guard they queue, and the second's pointer read sees the
-        # first's commit (state gens are live-window-bounded — small)
-        from presto_rakam_kafka_spark.locks import flock_guard
+    def fold(batch_df, epoch_id, cur, txns, _thru, held) -> None:
+        cells = cell_fn(batch_df)
+        if cur is not None:
+            prev = spark.read.parquet(os.path.join(store, cur))
+            cells = prev.unionByName(cells)
+        merged = cells.groupBy(*group_cols).agg(*merge_exprs)
+        mx = merged.agg(F.max(day_col).alias("m")).collect()[0]["m"]
+        if mx is not None:
+            merged = merged.filter(
+                F.col(day_col)
+                >= F.lit(mx) - F.expr(f"INTERVAL {window_days - 1} DAYS")
+            )
+        with genstore.Generation(store, cur, _TIER, reclaim=held) as g:
+            merged.write.mode("overwrite").parquet(g.dir)
+            g.commit(txns, (app_id, epoch_id), keep_last=1)
 
-        with flock_guard(
-            os.path.join(store, ".MAINT_GUARD"),
-            timeout_s=_MAINT_GUARD_TIMEOUT_S,
-            op_name="run_windowed_cells",
-        ) as held:
-            _reclaim_aged_tempdirs(store, held)
-            cur, txns, _e = _read_pointer(store)
-            if txns.get(app_id, -1) >= epoch_id:
-                return  # replayed epoch: exact no-op
-            cells = cell_fn(batch_df)
-            if cur is not None:
-                prev = spark.read.parquet(os.path.join(store, cur))
-                cells = prev.unionByName(cells)
-            merged = cells.groupBy(*group_cols).agg(*merge_exprs)
-            mx = merged.agg(F.max(day_col).alias("m")).collect()[0]["m"]
-            if mx is not None:
-                merged = merged.filter(
-                    F.col(day_col)
-                    >= F.lit(mx) - F.expr(f"INTERVAL {window_days - 1} DAYS")
-                )
-            # STORE-level sequence, not the app-scoped epoch: a second
-            # maintainer (fresh checkpoint, epoch restarting at 0) must
-            # never derive a generation name at or below the current one
-            # (the serving.py discipline; epoch-named gens left orphan
-            # dirs behind and could overwrite superseded ones)
-            seq = 0 if cur is None else int(cur.split("-")[1]) + 1
-            gen = f"gen-{seq:010d}"
-            # unique temp + rename-at-publish (round-13 second review):
-            # writing gen directly let a flock-less loser overwrite the
-            # winner's committed dir BEFORE its fence raised
-            wdir = _fresh_state_dir(store, gen)
-            merged.write.mode("overwrite").parquet(wdir)
-            txns = dict(txns)
-            txns[app_id] = int(epoch_id)
-            _fenced_flip(store, cur, gen, txns,
-                         renames=[(wdir, gen)], lock_held=held)
-            _gc_gens(store, gen)
-
-    q = (
-        stream_df.writeStream.foreachBatch(on_batch)
-        .queryName(name)
-        .option("checkpointLocation", staging_mkdtemp(f"ckpt_{name}_"))
-        .trigger(availableNow=True)
-        .start()
+    cur, _t, _e = _drain(
+        stream_df, store, name, app_id, "run_windowed_cells", fold
     )
-    q.awaitTermination()
-    cur, _t, _e = _read_pointer(store)
     if cur is None:  # empty stream
         return cell_fn(
             spark.createDataFrame([], stream_df.schema)
@@ -343,30 +224,9 @@ def run_rolling_pairs(
     stream lifetime."""
     spark = stream_df.sparkSession
     store = path or staging_mkdtemp(f"rollup_{name}_")
-    # a caller-supplied path need not exist yet: the flock guard's
-    # O_CREAT open inside on_batch requires the parent dir (the
-    # generation write used to create it lazily — round-12 second
-    # review #4)
-    os.makedirs(store, exist_ok=True)
     slack = int(allowed_lateness_days)
 
-    def on_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        # same store-guard rationale as run_windowed_cells (round 12)
-        from presto_rakam_kafka_spark.locks import flock_guard
-
-        with flock_guard(
-            os.path.join(store, ".MAINT_GUARD"),
-            timeout_s=_MAINT_GUARD_TIMEOUT_S,
-            op_name="run_rolling_pairs",
-        ) as held:
-            _reclaim_aged_tempdirs(store, held)
-            _on_batch_locked(batch_df, epoch_id, held)
-
-    def _on_batch_locked(batch_df: DataFrame, epoch_id: int,
-                         held: bool = True) -> None:
-        cur, txns, emitted_thru = _read_pointer(store)
-        if txns.get(app_id, -1) >= epoch_id:
-            return  # replayed epoch: exact no-op
+    def fold(batch_df, epoch_id, cur, txns, emitted_thru, held) -> None:
         pairs = pair_fn(batch_df)
         if cur is not None:
             prev = spark.read.parquet(os.path.join(store, cur, "pairs"))
@@ -374,17 +234,7 @@ def run_rolling_pairs(
         else:
             pairs = pairs.distinct()
         mx = pairs.agg(F.max(day_col).alias("m")).collect()[0]["m"]
-        seq = 0 if cur is None else int(cur.split("-")[1]) + 1
-        gen = f"gen-{seq:010d}"  # store-level sequence (see above)
-        # the emitted append store is keyed by the SAME store-level
-        # sequence: raw epoch ids collide when a later maintainer's
-        # checkpoint restarts at 0, and mode("overwrite") would then
-        # destroy the first run's emitted anchor rows — which are never
-        # re-emitted (the day > emitted_thru filter). A same-checkpoint
-        # replay recomputes the same seq (pointer unflipped) and
-        # idempotently rewrites the same dir.
-        renames: list[tuple[str, str]] = []
-        new_thru = emitted_thru
+        new_thru, series = emitted_thru, None
         if mx is not None:
             close_thru = mx - _dt.timedelta(days=1 + slack)
             close_str = close_thru.strftime("%Y-%m-%d")
@@ -394,17 +244,6 @@ def run_rolling_pairs(
                 )
                 if emitted_thru is not None:
                     series = series.filter(F.col("day") > F.lit(emitted_thru))
-                # unique temp + rename-at-publish: a flock-less racer's
-                # overwrite of emitted/gen=N would destroy the winner's
-                # emitted anchor rows, which are never re-emitted
-                ename = f"gen={seq:010d}"
-                ewdir = _fresh_state_dir(
-                    os.path.join(store, "emitted"), ename
-                )
-                series.write.mode("overwrite").parquet(ewdir)
-                renames.append(
-                    (ewdir, os.path.join("emitted", ename))
-                )
                 new_thru = close_str
             # evict pairs no unemitted anchor can need: the smallest
             # unemitted anchor is close_thru+1, whose window starts at
@@ -414,24 +253,26 @@ def run_rolling_pairs(
                 F.col(day_col)
                 >= F.to_timestamp(F.lit(keep_from.strftime("%Y-%m-%d")))
             )
-        wdir = _fresh_state_dir(store, gen)
-        pairs.write.mode("overwrite").parquet(os.path.join(wdir, "pairs"))
-        txns = dict(txns)
-        txns[app_id] = int(epoch_id)
-        renames.append((wdir, gen))
-        _fenced_flip(store, cur, gen, txns, new_thru,
-                     renames=renames, lock_held=held)
-        _gc_gens(store, gen)
+        with genstore.Generation(store, cur, _TIER, reclaim=held) as g:
+            if series is not None:
+                # the emitted append store is keyed by the SAME
+                # store-level sequence (``gen=N`` beside ``gen-N``): raw
+                # epoch ids collide when a later maintainer's checkpoint
+                # restarts at 0, and emitted rows are never re-emitted
+                # (the day > emitted_thru filter)
+                ename = g.name.replace("-", "=", 1)
+                series.write.mode("overwrite").parquet(
+                    g.write_dir(os.path.join("emitted", ename))
+                )
+            pairs.write.mode("overwrite").parquet(os.path.join(g.dir, "pairs"))
+            g.commit(
+                txns, (app_id, epoch_id), {"emitted_thru": new_thru},
+                keep_last=1,
+            )
 
-    q = (
-        stream_df.writeStream.foreachBatch(on_batch)
-        .queryName(name)
-        .option("checkpointLocation", staging_mkdtemp(f"ckpt_{name}_"))
-        .trigger(availableNow=True)
-        .start()
+    cur, _t, emitted_thru = _drain(
+        stream_df, store, name, app_id, "run_rolling_pairs", fold
     )
-    q.awaitTermination()
-    cur, _t, emitted_thru = _read_pointer(store)
     if cur is None:
         return finish_fn(pair_fn(spark.createDataFrame([], stream_df.schema)))
     live = spark.read.parquet(os.path.join(store, cur, "pairs"))

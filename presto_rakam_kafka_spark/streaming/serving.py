@@ -46,14 +46,15 @@ partitions; the per-partition residual filters switch from literal
 boolean chains to broadcast-joined bounds maps past the codegen cutoff
 (``_BOUNDS_EXPR_MAX_PARTITIONS``).
 
-Concurrency model (round 11): serves are lock-free and SNAPSHOT-
-CONSISTENT — one pointer read per serve, cells resolved from that
-snapshot's generation, GC grace keeping the superseded generation
-alive one tick. Writers hold a TTL lease (cross-host exclusion by
-expiry, same-host crash steal by pid) and every commit is FENCED by
-the store-level generation sequence: liveness from the lease, safety
-from the fence. Streaming maintenance is idempotent by OFFSET (each
-batch filtered to ≥ the stored HWM), never by epoch alignment.
+Concurrency model: serves are lock-free and SNAPSHOT-CONSISTENT — one
+pointer read per serve, cells resolved from that snapshot's generation,
+GC grace keeping superseded generations alive. Writers hold a TTL lease
+(cross-host exclusion by expiry, same-host crash steal by pid) for
+liveness; every commit — fold, rebuild, repair — goes through
+:func:`_commit_days`, i.e. the ``genstore`` protocol (unique write dir,
+fenced flip of (cells, HWM, txn), graced GC) for safety. Streaming
+maintenance is idempotent by OFFSET (each batch filtered to ≥ the stored
+HWM), never by epoch alignment.
 :func:`repair_rollup_days` is the GDPR path: re-fold only the purged
 keys' day buckets from the purged log, HWM unchanged.
 """
@@ -62,17 +63,23 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
+import sys
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from presto_rakam_kafka_spark import genstore
 from presto_rakam_kafka_spark.fixtures import staging_mkdtemp
+from presto_rakam_kafka_spark.gc_utils import (  # noqa: F401 — tier surface
+    RETIRED_MARKER as _RETIRED_MARKER,
+)
+from presto_rakam_kafka_spark.genstore import (  # noqa: F401 — re-exported
+    FencedMaintenanceError,
+)
 
-_CURRENT = "_CURRENT"
-_MANIFEST = "_MANIFEST.json"
 _LOCK = "_MAINTENANCE_LOCK"
+_TIER = sys.modules[__name__]
 
 
 class ConcurrentMaintenanceError(RuntimeError):
@@ -82,32 +89,12 @@ class ConcurrentMaintenanceError(RuntimeError):
     the earlier commit's files: a lost update)."""
 
 
-class FencedMaintenanceError(RuntimeError):
-    """The store's generation sequence moved between this maintainer's
-    pointer read and its commit — another writer (e.g. one that stole
-    an expired lease from this now-slow process) already flipped. The
-    stale commit is refused: its generation dir is left unreferenced
-    for GC, the pointer is untouched."""
-
-
 #: lease validity window. Any single fixture-scale fold finishes in
 #: seconds; production folds over big tails should renew (``renew()``)
 #: between phases. Past expiry the lease is stealable by design — the
 #: generation-fence at flip time (not the lock) is what keeps a stolen
 #: lease's original holder from corrupting the store.
 _LEASE_TTL_S = 300.0
-
-#: errnos meaning "this filesystem has no flock semantics" (object-store
-#: FUSE mounts, NFS without lockd) — every flock call site DEGRADES on
-#: these instead of retrying or raising: the micro-lock falls back to
-#: fence-only commits and the lease guard to the TTL-only protocol, the
-#: documented guarantee level wherever kernel locks don't span
-#: (round-12 review finding #3: a bare ``except OSError`` retry loop
-#: turned ENOTSUP into a 20 s stall + a wrong 'wedged filesystem' error
-#: on every commit). Shared with the CDC and segment-log tiers.
-from presto_rakam_kafka_spark.locks import (  # noqa: E402
-    FLOCK_UNSUPPORTED_ERRNOS as _FLOCK_UNSUPPORTED_ERRNOS,
-)
 
 
 class _store_lock:
@@ -149,9 +136,9 @@ class _store_lock:
         holder writes ONLY its own sidecar and a renew can never clobber
         another maintainer's state (the round-11 check-then-replace
         renew could: a thief stealing between the holder check and the
-        ``os.replace`` had its fresh lease overwritten by the victim's
-        renew, re-admitting two maintainers). The shared lease file is
-        now written only by atomic O_EXCL create and rename-steal."""
+        replace had its fresh lease overwritten by the victim's renew,
+        re-admitting two maintainers). The shared lease file is now
+        written only by atomic O_EXCL create and rename-steal."""
         import hashlib
 
         return f"{self._path}.renew-{hashlib.sha1(holder.encode()).hexdigest()[:16]}"
@@ -288,21 +275,15 @@ class _store_lock:
                     f"fence would have refused the commit anyway"
                 )
             side = self._sidecar_path(self._holder)
-            # unique tmp per renew: the keepalive heartbeat and an
-            # explicit phase renew are serialized by the guard flock,
-            # but on a flock-less filesystem the guard excludes nothing
-            # and a shared tmp name would let one renew's os.replace
-            # steal the other's half-written file (round-13 review)
-            tmp = f"{side}.{os.urandom(4).hex()}.tmp"
-            with open(tmp, "w") as fh:
-                json.dump(
-                    {
-                        "holder": self._holder,
-                        "expires": _time.time() + self._ttl,
-                    },
-                    fh,
-                )
-            os.replace(tmp, side)
+            # write_json's temp name is unique per call: the keepalive
+            # heartbeat and an explicit phase renew are serialized by the
+            # guard flock, but on a flock-less filesystem the guard
+            # excludes nothing and a shared tmp name would let one
+            # renew's replace steal the other's half-written file
+            genstore.write_json(
+                side,
+                {"holder": self._holder, "expires": _time.time() + self._ttl},
+            )
             if self._file_holder() != self._holder:
                 try:
                     os.remove(side)
@@ -384,58 +365,44 @@ def _pid_alive_for_lock(pid: int) -> bool:
 
 
 # ---------------------------------------------------------------------
-# Store plumbing: pointer (gen + txns + HWM) and per-generation manifest
+# Store layout over genstore: pointer payload = HWM, manifest = day files
 # ---------------------------------------------------------------------
 
 
 def _read_pointer(store: str) -> tuple[str | None, dict, dict]:
     """(current_gen, txns, hwm) — (None, {}, {}) on a fresh store.
     ``hwm[partition] = first offset NOT yet folded into the cells``."""
-    p = os.path.join(store, _CURRENT)
-    if not os.path.exists(p):
-        return None, {}, {}
-    with open(p) as fh:
-        d = json.load(fh)
-    return d.get("gen"), d.get("txns", {}), {
-        int(k): int(v) for k, v in d.get("hwm", {}).items()
-    }
+    gen, txns, payload = genstore.read_pointer(store)
+    hwm = payload.get("hwm", {})
+    return gen, txns, {int(k): int(v) for k, v in hwm.items()}
+
+
+def _hwm_payload(hwm: dict) -> dict:
+    return {"hwm": {str(k): int(v) for k, v in hwm.items()}}
 
 
 def _flip_pointer(store: str, gen: str, txns: dict, hwm: dict) -> None:
-    tmp = os.path.join(store, f".{_CURRENT}.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(
-            {"gen": gen, "txns": txns,
-             "hwm": {str(k): int(v) for k, v in hwm.items()}},
-            fh, sort_keys=True,
-        )
-    os.replace(tmp, os.path.join(store, _CURRENT))
-
-
-def _write_manifest(gdir: str, days: dict[str, list[str]]) -> None:
-    """``days`` maps day → data files RELATIVE TO THE STORE ROOT; an
-    entry may point into a PRIOR generation (carry by reference)."""
-    tmp = os.path.join(gdir, f".{_MANIFEST}.tmp")
-    with open(tmp, "w") as fh:
-        json.dump({"days": {d: sorted(fs) for d, fs in days.items()}},
-                  fh, sort_keys=True)
-    os.replace(tmp, os.path.join(gdir, _MANIFEST))
+    genstore.write_pointer(store, gen, txns, _hwm_payload(hwm))
 
 
 def _read_manifest(store: str, gen: str) -> dict[str, list[str]]:
-    with open(os.path.join(store, gen, _MANIFEST)) as fh:
-        return json.load(fh)["days"]
+    """day → store-relative data files (possibly in older generations)."""
+    return genstore.read_manifest(store, gen)["days"]
 
 
-def _day_files(store: str, gen: str, day: str) -> list[str]:
-    """Store-relative data files of one freshly-written day bucket."""
-    ddir = os.path.join(store, gen, f"_day={day}")
-    if not os.path.isdir(ddir):
+def _cell_files(
+    store: str, gen: str | None, first: str | None = None,
+    last: str | None = None,
+) -> list[str]:
+    """Cell files of generation ``gen`` for the days in [first, last]
+    (unbounded where None)."""
+    if gen is None:
         return []
     return [
-        os.path.join(gen, f"_day={day}", f)
-        for f in sorted(os.listdir(ddir))
-        if f.endswith(".parquet")
+        os.path.join(store, f)
+        for d, fs in _read_manifest(store, gen).items()
+        if (first is None or d >= first) and (last is None or d <= last)
+        for f in fs
     ]
 
 
@@ -453,16 +420,8 @@ def read_store_cells_at(
     detail — the day lives in the data as a regular column, so reading
     by explicit file list (the manifest may point across generations)
     loses nothing."""
-    if gen is None:
-        return None
-    files = [
-        os.path.join(store, f)
-        for fs in _read_manifest(store, gen).values()
-        for f in fs
-    ]
-    if not files:
-        return None
-    return _read_cell_files(spark, files)
+    files = _cell_files(store, gen)
+    return _read_cell_files(spark, files) if files else None
 
 
 def _read_cell_files(spark: SparkSession, files: list[str]) -> DataFrame:
@@ -529,12 +488,11 @@ def stored_cell_count(store: str) -> int | None:
     if gen is None:
         return None
     total = 0
-    for fs in _read_manifest(store, gen).values():
-        for rel in fs:
-            try:
-                total += pq.read_metadata(os.path.join(store, rel)).num_rows
-            except OSError:
-                return None  # racing a GC: estimate unavailable, not wrong
+    for path in _cell_files(store, gen):
+        try:
+            total += pq.read_metadata(path).num_rows
+        except OSError:
+            return None  # racing a GC: estimate unavailable, not wrong
     return total
 
 
@@ -545,59 +503,6 @@ def read_store_cells(spark: SparkSession, store: str) -> DataFrame | None:
     call :func:`read_store_cells_at` (see the torn-view note there)."""
     gen, _txns, _hwm = _read_pointer(store)
     return read_store_cells_at(spark, store, gen)
-
-
-#: superseded generations younger than this survive GC — time-based
-#: retention (round 13, VERDICT r12 #2b): the count-based ``grace=1``
-#: protected a serve across ONE maintenance tick, so a slow serve
-#: spanning two commits lost its snapshot generation mid-read. The
-#: marker discipline lives in `gc_utils` (shared with CDC, rollup
-#: state, and the segment log); these aliases keep the serving tier's
-#: public surface.
-from presto_rakam_kafka_spark.gc_utils import (  # noqa: E402
-    GC_GRACE_S,
-    RETIRED_MARKER as _RETIRED_MARKER,
-    retirement_age_s as _retirement_age_s,
-)
-
-
-def _gc_generations(
-    store: str, keep_gen: str, grace: int = 1, grace_s: float | None = None
-) -> None:
-    """Drop generations that no retained manifest references
-    (refcounted via store-relative paths — the `streaming/cdc.py` GC
-    discipline). ``grace`` additionally retains the newest N superseded
-    generations AND everything their manifests reference, and
-    ``grace_s`` (default :data:`GC_GRACE_S`) retains every unreferenced
-    generation for a TIME window after it is first observed superseded
-    — a serve that resolved the pointer before a maintenance commit
-    still finds its files even when further commits land while it
-    reads (the round-12 count grace only survived one tick).
-    ``grace_s=0.0`` is the explicit force-override."""
-    eff_grace_s = GC_GRACE_S if grace_s is None else float(grace_s)
-    gens = sorted(
-        e for e in os.listdir(store) if e.startswith("gen-")
-    )
-    superseded = [g for g in gens if g < keep_gen]
-    keep = {keep_gen} | {g for g in gens if g > keep_gen}  # + in-flight
-    keep.update(superseded[-grace:])
-    live = set(keep)
-    for g in sorted(keep):
-        try:
-            man = _read_manifest(store, g)
-        except (FileNotFoundError, KeyError, ValueError):
-            continue
-        for fs in man.values():
-            for rel in fs:
-                live.add(rel.split(os.sep, 1)[0])
-    for e in gens:
-        if e in live:
-            continue
-        if eff_grace_s > 0:
-            age = _retirement_age_s(os.path.join(store, e))
-            if age is None or age < eff_grace_s:
-                continue  # inside the slow-reader retention window
-        shutil.rmtree(os.path.join(store, e), ignore_errors=True)
 
 
 # ---------------------------------------------------------------------
@@ -799,7 +704,6 @@ def _fold_cells(
     safety never depended on it — the fence refuses a stolen lease's
     commit — this is the liveness half). A renew that finds the lease
     stolen raises, aborting BEFORE the doomed write instead of after."""
-    gen_prev, txns = gen_read, txns_read
     touched = [
         r[day_col]
         for r in new_cells.select(day_col).distinct().collect()
@@ -808,56 +712,66 @@ def _fold_cells(
     if lk is not None:
         lk.renew()  # the touched-days scan was the first long phase
     prev_days: dict[str, list[str]] = (
-        _read_manifest(store, gen_prev) if gen_prev is not None else {}
+        _read_manifest(store, gen_read) if gen_read is not None else {}
     )
-    # Generation names are a STORE-level sequence (previous + 1), not
-    # the app-scoped epoch: a batch top-up and a streaming maintainer
-    # share one store, and epoch numbers collide across app_ids — a
-    # gen named by epoch could overwrite the CURRENT generation.
-    # Replay protection stays with the (app_id, epoch) txn record.
-    seq = 0 if gen_prev is None else int(gen_prev.split("-")[1]) + 1
-    gen = f"gen-{seq:010d}"
-    gdir = os.path.join(store, gen)
-    days: dict[str, list[str]] = {
-        d: fs for d, fs in prev_days.items() if d not in touched
-    }
-    if touched:
-        merged = new_cells
-        carry_files = [
-            os.path.join(store, f)
-            for d in touched
-            for f in prev_days.get(d, [])
-        ]
-        if carry_files:
-            prev_touched = spark.read.parquet(*carry_files).filter(
-                F.col(day_col).isin(touched)
-            )
-            # allowMissingColumns: a NEW measure added to cell_fn must
-            # not strand the store — old cells read the column as NULL
-            # (sum-merge treats null as absent; the finish decides how
-            # pre-migration days present)
-            merged = merged.unionByName(
-                prev_touched, allowMissingColumns=True
-            )
-        merged = merged.groupBy(*group_cols).agg(*merge_exprs)
-        (
-            merged.withColumn("_day", F.col(day_col))
-            .repartition(max(1, len(touched)), "_day")
-            .write.mode("overwrite")
-            .partitionBy("_day")
-            .parquet(gdir)
+    merged = new_cells
+    carry_files = [
+        os.path.join(store, f) for d in touched for f in prev_days.get(d, [])
+    ]
+    if carry_files:
+        prev_touched = spark.read.parquet(*carry_files).filter(
+            F.col(day_col).isin(touched)
         )
-        for d in touched:
-            days[d] = _day_files(store, gen, d)
-    else:
-        os.makedirs(gdir, exist_ok=True)
-    _write_manifest(gdir, days)
-    txns = dict(txns)
-    txns[app_id] = int(epoch)
-    if lk is not None:
-        lk.renew()  # the day-bucket write was the second long phase
-    _fenced_flip(store, gen_prev, gen, txns, new_hwm)
-    _gc_generations(store, gen)
+        # allowMissingColumns: a NEW measure added to cell_fn must not
+        # strand the store — old cells read the column as NULL (sum-merge
+        # treats null as absent; the finish decides how pre-migration
+        # days present)
+        merged = merged.unionByName(prev_touched, allowMissingColumns=True)
+    _commit_days(
+        store, gen_read, txns_read, (app_id, epoch), new_hwm,
+        merged.groupBy(*group_cols).agg(*merge_exprs), touched,
+        {d: fs for d, fs in prev_days.items() if d not in touched},
+        day_col, lk,
+    )
+
+
+def _commit_days(
+    store: str,
+    gen_read: str | None,
+    txns: dict,
+    txn: tuple[str, int],
+    hwm: dict,
+    cells: DataFrame,
+    days: list[str],
+    kept: dict[str, list[str]],
+    day_col: str,
+    lk=None,
+) -> list[str]:
+    """The one serving commit (fold, rebuild and repair): write
+    ``cells`` — rows of ``days`` only — as ``_day=`` buckets of the next
+    generation, carry every day of ``kept`` (day → store-relative files)
+    by manifest reference, and commit (cells, ``hwm``, ``txn``) through
+    the ``genstore`` protocol, fenced against ``gen_read``. A day of
+    ``days`` without cells drops out of the manifest. ``lk`` (the held
+    lease) is renewed after the write, the long phase. Returns the days
+    written."""
+    with genstore.Generation(store, gen_read, _TIER, reclaim=True) as g:
+        if days:
+            (
+                cells.withColumn("_day", F.col(day_col))
+                .repartition(max(1, len(days)), "_day")
+                .write.mode("overwrite")
+                .partitionBy("_day")
+                .parquet(g.dir)
+            )
+        written = {d: fs for d in days if (fs := g.files(f"_day={d}"))}
+        if lk is not None:
+            lk.renew()
+        g.commit(
+            txns, txn, _hwm_payload(hwm),
+            manifest={"days": {**kept, **written}}, keep_last=2,
+        )
+    return sorted(written)
 
 
 #: test-injection point: called right before a commit's fence check —
@@ -866,83 +780,15 @@ def _fold_cells(
 _before_flip_hook = None
 
 #: test-injection point: called right after a flipper ACQUIRES the flip
-#: micro-lock, before its fence check — a two-flipper race test barriers
+#: lock, before its fence check — a two-flipper race test barriers
 #: around the lock to prove mutual exclusion of the fence+flip section.
 _after_flip_lock_hook = None
-
-
-#: how long a flipper waits for the micro-lock before giving up — the
-#: critical section is one pointer read + one rename (µs), so anything
-#: near this bound means a wedged filesystem, not contention.
-_FLIP_LOCK_TIMEOUT_S = 20.0
 
 
 def _fenced_flip(
     store: str, gen_read: str | None, gen: str, txns: dict, hwm: dict
 ) -> None:
-    """Flip the pointer iff the generation sequence hasn't moved since
-    this writer read it (``gen_read``). The lease gives cooperative
-    exclusion; the FENCE gives correctness when exclusion fails — a
-    maintainer whose lease expired mid-fold (GC pause, slow scan) and
-    was stolen must find its commit REFUSED, not silently clobber the
-    thief's: the store-level generation sequence is the fencing token
-    (the Chubby/ZooKeeper discipline, here checked against the atomic
-    pointer itself).
-
-    The check-then-rename pair is itself serialized by a MICRO-LOCK:
-    POSIX has no rename-CAS, so without it two writers that both passed
-    the fence in the same microsecond window would last-writer-win the
-    pointer (round-11 review finding #2). The micro-lock is an
-    ``fcntl.flock`` on ``.FLIP_LOCK`` — kernel-owned, so a flipper that
-    CRASHES inside the critical section releases it automatically (no
-    TTL, no steal protocol, no torn-content reads: round 12 replaced
-    the r11 O_EXCL+TTL+steal file lock after review found every
-    observe-then-remove/rename steal variant re-admits a double hold —
-    rename acts on the PATH, not the observed file, so a stealer racing
-    a winner's re-create can rename the winner's fresh lock). flock is
-    atomic on local filesystems and NFSv4; on a filesystem without
-    flock semantics (object stores) this degrades to the fence alone —
-    the pointer stays internally consistent, and a sub-microsecond
-    double-pass shows up as one refused or one lost METADATA update,
-    never torn cells (cells are immutable generation dirs)."""
-    import fcntl
-    import time as _time
-
-    if _before_flip_hook is not None:
-        _before_flip_hook()
-    flip_lock = os.path.join(store, ".FLIP_LOCK")
-    fd = os.open(flip_lock, os.O_CREAT | os.O_RDWR)
-    try:
-        deadline = _time.time() + _FLIP_LOCK_TIMEOUT_S
-        while True:
-            try:
-                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-                break
-            except OSError as exc:
-                if exc.errno in _FLOCK_UNSUPPORTED_ERRNOS:
-                    break  # no flock on this fs: fence-only, documented
-                if _time.time() > deadline:
-                    raise ConcurrentMaintenanceError(
-                        f"flip micro-lock {flip_lock} not acquired within "
-                        f"{_FLIP_LOCK_TIMEOUT_S}s — the critical section "
-                        f"is microseconds, so the holder's filesystem is "
-                        f"wedged (a crashed holder releases via the "
-                        f"kernel)"
-                    ) from None
-                _time.sleep(0.01)
-        if _after_flip_lock_hook is not None:
-            _after_flip_lock_hook()
-        cur, _t, _h = _read_pointer(store)
-        if cur != gen_read:
-            raise FencedMaintenanceError(
-                f"generation moved {gen_read!r} → {cur!r} during this "
-                f"fold; refusing stale commit {gen!r} (lease was stolen "
-                f"or a second maintainer raced) — the unreferenced "
-                f"generation dir is left for GC"
-            )
-        _flip_pointer(store, gen, txns, hwm)
-    finally:
-        os.close(fd)  # closing the fd releases the flock
+    genstore.fenced_flip(store, gen_read, gen, txns, _hwm_payload(hwm), _TIER)
 
 
 def maintain_rollup(
@@ -1199,35 +1045,18 @@ def _rebuild_locked(
     # append-during-tick discipline as maintain_rollup)
     scan = _tail_scan(spark, log_dir, {}, up_to=max(new_hwm.values()))
     scan = _per_partition_offset_filter(scan, new_hwm, lower=False)
-    cells = cell_fn(scan)
-    merged = cells.groupBy(*group_cols).agg(*merge_exprs)
+    merged = cell_fn(scan).groupBy(*group_cols).agg(*merge_exprs)
     if lk is not None:
         lk.renew()  # full-log fold ahead: fresh lease
-    seq = 0 if gen_prev is None else int(gen_prev.split("-")[1]) + 1
-    gen = f"gen-{seq:010d}"
-    gdir = os.path.join(store, gen)
     touched = [
         r[day_col]
         for r in merged.select(day_col).distinct().collect()
         if r[day_col] is not None
     ]
-    if touched:
-        (
-            merged.withColumn("_day", F.col(day_col))
-            .repartition(max(1, len(touched)), "_day")
-            .write.mode("overwrite")
-            .partitionBy("_day")
-            .parquet(gdir)
-        )
-    else:
-        os.makedirs(gdir, exist_ok=True)
-    _write_manifest(gdir, {d: _day_files(store, gen, d) for d in touched})
-    txns = dict(txns)
-    txns[app_id] = txns.get(app_id, -1) + 1
-    if lk is not None:
-        lk.renew()  # the full-log write was the long phase
-    _fenced_flip(store, gen_prev, gen, txns, new_hwm)
-    _gc_generations(store, gen)
+    _commit_days(
+        store, gen_prev, txns, (app_id, txns.get(app_id, -1) + 1), new_hwm,
+        merged, touched, {}, day_col, lk,
+    )
     return new_hwm
 
 
@@ -1305,34 +1134,14 @@ def _repair_days_locked(
     merged = cells.groupBy(*group_cols).agg(*merge_exprs)
     if lk is not None:
         lk.renew()
-    prev_days = _read_manifest(store, gen_prev)
-    seq = int(gen_prev.split("-")[1]) + 1
-    gen = f"gen-{seq:010d}"
-    gdir = os.path.join(store, gen)
-    kept: dict[str, list[str]] = {
-        d: fs for d, fs in prev_days.items() if d not in days
-    }
-    (
-        merged.withColumn("_day", F.col(day_col))
-        .repartition(max(1, len(days)), "_day")
-        .write.mode("overwrite")
-        .partitionBy("_day")
-        .parquet(gdir)
+    # a day whose rows were all purged drops out of the manifest
+    rewritten = _commit_days(
+        store, gen_prev, txns, (app_id, txns.get(app_id, -1) + 1), hwm,
+        merged, days,
+        {d: fs for d, fs in _read_manifest(store, gen_prev).items()
+         if d not in days},
+        day_col, lk,
     )
-    rewritten = []
-    for d in days:
-        fs = _day_files(store, gen, d)
-        if fs:
-            kept[d] = fs
-            rewritten.append(d)
-        # else: every row of d was purged — the day vanishes
-    _write_manifest(gdir, kept)
-    txns = dict(txns)
-    txns[app_id] = txns.get(app_id, -1) + 1
-    if lk is not None:
-        lk.renew()  # the repaired-days write was the long phase
-    _fenced_flip(store, gen_prev, gen, txns, hwm)
-    _gc_generations(store, gen)
     _clear_repair_intent(store, days)
     return rewritten
 
@@ -1362,10 +1171,7 @@ def _clear_repair_intent(store: str, repaired_days: list[str]) -> None:
         except OSError:
             pass
         return
-    tmp = f"{intent_path}.tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"days": remaining}, fh)
-    os.replace(tmp, intent_path)
+    genstore.write_json(intent_path, {"days": remaining})
 
 
 def serve_rollup_day(
@@ -1394,17 +1200,11 @@ def serve_rollup_day(
     groups × key)."""
     gen, _txns, hwm = _read_pointer(store)
     stored = None
-    if gen is not None:
-        files = [
-            os.path.join(store, f)
-            for f in _read_manifest(store, gen).get(day, [])
-        ]
-        if files:
-            # a day bucket holds exactly one day, but stay exact if a
-            # caller hand-built a store with coarser buckets
-            stored = _read_cell_files(spark, files).filter(
-                F.col(day_col) == day
-            )
+    files = _cell_files(store, gen, day, day)
+    if files:
+        # a day bucket holds exactly one day, but stay exact if a caller
+        # hand-built a store with coarser buckets
+        stored = _read_cell_files(spark, files).filter(F.col(day_col) == day)
     import datetime as _dt
 
     nxt = (
@@ -1452,18 +1252,11 @@ def serve_rollup_range(
 
     gen, _txns, hwm = _read_pointer(store)
     stored = None
-    if gen is not None:
-        man = _read_manifest(store, gen)
-        files = [
-            os.path.join(store, f)
-            for d, fs in man.items()
-            if start_day <= d <= end_day
-            for f in fs
-        ]
-        if files:
-            stored = _read_cell_files(spark, files).filter(
-                F.col(day_col).between(start_day, end_day)
-            )
+    files = _cell_files(store, gen, start_day, end_day)
+    if files:
+        stored = _read_cell_files(spark, files).filter(
+            F.col(day_col).between(start_day, end_day)
+        )
     nxt = (
         _dtmod.date.fromisoformat(end_day) + _dtmod.timedelta(days=1)
     ).isoformat()
@@ -1607,11 +1400,8 @@ def purge_and_repair_rollup(
             set(victim_rollup_days(spark, log_dir, store, keys)) | set(pending)
         )
         lk.renew()  # the derive scan was a long phase
-        if days:
-            tmp = f"{intent_path}.tmp"
-            with open(tmp, "w") as fh:
-                json.dump({"days": days}, fh)
-            os.replace(tmp, intent_path)
+        if days:  # durable before the purge: the only record of owed days
+            genstore.write_json(intent_path, {"days": days})
         purge_keys(log_dir, [bytes(k) for k in keys])
         if not days:
             return []

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from presto_rakam_kafka_spark.fixtures import read_table, staging_mkdtemp  # noqa: E402
 from presto_rakam_kafka_spark.session import get_spark  # noqa: E402
 from presto_rakam_kafka_spark.sources.kafka_datasource import (  # noqa: E402
+    KafkaSegmentDataSource,
     KafkaSegmentReader,
     _enumerate_segments,
     write_segments,
@@ -125,6 +126,7 @@ def main() -> None:
     t_serve = time.time() - t0
 
     # the reference's behavior: full-scan aggregate of the whole log
+    spark.dataSource.register(KafkaSegmentDataSource)
     t0 = time.time()
     full = finish(
         cell_fn(

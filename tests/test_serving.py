@@ -981,6 +981,50 @@ def test_fence_refuses_stale_commit_after_lease_steal(
     assert hwm2 == S._log_end_offsets(log)  # fully covered
 
 
+def test_stale_writer_cannot_overwrite_committed_generation(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A thief that commits between a victim's pointer read and the
+    victim's generation write: both derive the same next generation
+    name, so a victim writing that name in place replaces the thief's
+    COMMITTED cells before its fence refuses — the pointer then pairs
+    the thief's HWM with the victim's cells and the serve double-counts.
+    The victim must be refused without touching anything the thief
+    published."""
+    from presto_rakam_kafka_spark.streaming import serving as S
+
+    log = str(tmp_path / "log")
+    _write_log(spark, sf_dir, log, hi=600)
+    store = str(tmp_path / "store")
+    maintain_rollup(spark, log, store, _cells, GROUP, _merge(), up_to=100)
+    # the victim's renews cannot see the steal (they all landed before
+    # it): only the fence stands between the stale fold and the store
+    monkeypatch.setattr(S._store_lock, "renew", lambda self: None)
+    stolen: list[int] = []
+
+    def cells_after_theft(df_raw):
+        if not stolen:
+            stolen.append(1)
+            # the thief got here by stealing the victim's EXPIRED lease
+            os.remove(os.path.join(store, "_MAINTENANCE_LOCK"))
+            maintain_rollup(
+                spark, log, store, _cells, GROUP, _merge(), up_to=200,
+                app_id="thief",
+            )
+        return _cells(df_raw)
+
+    with pytest.raises(S.FencedMaintenanceError):
+        maintain_rollup(
+            spark, log, store, cells_after_theft, GROUP, _merge(), up_to=300
+        )
+    _gen, txns, hwm = _read_pointer(store)
+    assert set(hwm.values()) == {200} and "thief" in txns
+    served = serve_rollup_tail(
+        spark, log, store, _cells, GROUP, _merge(), finish_fn=_finish
+    )
+    assert _got(served) == _expected(spark, sf_dir, hi=600)
+
+
 def test_keyed_serve_pushes_predicate_into_stored_cell_scan(
     spark, sf_dir, tmp_path
 ):
