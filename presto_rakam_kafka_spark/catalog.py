@@ -126,24 +126,25 @@ class EventCatalog:
         collection: str,
         path: str,
         value_format: str = "json",
-        min_splits: int = 0,
         avro_writer_schema: str | None = None,
         expose_key: bool = False,
         wire_format: str = "raw",
         schema_registry: dict | str | None = None,
     ) -> None:
-        """Register a table backed by the native ``kafka_segments``
-        DataSource: ``table(..., offset_ranges=...)`` then routes through
-        Catalyst ``pushFilters`` segment pruning end-to-end.
+        """Register a table backed by a ``kafka_segments`` log
+        (:class:`~presto_rakam_kafka_spark.sources.kafka_datasource.KafkaSegmentsEventSource`):
+        ``table(..., offset_ranges=...)`` plans the surviving segments
+        on the driver and Spark's parquet reader scans them.
         ``avro_writer_schema`` (with ``value_format="avro"``) names the
         OLD writer schema for payloads that predate the metastore's
         current fields — schema evolution resolves in the decode
         (``KafkaConnectorPageSource.java:82-123`` +
         ``PageDatumReader.java:68-93`` in one scan). ``expose_key``
         adds a fourth hidden column ``_key`` (the raw Kafka key —
-        compacted-topic tables): ``WHERE _key IN (…)`` on the decoded
-        table pushes through to bloom-index segment pruning (round
-        10; the reference's hidden columns stay the canonical three,
+        compacted-topic tables) and scans through the ``kafka_segments``
+        DataSource, so ``WHERE _key IN (…)`` on the decoded table
+        pushes through to bloom-index segment pruning (the reference's
+        hidden columns stay the canonical three,
         KafkaMetadata.java:165-167 — `_key` is opt-in per table)."""
         from presto_rakam_kafka_spark.sources.kafka_datasource import (
             KafkaSegmentsEventSource,
@@ -155,7 +156,6 @@ class EventCatalog:
             KafkaSegmentsEventSource(
                 path,
                 value_format=value_format,
-                min_splits=min_splits,
                 avro_writer_schema=avro_writer_schema,
                 expose_key=expose_key,
                 wire_format=wire_format,
@@ -207,6 +207,16 @@ class EventCatalog:
         hidden columns: only user columns appear.  ``offset_ranges``
         applies the reference's ``_offset`` pushdown (SURVEY §4 O1) at
         the source.
+
+        Snapshot contract for segment-log tables (other than
+        ``expose_key`` ones): the frame's file list is fixed by this
+        call, as Spark's own file index fixes it. A batch appended
+        afterwards is not in the frame; a fresh ``table()`` sees it.
+        After a ``compact_segments`` the frame still reads its
+        superseded generation, with the same rows, while the
+        generation's retire grace lasts; on a loose-file layout (no
+        generation yet), whose files compaction deletes at once, the
+        frame's actions raise — it never returns fewer rows.
         """
         fields = self.user_fields(project, collection)
         key = (project.lower(), collection.lower())

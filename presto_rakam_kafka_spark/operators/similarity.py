@@ -347,7 +347,8 @@ def _dots_array_spark(vec_col: str, cents: list[list[float]]) -> str:
     measured 4.7× faster parse+analyze on the 8×64 routing expr alone,
     0 value mismatches. ConstantFolding evaluates the ``from_json``
     once at optimization time (deterministic, foldable child) —
-    receipt-tested in ``tests/test_llm_operators.py``."""
+    receipt-tested by ``tests/test_llm_operators.py::
+    test_ivfpq_codebooks_fold_out_of_the_optimized_plan``."""
     return (
         f"transform(from_json('{_json_doubles(cents)}', 'array<array<double>>'),"
         f" c -> aggregate(zip_with({vec_col}, c,"

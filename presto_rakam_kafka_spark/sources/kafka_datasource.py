@@ -28,8 +28,9 @@ in ``KafkaSplitManager``:
   Non-offset filters are returned to Spark and evaluated post-scan.
 
 The pruning itself is one driver-side function, :func:`plan_segments`;
-the serving tier calls it directly and hands the surviving files to
-Spark's native parquet scan (no Python worker on its read path).
+the serving tail and the catalog's tables read through
+:func:`scan_segments`, which hands the surviving files to Spark's
+native parquet scan (no Python worker on their read path).
 
 Scale notes: ``partitions()`` runs driver-side and reads only directory
 listings + one parquet footer per segment (the same metadata a Kafka
@@ -44,11 +45,13 @@ controlled by the log layout, not by file count heuristics.
 
 from __future__ import annotations
 
+import logging
 import math
 import os
 import re
 from dataclasses import dataclass
 
+from pyspark.sql import DataFrame
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -73,6 +76,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+_log = logging.getLogger(__name__)
 
 RAW_FRAME_SCHEMA = StructType(
     [
@@ -612,7 +617,26 @@ def plan_segments(
                 cut.add(pid)
     if total == 0:
         raise KafkaLogLayoutError(f"no segment files under {path}")
+    _log.debug(
+        "plan_segments path=%s planned=%d pruned=%d cut=%s",
+        path, len(kept), total - len(kept), sorted(cut),
+    )
     return SegmentPlan(tuple(kept), total - len(kept), frozenset(cut))
+
+
+def scan_segments(spark, path: str, **bounds) -> tuple[SegmentPlan, DataFrame]:
+    """The log's one native read: :func:`plan_segments` (``bounds`` are
+    its keyword arguments) on the driver, then Spark's own parquet scan
+    of the surviving files as a raw frame — no Python DataSource
+    planning, no Python-worker read. Returns the plan with the frame:
+    pruning is segment-granular, so the caller applies its exact row
+    filters (``plan.cut`` names the partitions an offset bound cut
+    through). The file list is fixed here, like Spark's own file index;
+    a plan with no surviving segment is a zero-row frame."""
+    plan = plan_segments(path, **bounds)
+    if not plan.segments:
+        return plan, spark.createDataFrame([], RAW_FRAME_SCHEMA)
+    return plan, spark.read.schema(RAW_FRAME_SCHEMA).parquet(*plan.files)
 
 
 class KafkaLogLayoutError(Exception):
@@ -1295,25 +1319,23 @@ class KafkaSegmentStreamReader(DataSourceStreamReader):
 @dataclass
 class KafkaSegmentsEventSource:
     """Catalog :class:`~presto_rakam_kafka_spark.catalog.EventSource`
-    backed by the native ``kafka_segments`` DataSource — routes
-    ``catalog.table(project, collection, offset_ranges=...)`` through
-    Catalyst ``pushFilters`` segment pruning, so the flagship path
-    (catalog → hidden columns → offset pushdown → agg) runs end-to-end
-    on the engine's own source instead of the planning-layer rewrite
-    (the reference's equivalent full path:
-    ``KafkaMetadata`` → ``KafkaSplitManager.java:153-178`` →
-    ``KafkaConnectorPageSource``).
+    over a segment log — the connector half of the reference's full
+    path (``KafkaMetadata`` → ``KafkaSplitManager.java:153-178`` →
+    ``KafkaConnectorPageSource``), with Catalyst as the engine.
 
-    The pushed ranges become plain ``offset`` conjuncts on the raw
-    frame scan; Catalyst hands them to
-    :meth:`KafkaSegmentReader.pushFilters`, which clamps split bounds
-    and prunes whole segments by footer stats BEFORE task launch —
-    declarative pushdown, not a post-scan filter.
+    :meth:`scan` plans on the driver and lets Spark's own parquet
+    reader scan (:func:`scan_segments`): pushed ``offset_ranges``
+    become the planner's ``[min start, max end)`` bounds, so segments
+    outside them are never listed for the scan, and the exact
+    OR-of-ranges filter stays as the row-level residual. Tables with
+    ``expose_key`` scan through the ``kafka_segments`` DataSource
+    instead: a ``WHERE _key IN (…)`` on the decoded table reaches
+    :meth:`KafkaSegmentReader.pushFilters` lazily, after the frame is
+    built, and prunes segments by bloom probes there.
     """
 
     path: str
     value_format: str = "json"
-    min_splits: int = 0
     #: Writer schema for ``value_format="avro"`` payloads written under
     #: an OLDER schema than the metastore's current reader fields — the
     #: evolution input to ``compile_read_plan`` (aliases, promotions,
@@ -1333,6 +1355,17 @@ class KafkaSegmentsEventSource:
     wire_format: str = "raw"
     schema_registry: dict | str | None = None
 
+    def _codec(self):
+        from presto_rakam_kafka_spark.sources.kafka import KafkaEventSource
+
+        return KafkaEventSource(
+            bootstrap_servers="none:9092",
+            value_format=self.value_format,
+            avro_writer_schema=self.avro_writer_schema,
+            wire_format=self.wire_format,
+            schema_registry=self.schema_registry,
+        )
+
     def scan(
         self,
         spark,
@@ -1345,13 +1378,18 @@ class KafkaSegmentsEventSource:
 
         from pyspark.sql import functions as F
 
-        from presto_rakam_kafka_spark.sources.kafka import KafkaEventSource
-
-        ensure_segments_source(spark)
-        reader = spark.read.format("kafka_segments").option("path", self.path)
-        if self.min_splits:
-            reader = reader.option("minSplits", str(self.min_splits))
-        raw = reader.load()
+        if self.expose_key:
+            ensure_segments_source(spark)
+            raw = spark.read.format("kafka_segments").option(
+                "path", self.path
+            ).load()
+        else:
+            bounds = {}
+            if offset_ranges:
+                ends = [r.end for r in offset_ranges]
+                bounds["start"] = min(r.start for r in offset_ranges)
+                bounds["end"] = None if None in ends else max(ends)
+            _plan, raw = scan_segments(spark, self.path, **bounds)
         if offset_ranges:
             preds = []
             for r in offset_ranges:
@@ -1360,14 +1398,7 @@ class KafkaSegmentsEventSource:
                     p = p & (F.col("offset") < F.lit(r.end))
                 preds.append(p)
             raw = raw.filter(reduce(lambda a, b: a | b, preds))
-        codec = KafkaEventSource(
-            bootstrap_servers="none:9092",
-            value_format=self.value_format,
-            avro_writer_schema=self.avro_writer_schema,
-            wire_format=self.wire_format,
-            schema_registry=self.schema_registry,
-        )
-        return codec._decode(
+        return self._codec()._decode(
             spark, raw, project, collection, fields,
             extra_raw_cols={"key": "_key"} if self.expose_key else None,
         )
@@ -1385,8 +1416,6 @@ class KafkaSegmentsEventSource:
         streaming twin of :meth:`scan`: per-partition offset-map
         progress, executor-side per-segment splits, decode + hidden
         columns, with the A8 ``maxRowsPerBatch`` bound exposed."""
-        from presto_rakam_kafka_spark.sources.kafka import KafkaEventSource
-
         ensure_segments_source(spark)
         reader = (
             spark.readStream.format("kafka_segments")
@@ -1395,14 +1424,9 @@ class KafkaSegmentsEventSource:
         )
         if max_rows_per_batch is not None:
             reader = reader.option("maxRowsPerBatch", str(max_rows_per_batch))
-        codec = KafkaEventSource(
-            bootstrap_servers="none:9092",
-            value_format=self.value_format,
-            avro_writer_schema=self.avro_writer_schema,
-            wire_format=self.wire_format,
-            schema_registry=self.schema_registry,
+        return self._codec()._decode(
+            spark, reader.load(), project, collection, fields
         )
-        return codec._decode(spark, reader.load(), project, collection, fields)
 
 
 @_log_maintenance_locked
@@ -2466,7 +2490,6 @@ def lookup_latest_spark(
     (equality-tested)."""
     import pandas as pd
 
-    from pyspark.sql import DataFrame as _SqlDataFrame
     from pyspark.sql import functions as F
 
     selected = _select_log_partitions(path, None)
@@ -2475,7 +2498,7 @@ def lookup_latest_spark(
         route = _read_routing(path) or "offset"
     if route not in ("key", "offset"):
         raise KafkaLogLayoutError(f"unknown log routing {route!r}")
-    if not isinstance(keys, _SqlDataFrame):
+    if not isinstance(keys, DataFrame):
         keys = spark.createDataFrame(
             [(bytes(k),) for k in keys], "key BINARY"
         )
@@ -2670,7 +2693,6 @@ def lookup_history_spark(
     (equality-tested)."""
     import pandas as pd
 
-    from pyspark.sql import DataFrame as _SqlDataFrame
     from pyspark.sql import functions as F
 
     selected = _select_log_partitions(path, None)
@@ -2679,7 +2701,7 @@ def lookup_history_spark(
         route = _read_routing(path) or "offset"
     if route not in ("key", "offset"):
         raise KafkaLogLayoutError(f"unknown log routing {route!r}")
-    if not isinstance(keys, _SqlDataFrame):
+    if not isinstance(keys, DataFrame):
         keys = spark.createDataFrame(
             [(bytes(k),) for k in keys], "key BINARY"
         )

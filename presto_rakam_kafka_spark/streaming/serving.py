@@ -573,8 +573,8 @@ def _tail_scan(
 ) -> DataFrame:
     """Raw frames not yet covered by the store, read natively.
 
-    Pruning happens driver-side, in
-    :func:`~presto_rakam_kafka_spark.sources.kafka_datasource.plan_segments`:
+    Pruning happens driver-side, in the log's one planner behind
+    :func:`~presto_rakam_kafka_spark.sources.kafka_datasource.scan_segments`:
     segments wholly below their partition's HWM (or at/after
     ``up_to``), outside the closed event-time interval
     ``[ts_lo, ts_hi]`` (naive UTC datetimes, pruned by footer ts
@@ -591,17 +591,12 @@ def _tail_scan(
     The file list is fixed when the frame is built, the same moment a
     serve takes its pointer snapshot; a tail with no surviving segment
     is a zero-row frame."""
-    from presto_rakam_kafka_spark.sources.kafka_datasource import (
-        RAW_FRAME_SCHEMA,
-        plan_segments,
-    )
+    from presto_rakam_kafka_spark.sources.kafka_datasource import scan_segments
 
-    plan = plan_segments(
-        log_dir, end=up_to, lower=hwm, ts_lo=ts_lo, ts_hi=ts_hi, keys=keys
+    plan, df = scan_segments(
+        spark, log_dir, end=up_to, lower=hwm, ts_lo=ts_lo, ts_hi=ts_hi,
+        keys=keys,
     )
-    if not plan.segments:
-        return spark.createDataFrame([], RAW_FRAME_SCHEMA)
-    df = spark.read.schema(RAW_FRAME_SCHEMA).parquet(*plan.files)
     # Only a segment the bounds cut through holds rows outside them; a
     # tail of whole segments (every serve right after a tick) needs no
     # row filter at all.

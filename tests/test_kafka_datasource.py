@@ -462,11 +462,16 @@ def test_append_collision_raises_instead_of_overwriting(spark, sf_dir, tmp_path)
 
 def test_catalog_routes_native_source_with_pushdown(spark, sf_dir, log_dir):
     """catalog.table(..., offset_ranges=...) over a kafka_segments-backed
-    table: the pushed range reaches the BatchScan (absent from any
-    post-scan Filter) and the result matches the parquet ground truth."""
+    table: the range is planned on the driver (``plan_segments``) and
+    Spark's parquet reader scans exactly the surviving segments — no
+    Python DataSource in the executed plan — and the result matches the
+    parquet ground truth."""
+    from urllib.parse import urlparse
+
     from presto_rakam_kafka_spark.catalog import EventCatalog
     from presto_rakam_kafka_spark.metastore import InMemoryMetastore
     from presto_rakam_kafka_spark.plans.offset_pushdown import OffsetRange
+    from presto_rakam_kafka_spark.sources.kafka_datasource import plan_segments
 
     ms = InMemoryMetastore()
     catalog = EventCatalog(spark, ms)
@@ -490,12 +495,144 @@ def test_catalog_routes_native_source_with_pushdown(spark, sf_dir, log_dir):
     )
     # hidden columns synthesized by the native path
     assert {"_offset", "project", "collection"} <= set(df.columns)
-    # the pushed range must not re-evaluate post-scan
+    # the range prunes segments at plan time; the parquet scan reads
+    # exactly the planned files
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BatchScan kafka_segments" in plan
-    for ln in plan.splitlines():
-        if "Filter" in ln and "Runtime" not in ln:
-            assert ">= 100" not in ln and "< 300" not in ln, plan
+    assert "BatchScan kafka_segments" not in plan
+    planned = plan_segments(log_dir, 100, 300)
+    assert sorted(urlparse(u).path for u in df.inputFiles()) == sorted(
+        planned.files
+    )
+    assert planned.pruned > 0
+
+
+def _events_table(spark, sf_dir, path, **kw):
+    """A catalog with ``tpch.events`` registered over the log at ``path``."""
+    from presto_rakam_kafka_spark.catalog import EventCatalog
+    from presto_rakam_kafka_spark.metastore import InMemoryMetastore
+
+    ms = InMemoryMetastore()
+    catalog = EventCatalog(spark, ms)
+    ms.register_struct(
+        "tpch",
+        "events",
+        read_table(spark, sf_dir, "events")
+        .select("event_id", "user_id", "event_type", "value")
+        .schema,
+    )
+    catalog.register_kafka_segments("tpch", "events", path, **kw)
+    return catalog
+
+
+def test_catalog_native_table_leaves_pushdown_conf_unset(spark, sf_dir, log_dir):
+    """Only the ``expose_key`` branch registers the DataSource: a plain
+    table resolves and answers in a fresh session without setting
+    ``spark.sql.python.filterPushdown.enabled`` (or the prep marker)."""
+    from presto_rakam_kafka_spark.plans.offset_pushdown import OffsetRange
+    from presto_rakam_kafka_spark.sources.kafka_datasource import _PREPPED_MARKER
+
+    key = "spark.sql.python.filterPushdown.enabled"
+    s2 = spark.newSession()
+    s2.conf.unset(key)
+    df = _events_table(s2, sf_dir, log_dir).table(
+        "tpch", "events", offset_ranges=[OffsetRange(100, 300)]
+    )
+    exp = read_table(spark, sf_dir, "events").filter(
+        (F.col("event_id") >= 100) & (F.col("event_id") < 300)
+    )
+    assert df.count() == exp.count()
+    assert s2.conf.get(key, None) is None
+    assert s2.conf.get(_PREPPED_MARKER, None) is None
+
+
+def test_catalog_table_snapshot_is_fixed_at_build(spark, sf_dir, tmp_path):
+    """The catalog's snapshot contract: a frame's file list is fixed by
+    ``table()``. A later append is invisible to it and visible to a
+    fresh ``table()``; across ``compact_segments`` it returns the same
+    rows on the generation layout (the superseded generation outlives
+    the compaction by its retire grace) and raises on the loose layout,
+    whose files compaction deletes — never fewer rows."""
+    from presto_rakam_kafka_spark.sources.kafka_datasource import (
+        compact_segments,
+        ensure_segments_source,
+    )
+
+    ev = read_table(spark, sf_dir, "events")
+
+    def frames(lo, hi):
+        return ev.filter(
+            (F.col("event_id") >= lo) & (F.col("event_id") < hi)
+        ).select(
+            F.col("event_id").alias("offset"),
+            F.lit(None).cast("binary").alias("key"),
+            F.to_json(F.struct("event_id", "user_id", "event_type", "value"))
+            .cast("binary")
+            .alias("value"),
+            F.col("ts").alias("timestamp"),
+        )
+
+    log = str(tmp_path / "snap")
+    write_segments(frames(0, 600), log, num_partitions=2, segment_rows=100)
+    n_base, n_all = frames(0, 600).count(), frames(0, 700).count()
+    assert n_base < n_all
+    catalog = _events_table(spark, sf_dir, log)
+    before_append = catalog.table("tpch", "events")
+    ensure_segments_source(spark)  # the writer is the DataSource's
+    (
+        frames(600, 700).coalesce(1).write.format("kafka_segments")
+        .option("path", log).option("numPartitions", "2")
+        .mode("append").save()
+    )
+    assert before_append.count() == n_base
+    assert catalog.table("tpch", "events").count() == n_all
+
+    # loose layout: compaction deletes the frame's files — it raises
+    loose = catalog.table("tpch", "events")
+    compact_segments(log, target_rows=50)
+    assert os.path.isdir(os.path.join(log, "partition=0", "gen-000001"))
+    with pytest.raises(Exception, match="FILE_NOT_EXIST|does not exist"):
+        loose.count()
+
+    # generation layout: the superseded generation is still readable
+    snap = catalog.table("tpch", "events")
+    rows = sorted(snap.collect())
+    assert len(rows) == n_all
+    compact_segments(log, target_rows=10_000)
+    assert os.path.isdir(os.path.join(log, "partition=0", "gen-000002"))
+    assert sorted(snap.collect()) == rows
+    assert sorted(catalog.table("tpch", "events").collect()) == rows
+
+
+def test_plan_segments_logs_one_debug_line_per_plan(
+    spark, sf_dir, log_dir, caplog
+):
+    """Each scan's plan reports itself: one DEBUG line per
+    ``plan_segments`` call with the log path and the planned, pruned
+    and cut counts — here for one catalog scan and one serving tail."""
+    import logging
+
+    from presto_rakam_kafka_spark.plans.offset_pushdown import OffsetRange
+    from presto_rakam_kafka_spark.sources.kafka_datasource import plan_segments
+    from presto_rakam_kafka_spark.streaming.serving import _tail_scan
+
+    name = "presto_rakam_kafka_spark.sources.kafka_datasource"
+    hwm = {0: 700, 1: 700, 2: 0}
+    with caplog.at_level(logging.DEBUG, logger=name):
+        _events_table(spark, sf_dir, log_dir).table(
+            "tpch", "events", offset_ranges=[OffsetRange(100, 300)]
+        )
+        _tail_scan(spark, log_dir, hwm)
+    lines = [r.getMessage() for r in caplog.records if r.name == name]
+    assert len(lines) == 2, lines
+    for line, plan in zip(
+        lines,
+        (plan_segments(log_dir, 100, 300), plan_segments(log_dir, lower=hwm)),
+    ):
+        assert line == (
+            f"plan_segments path={log_dir} planned={len(plan.segments)} "
+            f"pruned={plan.pruned} cut={sorted(plan.cut)}"
+        )
+        assert plan.pruned > 0 and plan.segments
 
 
 def test_sub_split_reads_only_overlapping_row_groups(tmp_path, monkeypatch):
@@ -729,16 +866,19 @@ def test_stream_reader_max_rows_per_batch(spark, sf_dir, tmp_path):
 def test_catalog_native_avro_scan_pushdown_and_evolution(spark, sf_dir):
     """The reference's production scan shape (offset pruning + Avro
     decode in ONE scan, `KafkaConnectorPageSource.java:82-123` +
-    `KafkaSplitManager.java:153-178`): the pushed range must be consumed
-    by the BatchScan (absent from every post-scan Filter), the v1→evolved
-    decode must resolve aliases/promotion/enum/default, and the result
-    must equal the parquet ground truth over the same range."""
+    `KafkaSplitManager.java:153-178`): the range must be planned on the
+    driver so the parquet scan reads exactly the planned files (no
+    Python DataSource in the executed plan), the v1→evolved decode must
+    resolve aliases/promotion/enum/default, and the result must equal
+    the parquet ground truth over the same range."""
+    from urllib.parse import urlparse
+
     from presto_rakam_kafka_spark import queries_dsv2 as qd
     from presto_rakam_kafka_spark.catalog import EventCatalog
     from presto_rakam_kafka_spark.metastore import InMemoryMetastore
     from presto_rakam_kafka_spark.plans.offset_pushdown import OffsetRange
+    from presto_rakam_kafka_spark.sources.kafka_datasource import plan_segments
 
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     log_dir = qd._avro_segment_log_dir(spark, sf_dir)
     ms = InMemoryMetastore()
     catalog = EventCatalog(spark, ms)
@@ -768,12 +908,18 @@ def test_catalog_native_avro_scan_pushdown_and_evolution(spark, sf_dir):
         r["event_id"]: r["user_id"] for r in exp.select("event_id", "user_id").collect()
     }
     assert all(exp_users[r["_offset"]] == r["user_id"] for r in rows)
-    # the pushed range is consumed at plan time, not re-filtered post-scan
+    # the range is planned on the driver; the parquet scan reads
+    # exactly the planned files, with the range pushed into it (at the
+    # test scale each partition is one 500-row segment, so the range
+    # prunes row groups, not whole segments)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BatchScan kafka_segments" in plan
-    for ln in plan.splitlines():
-        if "Filter" in ln and "Runtime" not in ln:
-            assert ">= 100" not in ln and "< 300" not in ln, plan
+    assert "BatchScan kafka_segments" not in plan
+    planned = plan_segments(log_dir, 100, 300)
+    assert sorted(urlparse(u).path for u in df.inputFiles()) == sorted(
+        planned.files
+    )
+    assert "GreaterThanOrEqual(offset,100)" in plan, plan
+    assert "LessThan(offset,300)" in plan, plan
 
 
 def test_catalog_avro_all_corrupt_segment_with_timestamp_field(spark, tmp_path):

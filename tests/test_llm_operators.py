@@ -1312,6 +1312,23 @@ def test_ivfpq_refined_recall_on_clustered_corpus(spark):
     assert r_refined >= r_adc + 0.2, (r_refined, r_adc)
 
 
+def test_ivfpq_codebooks_fold_out_of_the_optimized_plan(spark, sf_dir):
+    """Each IVF/PQ codebook rides as one ``from_json`` literal that
+    ConstantFolding evaluates at optimization time: the analyzed plan
+    of an IVF/PQ query holds the ``from_json`` calls, the optimized
+    plan none (no JSON parsing per row or per task)."""
+    emb = read_table(spark, sf_dir, "embeddings")
+    df = similarity.ivfpq_topk(
+        emb, emb.filter(F.col("vec_id") < 10), "embedding", "vec_id",
+        dim=64, k=5,
+    )
+    qe = df._jdf.queryExecution()
+    assert "from_json" in qe.analyzed().toString()
+    optimized = qe.optimizedPlan().toString()
+    assert "from_json" not in optimized
+    assert "JsonToStructs" not in optimized
+
+
 def test_ivfpq_pandas_codec_equals_expr_codec(spark, sf_dir):
     """The production encoder (Arrow mapInPandas, two BLAS matmuls) and
     the oracle encoder (Catalyst expressions) must assign identical
