@@ -1,5 +1,7 @@
 """The one commit protocol of the generation-sequence stores: the
-serving store, the rollup state and the CDC snapshot.
+serving store, the rollup state, the CDC snapshot and each
+``partition=N/`` of a segment log (whose generations carry no
+manifest: a partition's segments are its generation dir's listing).
 
 A store is a directory of immutable generation dirs ``gen-NNNNNNNNNN``
 plus a ``_CURRENT`` pointer, the JSON object ``{"gen", "txns",
@@ -37,6 +39,7 @@ from __future__ import annotations
 import json
 import logging
 import os
+import re
 import shutil
 import time
 from contextlib import suppress
@@ -58,6 +61,8 @@ FLIP_LOCK = ".FLIP_LOCK"
 #: holder releases via the kernel)
 _FLIP_LOCK_TIMEOUT_S = 20.0
 
+GEN_DIR = re.compile(r"^gen-(\d+)$")
+
 _log = logging.getLogger(__name__)
 
 
@@ -68,7 +73,7 @@ class FencedMaintenanceError(RuntimeError):
     its write dir is deleted and the pointer is untouched."""
 
 
-def _fsync(path: str) -> None:
+def fsync(path: str) -> None:
     fd = os.open(path, os.O_RDONLY)
     try:
         os.fsync(fd)
@@ -82,9 +87,9 @@ def _fsync_tree(root: str) -> int:
     n = 0
     for d, _dirs, files in os.walk(root, topdown=False):
         for f in files:
-            _fsync(os.path.join(d, f))
+            fsync(os.path.join(d, f))
         n += len(files)
-        _fsync(d)
+        fsync(d)
     return n
 
 
@@ -99,7 +104,7 @@ def write_json(path: str, obj) -> None:
         fh.flush()
         os.fsync(fh.fileno())
     os.replace(tmp, path)
-    _fsync(d or ".")
+    fsync(d or ".")
 
 
 def read_pointer(store: str) -> tuple[str | None, dict[str, int], dict]:
@@ -127,9 +132,12 @@ def write_pointer(store: str, gen: str, txns: dict, payload: dict) -> None:
     )
 
 
+def _seq(gen: str) -> int:
+    return int(gen.rsplit("-", 1)[1])
+
+
 def next_gen(gen: str | None) -> str:
-    seq = 0 if gen is None else int(gen.rsplit("-", 1)[1]) + 1
-    return f"gen-{seq:010d}"
+    return f"gen-{0 if gen is None else _seq(gen) + 1:010d}"
 
 
 def read_manifest(store: str, gen: str) -> dict:
@@ -206,7 +214,7 @@ def fenced_flip(
                 shutil.rmtree(final)
             os.rename(wdir, final)
         for parent in {os.path.dirname(final) for _w, final in renames}:
-            _fsync(parent)
+            fsync(parent)
         fence()
         write_pointer(store, gen, txns, payload)
     return wait_ms
@@ -223,18 +231,20 @@ def gc(
     superseded (the ``gc_utils`` marker), so a slow reader keeps its
     snapshot across any number of commits. It then loses only the files
     no retained generation's manifest references; its own manifest
-    always goes, so reading it fails loudly. Paths are compared
-    store-relative and normalized, so an aliased store path (trailing
-    slash, ``..``) never deletes a referenced file. Returns the removed
-    generation names."""
+    always goes, so reading it fails loudly. Generations order by
+    number, so a shorter legacy ``gen-000001`` sorts below
+    ``gen-0000000002``. Paths are compared store-relative and
+    normalized, so an aliased store path (trailing slash, ``..``) never
+    deletes a referenced file. Returns the removed generation names."""
     root = os.path.realpath(store)
     if current is None:
         current = read_pointer(root)[0]
     gens = sorted(
-        e for e in os.listdir(root)
-        if e.startswith("gen-") and os.path.isdir(os.path.join(root, e))
+        (e for e in os.listdir(root)
+         if GEN_DIR.match(e) and os.path.isdir(os.path.join(root, e))),
+        key=_seq,
     )
-    older = [g for g in gens if current is not None and g < current]
+    older = [g for g in gens if current is not None and _seq(g) < _seq(current)]
     victims = older[: max(0, len(older) - max(0, keep_last - 1))]
     for g in gens:
         if g not in victims:

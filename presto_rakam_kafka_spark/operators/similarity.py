@@ -1651,19 +1651,15 @@ def _read_manifest(path: str) -> list[str]:
 
 
 def _flip_manifest(path: str, deltas: list[str]) -> None:
-    """Two-phase manifest flip — the same observable-atomicity
-    discipline as the segment compactor's `_CURRENT` pointer
-    (`kafka_datasource.py:compact_segments`): write the new manifest
-    beside the live one, then `os.replace` (atomic POSIX rename), so
-    a concurrent reader sees either the old delta set or the new one,
-    never a half-written file or a partially-visible delta."""
-    import json
+    """Replace the index manifest atomically and durably with
+    :func:`genstore.write_json` — the generation stores' pointer write —
+    so a concurrent reader sees either the old delta set or the new
+    one, never a half-written file or a partially-visible delta."""
     import os
 
-    tmp = os.path.join(path, "_CURRENT.tmp")
-    with open(tmp, "w") as f:
-        json.dump({"deltas": deltas}, f)
-    os.replace(tmp, os.path.join(path, "_CURRENT"))
+    from presto_rakam_kafka_spark import genstore
+
+    genstore.write_json(os.path.join(path, "_CURRENT"), {"deltas": deltas})
 
 
 def init_ivfpq_index(

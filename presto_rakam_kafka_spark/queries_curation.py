@@ -981,9 +981,9 @@ def sim_topk_ivfpq_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF-PQ index is initialized on HALF the corpus (even vec_ids), the
     other half arrives later as an UPSERT — coded against the frozen
     geometry, written as a second list-partitioned delta, made visible
-    by an atomic `_CURRENT` manifest flip (the segment compactor's
-    two-phase pointer discipline). The probe reads the manifest's delta
-    union with the same partition-pruned `list_id IN (...)` filter, and
+    by an atomic `_CURRENT` manifest flip (`genstore.write_json`, the
+    generation stores' pointer write). The probe reads the manifest's
+    delta union with the same partition-pruned `list_id IN (...)` filter, and
     the oracle is the FULL-corpus IVF-PQ result — probe-after-upsert
     must equal a from-scratch rebuild, which is the upsert correctness
     contract."""

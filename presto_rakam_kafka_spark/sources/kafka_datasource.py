@@ -49,6 +49,8 @@ import logging
 import math
 import os
 import re
+import sys
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -77,6 +79,9 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from presto_rakam_kafka_spark import genstore
+from presto_rakam_kafka_spark.locks import FlockTimeoutError, flock_guard
+
 _log = logging.getLogger(__name__)
 
 RAW_FRAME_SCHEMA = StructType(
@@ -92,260 +97,93 @@ RAW_FRAME_SCHEMA = StructType(
 
 _PARTITION_DIR = re.compile(r"^partition=(\d+)$")
 _SEGMENT_FILE = re.compile(r"^segment-(\d+)\.parquet$")
-_GEN_DIR = re.compile(r"^gen-(\d+)$")
 
-#: Per-partition generation pointer (compaction atomicity). When present
-#: in ``partition=N/``, it names the ``gen-NNNNNN`` subdirectory holding
-#: the partition's CURRENT segment files; the flat layout (segments
-#: directly in ``partition=N/``) is generation 0. Compaction publishes a
-#: new generation and flips this pointer with one atomic ``os.replace``,
-#: so a concurrent planner always enumerates exactly one generation —
-#: never a mix of halves (the silent under-scan ADVICE r3 flagged).
-_GEN_POINTER = "_CURRENT"
+# Each ``partition=N/`` is a :mod:`genstore` store: its ``_CURRENT``
+# pointer names the ``gen-NNNNNNNNNN`` subdirectory holding the
+# partition's current segment files, and maintenance rewrites publish a
+# new generation with genstore's fenced flip, so a concurrent planner
+# always enumerates exactly one generation. A partition with no pointer
+# is the flat layout (segments directly in ``partition=N/``); its first
+# maintenance commit migrates it.
+_TIER = sys.modules[__name__]
 
 
 def _resolve_partition_dir(pdir: str) -> str:
     """Directory whose segment files are CURRENT for this partition:
-    the generation named by ``_CURRENT`` if present, else ``pdir``."""
-    ptr = os.path.join(pdir, _GEN_POINTER)
-    try:
-        with open(ptr) as fh:
-            gen = fh.read().strip()
-    except OSError:
+    the generation named by its pointer if present, else ``pdir``."""
+    gen = genstore.read_pointer(pdir)[0]
+    if gen is None:
         return pdir
-    if not _GEN_DIR.match(gen):
-        raise KafkaLogLayoutError(f"{ptr} names invalid generation {gen!r}")
+    if not genstore.GEN_DIR.match(gen):
+        raise KafkaLogLayoutError(
+            f"{pdir}: pointer names invalid generation {gen!r}"
+        )
     gdir = os.path.join(pdir, gen)
     if not os.path.isdir(gdir):
-        raise KafkaLogLayoutError(f"{ptr} points at missing generation {gdir}")
+        raise KafkaLogLayoutError(
+            f"{pdir}: pointer names missing generation {gdir}"
+        )
     return gdir
 
 
 class ConcurrentLogMaintenanceError(RuntimeError):
-    """A partition's generation pointer moved between this maintenance
-    op's read and its publish — a second maintainer (on another host;
-    same-host ops serialize on the log's flock) rewrote it first. The
-    stale publish is refused: last-writer-winning the pointer here can
-    RESURRECT purged keys (a compaction built from the pre-purge
-    generation flipping over a purge's commit) — GDPR-severity, not
-    just lost work."""
+    """A log op waited ``_MAINT_LOCK_TIMEOUT_S`` for the log's
+    maintenance lock behind a holder that neither finished nor crashed.
+    (A stale publish — another maintainer, on a host the flock does not
+    reach, flipped the partition first — raises
+    :class:`genstore.FencedMaintenanceError`.)"""
 
 
-#: how long a maintenance op waits in the queue behind a holder before
-#: giving up. Ops legitimately queue for the length of one whole Spark
-#: rewrite (minutes at scale) — this bound is a HUNG-holder detector
-#: (wedged executor, stuck NFS; a crashed holder releases via the
-#: kernel instantly), not a contention error (VERDICT r12 #1).
+#: how long a log op waits in the queue behind a holder before giving
+#: up. Ops legitimately queue for the length of one whole Spark rewrite
+#: (minutes at scale) — this bound is a HUNG-holder detector (wedged
+#: executor, stuck NFS; a crashed holder releases via the kernel
+#: instantly), not a contention error.
 _MAINT_LOCK_TIMEOUT_S = 600.0
 
 
-def _log_maintenance_locked(fn):
-    """Serialize whole log-MAINTENANCE ops (compaction, key compaction,
-    purge, retention) on one log dir via a kernel flock (round 12).
-    Without it, two concurrent ops that both resolved the same current
-    generation race ``os.makedirs(gen-N+1)`` — the loser crashes after
-    doing all its work, and a maintainer that crashes between makedirs
-    and the pointer flip leaves an orphan generation dir that BRICKS
-    every later op (makedirs raises FileExistsError forever). Under the
-    lock, ops queue instead of colliding, and an existing un-pointed
-    generation dir is provably crash residue — safe to reclaim (see
-    ``_fresh_gen_dir``). The queue wait is BOUNDED (round 13): a hung
-    holder raises :class:`ConcurrentLogMaintenanceError` naming the
-    holder after ``_MAINT_LOCK_TIMEOUT_S`` instead of blocking every
-    later op forever. Degrades to fence-only cross-host
-    (``_publish_gen_flip``)."""
-    import functools
-    import inspect
-
-    from presto_rakam_kafka_spark.locks import FlockTimeoutError, flock_guard
-
-    sig = inspect.signature(fn)
-    if "path" not in sig.parameters:
-        raise TypeError(
-            f"@_log_maintenance_locked requires a 'path' parameter on "
-            f"{fn.__name__} (positional string-sniffing silently locked "
-            f"the wrong file — round-12 second review)"
-        )
-
-    @functools.wraps(fn)
-    def wrapper(*args, **kwargs):
-        path = sig.bind(*args, **kwargs).arguments["path"]
-        if not os.path.isdir(path):
-            return fn(*args, **kwargs)  # let A3 strictness raise
-        try:
-            guard = flock_guard(
-                os.path.join(path, ".MAINT_LOCK"),
-                timeout_s=_MAINT_LOCK_TIMEOUT_S,
-                op_name=fn.__name__,
-            )
-            with guard as held:
-                token = _MAINT_LOCK_HELD.set(bool(held))
-                try:
-                    return fn(*args, **kwargs)
-                finally:
-                    _MAINT_LOCK_HELD.reset(token)
-        except FlockTimeoutError as exc:
-            raise ConcurrentLogMaintenanceError(
-                f"log maintenance op {fn.__name__} on {path} timed out "
-                f"waiting for the log's maintenance lock: {exc}"
-            ) from exc
-
-    return wrapper
+@contextmanager
+def _maint_lock(path: str, op_name: str):
+    """Hold the log's ``.MAINT_LOCK`` flock for a whole maintenance op
+    or append commit, so they queue instead of interleaving (an append
+    renamed into a generation a rewrite has already listed would be
+    flipped past and lost). Yields whether the flock is held: only then
+    may a commit reclaim other writers' leaked write dirs. Without
+    flock semantics the generation fence alone guards."""
+    if not os.path.isdir(path):
+        raise KafkaLogLayoutError(f"cannot list log dir {path}")
+    try:
+        with flock_guard(
+            os.path.join(path, ".MAINT_LOCK"),
+            timeout_s=_MAINT_LOCK_TIMEOUT_S,
+            op_name=op_name,
+        ) as held:
+            yield held
+    except FlockTimeoutError as exc:
+        raise ConcurrentLogMaintenanceError(
+            f"log op {op_name} on {path} timed out waiting for the log's "
+            f"maintenance lock: {exc}"
+        ) from exc
 
 
-#: whether the current maintenance op actually HOLDS the log flock —
-#: set by the decorator; crash-residue reclaim is only safe under it.
-import contextvars as _contextvars  # noqa: E402
-
-_MAINT_LOCK_HELD = _contextvars.ContextVar("log_maint_lock_held",
-                                           default=False)
-
-
-def _fresh_gen_dir(gdir: str) -> str:
-    """Create and return a UNIQUELY-NAMED write directory for the next
-    generation (``gen-N.w-<random>``); the op writes its files there
-    and :func:`_publish_gen_flip` renames it to ``gen-N`` at publish
-    (ADVICE r12 #3). The round-12 form created ``gen-N`` directly and
-    reclaimed an existing dir under the flock — but on FUSE/network
-    mounts where flock succeeds host-locally WITHOUT cross-host
-    semantics, `held=True` is not exclusivity: the reclaim could
-    delete a live remote maintainer's in-progress generation, and that
-    writer's remaining files then landed inside the reclaimer's dir —
-    spliced partial data the pointer fence cannot detect (the pointer
-    never moved). A random-suffixed write dir shares a path with
-    NOBODY, closing the splice entirely; name collisions move to the
-    publish rename, where the fence and the lock judge them.
-
-    Stale ``*.w-*`` siblings (a maintainer that crashed mid-write) are
-    reclaimed here when this op HOLDS the flock AND the dir has been
-    quiet past the shared GC grace — on a FUSE mount where flock
-    succeeds host-locally without cross-host semantics, ``held=True``
-    is not exclusivity, and an age gate keeps a LIVE remote writer's
-    in-progress dir (fresh mtimes) out of the reclaim (round-13 second
-    review); true crash residue ages past the grace and is collected
-    by a later locked op. Unreclaimed residue is invisible to every
-    reader (the pointer never names a ``.w-`` dir) — merely leaked."""
-    import shutil as _shutil
-
-    from presto_rakam_kafka_spark.gc_utils import (
-        GC_GRACE_S,
-        newest_content_age_s,
-    )
-
-    pdir = os.path.dirname(gdir)
-    if _MAINT_LOCK_HELD.get():
-        for e in os.listdir(pdir):
-            if ".w-" not in e or not e.startswith("gen-"):
-                continue
-            age = newest_content_age_s(os.path.join(pdir, e))
-            if age is not None and age > GC_GRACE_S:
-                _shutil.rmtree(os.path.join(pdir, e), ignore_errors=True)
-    wdir = f"{gdir}.w-{os.urandom(4).hex()}"
-    os.makedirs(wdir)
-    return wdir
+@contextmanager
+def _next_generation(pdir: str, cur: str, old_files: list[str], held: bool):
+    """Yield the write dir of the partition's next generation — ``cur``
+    (the dir the op listed) is the one it replaces — and on leaving
+    publish it: genstore's fenced flip, then graced GC of the
+    superseded generation. A flat-layout partition's loose segments
+    are removed once the flip has migrated it."""
+    gen_read = None if cur == pdir else os.path.basename(cur)
+    with genstore.Generation(pdir, gen_read, _TIER, reclaim=held) as g:
+        yield g.dir
+        g.commit(genstore.read_pointer(pdir)[1], keep_last=1)
+    if gen_read is None:
+        for f in old_files:
+            os.remove(os.path.join(pdir, f))
 
 
-def _publish_gen_flip(
-    pdir: str, cur_read: str, gen_name: str, wdir: str | None = None
-) -> None:
-    """Flip the partition's generation pointer iff the current
-    generation is still the one this op READ (``cur_read`` — the
-    resolved dir its rewrite was built from). Same-host ops can't race
-    (the maintenance flock), so a moved pointer means a maintainer on
-    a host the flock doesn't reach — refuse, because building on a
-    stale generation and winning the pointer silently undoes the other
-    op's rewrite (a purge's erasure, a compaction's dedup).
-
-    ``wdir`` (round 13) is the op's random-suffixed write directory,
-    renamed to ``gen_name`` HERE, after the fence passes: an existing
-    ``gen-N`` at that point is crash residue of a pre-round-13
-    maintainer (its pointer never flipped, no reader resolves into it)
-    and is reclaimed under the held flock; without the flock it may be
-    a concurrent maintainer's just-written generation — fail loudly.
-
-    The fence is RE-CHECKED immediately before each mutation (the
-    residue reclaim and the pointer replace): on a FUSE mount where
-    flock succeeds host-locally without cross-host semantics, a remote
-    maintainer's commit can land anywhere inside this function, and a
-    single up-front check left the whole publish as the race window —
-    a stale compaction could then rmtree a just-committed PURGE
-    generation and resurrect its keys (round-13 second review). The
-    re-checks shrink that window to the sub-microsecond class the
-    fence-only degrade documents; true cross-host atomicity remains
-    what it always was — the flock where it spans, the fence
-    everywhere."""
-    import shutil as _shutil
-
-    def _fence() -> None:
-        if _resolve_partition_dir(pdir) != cur_read:
-            raise ConcurrentLogMaintenanceError(
-                f"partition {pdir}: generation moved from "
-                f"{os.path.basename(cur_read)!r} during this maintenance "
-                f"op; refusing stale publish {gen_name!r} (another "
-                f"maintainer committed first — rerun against the new "
-                f"generation)"
-            )
-
-    _fence()
-    if wdir is not None:
-        gdir = os.path.join(pdir, gen_name)
-        if os.path.isdir(gdir):
-            if not _MAINT_LOCK_HELD.get():
-                raise ConcurrentLogMaintenanceError(
-                    f"generation dir {gdir} already exists and this "
-                    f"filesystem has no flock semantics — cannot tell "
-                    f"crash residue from a concurrent maintainer's "
-                    f"generation; remove it manually if the other "
-                    f"maintainer is known dead"
-                )
-            _fence()  # a racer committing THIS name must win, not be rmtree'd
-            _shutil.rmtree(gdir)
-        os.rename(wdir, gdir)
-    _fence()  # last look before the point of no return
-    tmp = os.path.join(pdir, f".{_GEN_POINTER}.tmp")
-    with open(tmp, "w") as fh:
-        fh.write(gen_name)
-    os.replace(tmp, os.path.join(pdir, _GEN_POINTER))
-
-
-def _retire_superseded(pdir: str, grace_s: float | None = None) -> None:
-    """Reclaim generation dirs below the pointed one, each surviving
-    for a TIME grace after first observed superseded (round 13, VERDICT
-    r12 #2b — the segment-log twin of the serving store's GC): the
-    round-12 form rmtree'd the superseded generation immediately after
-    the flip, so a planner that resolved it just before a compaction
-    lost its files mid-scan (loud failure + retry, but at 100 TB a
-    long export scan would retry forever against a busy log). Every
-    reader resolves through the pointer, so lingering superseded dirs
-    are invisible; disk is bounded by (maintenance frequency within
-    the grace) × generation size. Legacy loose-file layouts (pointer
-    still at the partition root) have no dir to retire — their files
-    are removed immediately by the op, the pre-round-13 behavior."""
-    import shutil as _shutil
-
-    from presto_rakam_kafka_spark.gc_utils import GC_GRACE_S, retirement_age_s
-
-    eff = _GEN_RETIRE_GRACE_S if grace_s is None else float(grace_s)
-    if eff is None:
-        eff = GC_GRACE_S
-    cur = _resolve_partition_dir(pdir)
-    if cur == pdir:
-        return  # legacy loose-file layout: nothing dir-shaped to retire
-    cur_name = os.path.basename(cur)
-    for e in sorted(os.listdir(pdir)):
-        if not _GEN_DIR.match(e) or e >= cur_name:
-            continue  # zero-padded names: string order == numeric order
-        gdir = os.path.join(pdir, e)
-        if eff > 0:
-            age = retirement_age_s(gdir)
-            if age is None or age < eff:
-                continue
-        _shutil.rmtree(gdir, ignore_errors=True)
-
-
-#: segment-log retention for superseded generations — module-level so
-#: operators (and tests) can tune it; None defers to gc_utils.GC_GRACE_S.
-_GEN_RETIRE_GRACE_S: float | None = None
+#: test-injection point: called right before each partition's flip
+_before_flip_hook = None
 
 
 def vacuum_log(
@@ -353,15 +191,13 @@ def vacuum_log(
     grace_s: float | None = None,
 ) -> None:
     """Reclaim superseded generation dirs across the log — the Delta
-    VACUUM counterpart for the segment store. Runs under the log's
-    maintenance flock; ``grace_s=0.0`` is the force-override (caller
-    asserts no reader is mid-scan on a superseded generation)."""
-    from presto_rakam_kafka_spark.locks import flock_guard
-
-    with flock_guard(os.path.join(path, ".MAINT_LOCK"),
-                     timeout_s=_MAINT_LOCK_TIMEOUT_S, op_name="vacuum_log"):
-        for pid, pdir, _cur, _files in _select_log_partitions(path, partitions):
-            _retire_superseded(pdir, grace_s=grace_s)
+    VACUUM counterpart for the segment store: :func:`genstore.gc` per
+    partition under the log's maintenance lock. ``grace_s=0.0`` is the
+    force-override (caller asserts no reader is mid-scan on a
+    superseded generation)."""
+    with _maint_lock(path, "vacuum_log"):
+        for _pid, pdir, _cur, _files in _select_log_partitions(path, partitions):
+            genstore.gc(pdir, grace_s=grace_s)
 
 
 def _segment_meta(fpath: str) -> tuple[int | None, int | None, int]:
@@ -968,10 +804,12 @@ class KafkaSegmentWriter(DataSourceWriter):
     appends a DataFrame of raw frames to a segment log with a TWO-PHASE
     publish — tasks stage parquet segments under ``.staging-<job>/``,
     the driver's :meth:`commit` renames them into ``partition=N/`` in
-    one pass, and :meth:`abort` discards the staging dir. A failed or
-    speculative task can never leave a half-visible segment, which is
-    the reference's missing sink made exactly-once (same guarantee as
-    ``streaming/sinks.py`` foreachBatch, here as a native source API).
+    one pass under the log's maintenance lock (each staged file fsynced
+    before its rename, each partition dir after), and :meth:`abort`
+    discards the staging dir. A failed or speculative task can never
+    leave a half-visible segment, which is the reference's missing sink
+    made exactly-once (same guarantee as ``streaming/sinks.py``
+    foreachBatch, here as a native source API).
 
     Frames route to partitions by ``pmod(offset, numPartitions)`` (the
     keyed-producer fixture convention of :func:`write_segments`).
@@ -1065,53 +903,57 @@ class KafkaSegmentWriter(DataSourceWriter):
     def commit(self, messages) -> None:
         import shutil
 
-        if self._overwrite:
-            for e in os.listdir(self._path):
-                if _PARTITION_DIR.match(e):
-                    shutil.rmtree(os.path.join(self._path, e))
-        # Resolve every rename target FIRST so a first-offset collision
-        # (documented-unique, but documentation is not enforcement —
-        # ADVICE r3) aborts the whole commit before any segment becomes
-        # visible, instead of silently overwriting committed data or
-        # publishing half a batch.
-        renames: list[tuple[str, str]] = []
-        for msg in messages:
-            if msg is None:
-                continue
-            for fpath, pid, first in msg.files:
+        staged = [f for msg in messages if msg is not None for f in msg.files]
+        for fpath, _pid, _first in staged:
+            genstore.fsync(fpath)
+        os.makedirs(self._path, exist_ok=True)
+        # under the maintenance lock, so an append queues behind a
+        # rewrite instead of landing in a generation it then flips past
+        with _maint_lock(self._path, "append"):
+            if self._overwrite:
+                for e in os.listdir(self._path):
+                    if _PARTITION_DIR.match(e):
+                        shutil.rmtree(os.path.join(self._path, e))
+            # Resolve every rename target FIRST so a first-offset
+            # collision (documented-unique, not enforced) aborts the
+            # whole commit before any segment becomes visible, instead
+            # of silently overwriting committed data or publishing half
+            # a batch.
+            renames: list[tuple[str, str]] = []
+            for fpath, pid, first in staged:
                 pdir = os.path.join(self._path, f"partition={pid}")
                 os.makedirs(pdir, exist_ok=True)
                 target = os.path.join(
                     _resolve_partition_dir(pdir), f"segment-{first}.parquet"
                 )
                 renames.append((fpath, target))
-        targets = [t for _, t in renames]
-        clash = [t for t in targets if os.path.exists(t)]
-        dup = len(targets) != len(set(targets))
-        if clash or dup:
+            targets = [t for _, t in renames]
+            clash = [t for t in targets if os.path.exists(t)]
+            if clash or len(targets) != len(set(targets)):
+                shutil.rmtree(self._staging, ignore_errors=True)
+                raise KafkaLogLayoutError(
+                    "append would overwrite an existing segment (first "
+                    "offsets must be unique per partition): "
+                    f"{clash or 'duplicate within batch'}"
+                )
+            for fpath, target in renames:
+                os.replace(fpath, target)
+            for d in {os.path.dirname(t) for t in targets}:
+                genstore.fsync(d)
             shutil.rmtree(self._staging, ignore_errors=True)
-            raise KafkaLogLayoutError(
-                "append would overwrite an existing segment (first offsets "
-                f"must be unique per partition): {clash or 'duplicate within batch'}"
-            )
-        for fpath, target in renames:
-            os.replace(fpath, target)
-        shutil.rmtree(self._staging, ignore_errors=True)
-        _write_routing(self._path, "offset")
-        if self._maintain_blooms:
-            # point-lookup index upkeep rides the commit: index ONLY the
-            # segments this batch appended (plus any the sidecar set is
-            # missing — self-healing), costing O(new segments) per
-            # trigger. The sidecars are per-segment and atomically
-            # replaced, so a crash between renames and upkeep leaves an
-            # unindexed (slower, never incorrect) segment that the next
-            # commit or a manual update_key_blooms picks up.
-            touched = sorted(
-                {pid for msg in messages if msg is not None
-                 for _f, pid, _first in msg.files}
-            )
-            if touched:
-                update_key_blooms(self._path, partitions=touched)
+            _write_routing(self._path, "offset")
+            if self._maintain_blooms:
+                # point-lookup index upkeep rides the commit: index ONLY
+                # the segments this batch appended (plus any the sidecar
+                # set is missing — self-healing), costing O(new
+                # segments) per trigger. The sidecars are per-segment
+                # and atomically replaced, so a crash between renames
+                # and upkeep leaves an unindexed (slower, never
+                # incorrect) segment that the next commit or a manual
+                # update_key_blooms picks up.
+                touched = sorted({pid for _f, pid, _first in staged})
+                if touched:
+                    update_key_blooms(self._path, partitions=touched)
 
     def abort(self, messages) -> None:
         import shutil
@@ -1429,7 +1271,20 @@ class KafkaSegmentsEventSource:
         )
 
 
-@_log_maintenance_locked
+def _write_chunks(table, wdir: str, target_rows: int) -> int:
+    """Write an offset-sorted table into ``wdir`` as ``target_rows``-row
+    ``segment-<first offset>.parquet`` files; returns how many."""
+    import pyarrow.parquet as pq
+
+    n = 0
+    for start in range(0, table.num_rows, target_rows):
+        chunk = table.slice(start, target_rows)
+        first = chunk["offset"][0].as_py()
+        pq.write_table(chunk, os.path.join(wdir, f"segment-{first}.parquet"))
+        n += 1
+    return n
+
+
 def compact_segments(
     path: str,
     target_rows: int = 100_000,
@@ -1438,76 +1293,38 @@ def compact_segments(
     """Compact each partition's many small segments into few
     ``target_rows``-sized ones — the small-files answer for a log that
     accumulated tiny producer batches (at 100 TB, scan parallelism
-    should come from ``minSplits`` sub-ranges of big segments, not from
-    thousands of tiny files each costing a footer read + task).
+    should come from big segments, not from thousands of tiny files
+    each costing a footer read + task).
 
     Offsets, frame bytes, and ordering are preserved exactly; only the
     file boundaries change. Publication is **observable-atomic per
-    partition** (the round-3 swap deleted old files before renaming new
-    ones in, leaving a window where a concurrent planner saw an empty
-    dir and silently under-scanned — ADVICE r3): the compacted segments
-    are written into a fresh ``gen-NNNNNN/`` generation directory, then
-    the partition's ``_CURRENT`` pointer file is flipped with one atomic
-    ``os.replace``, then the superseded generation is removed. A planner
-    (:func:`_enumerate_segments`) always resolves the pointer first and
-    enumerates exactly one generation — never a mix of halves, never an
-    empty window. A scan already in flight across the flip may fail
-    loudly on a deleted file (Spark retries the task / fails the query);
-    it can never silently drop rows. Returns
+    partition**: the compacted segments are written into the
+    partition's next :mod:`genstore` generation and published by its
+    fenced pointer flip; the superseded generation is retired after the
+    GC grace. A planner (:func:`_enumerate_segments`) always resolves
+    the pointer first and enumerates exactly one generation — never a
+    mix of halves, never an empty window. Raises on a log with no
+    partition dirs (A3 strictness). Returns
     {partition_id: (files_before, files_after)}.
     """
-    import shutil
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     report: dict[int, tuple[int, int]] = {}
-    try:
-        entries = os.listdir(path)
-    except OSError as exc:
-        raise KafkaLogLayoutError(f"cannot list log dir {path}") from exc
-    for e in sorted(entries):
-        m = _PARTITION_DIR.match(e)
-        if not m:
-            continue
-        pid = int(m.group(1))
-        if partitions is not None and pid not in partitions:
-            continue
-        pdir = os.path.join(path, e)
-        cur = _resolve_partition_dir(pdir)
-        old_files = sorted(f for f in os.listdir(cur) if _SEGMENT_FILE.match(f))
-        if len(old_files) <= 1:
-            report[pid] = (len(old_files), len(old_files))
-            continue
-        table = pa.concat_tables(
-            [pq.read_table(os.path.join(cur, f)) for f in old_files]
-        ).sort_by("offset")
-        cur_gen = 0
-        if cur != pdir:
-            cur_gen = int(_GEN_DIR.match(os.path.basename(cur)).group(1))
-        gen_name = f"gen-{cur_gen + 1:06d}"
-        gdir = os.path.join(pdir, gen_name)
-        wdir = _fresh_gen_dir(gdir)  # unique write dir, renamed at publish
-        n_new = 0
-        for start in range(0, table.num_rows, target_rows):
-            chunk = table.slice(start, target_rows)
-            first = chunk["offset"][0].as_py()
-            pq.write_table(chunk, os.path.join(wdir, f"segment-{first}.parquet"))
-            n_new += 1
-        # atomic publish: rename the write dir + flip the pointer
-        _publish_gen_flip(pdir, cur, gen_name, wdir=wdir)
-        # retire superseded state: loose legacy files immediately (no
-        # dir to grace), generation dirs via the time-graced reclaim
-        if cur == pdir:
-            for f in old_files:
-                os.remove(os.path.join(pdir, f))
-        else:
-            _retire_superseded(pdir)
-        report[pid] = (len(old_files), n_new)
+    with _maint_lock(path, "compact_segments") as held:
+        for pid, pdir, cur, old_files in _select_log_partitions(path, partitions):
+            if len(old_files) <= 1:
+                report[pid] = (len(old_files), len(old_files))
+                continue
+            table = pa.concat_tables(
+                [pq.read_table(os.path.join(cur, f)) for f in old_files]
+            ).sort_by("offset")
+            with _next_generation(pdir, cur, old_files, held) as wdir:
+                n_new = _write_chunks(table, wdir, target_rows)
+            report[pid] = (len(old_files), n_new)
     return report
 
 
-@_log_maintenance_locked
 def compact_log_by_key(
     path: str,
     partitions: list[int] | None = None,
@@ -1534,10 +1351,10 @@ def compact_log_by_key(
     broker's own rule for compacted topics.
 
     Publication is the same observable-atomic generation flip as
-    :func:`compact_segments`: new ``gen-NNNNNN/`` + one ``os.replace``
-    of the ``_CURRENT`` pointer, then the superseded generation is
-    retired — a concurrent planner sees exactly one full generation.
-    Returns {partition_id: (rows_before, rows_after)}.
+    :func:`compact_segments` (a fully-tombstoned partition publishes an
+    empty generation: zero segments, not a layout error) — a concurrent
+    planner sees exactly one full generation. Returns
+    {partition_id: (rows_before, rows_after)}.
 
     Reference parity: the broker-side feature the reference's connector
     relies on Kafka for (compacted metadata/changelog topics); here it
@@ -1548,77 +1365,52 @@ def compact_log_by_key(
     utility concatenates ONE PARTITION's segments in driver pyarrow —
     right-sized for a partitioned log (a partition is the unit Kafka
     bounds; brokers compact per partition in one pass too). Past
-    driver memory, run the same latest-per-key as a Spark job per
-    partition (`groupBy(key).agg(max_by(struct(*), offset))` — the
-    `streaming/cdc.py` batch fn — writing the new generation) and keep
-    this function's pointer-flip publication.
+    driver memory, :func:`compact_log_by_key_spark` runs the same
+    latest-per-key as a Spark job per partition.
     """
-    import shutil
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     report: dict[int, tuple[int, int]] = {}
-    selected = _select_log_partitions(path, partitions)
-    # validate EVERY selected partition up front (key column only — a
-    # cheap columnar read) BEFORE publishing any generation flip: the
-    # r7 form validated inside the rewrite loop, so partition K's null
-    # keys aborted AFTER partitions 0..K-1 had already been compacted
-    # and published — a half-applied maintenance run with no report of
-    # what committed. Now a failing partition fails the WHOLE run
-    # atomically: nothing has been rewritten yet.
-    for pid, _pdir, cur, old_files in selected:
-        for f in old_files:
-            if pq.read_table(os.path.join(cur, f), columns=["key"])[
-                "key"
-            ].null_count:
-                raise KafkaLogLayoutError(
-                    f"partition {pid} has null-key frames; log compaction "
-                    "requires keyed records (Kafka rejects unkeyed writes "
-                    "to compacted topics); validated before any rewrite — "
-                    "no partition was compacted or published"
-                )
-    for pid, pdir, cur, old_files in selected:
-        if not old_files:
-            report[pid] = (0, 0)
-            continue
-        table = pa.concat_tables(
-            [pq.read_table(os.path.join(cur, f)) for f in old_files]
-        ).sort_by("offset")
-        keys = table["key"].to_pylist()
-        # latest-per-key: sorted by offset, the LAST occurrence wins
-        last_idx: dict[bytes, int] = {}
-        for i, k in enumerate(keys):
-            last_idx[bytes(k)] = i
-        values = table["value"]
-        keep = sorted(
-            i
-            for i in last_idx.values()
-            if retain_tombstones or values[i].is_valid
-        )
-        compacted = table.take(keep)
-        cur_gen = 0
-        if cur != pdir:
-            cur_gen = int(_GEN_DIR.match(os.path.basename(cur)).group(1))
-        gen_name = f"gen-{cur_gen + 1:06d}"
-        gdir = os.path.join(pdir, gen_name)
-        wdir = _fresh_gen_dir(gdir)  # unique write dir, renamed at publish
-        for start in range(0, compacted.num_rows, target_rows):
-            chunk = compacted.slice(start, target_rows)
-            first = chunk["offset"][0].as_py()
-            pq.write_table(chunk, os.path.join(wdir, f"segment-{first}.parquet"))
-        if compacted.num_rows == 0:
-            # fully-tombstoned partition: publish an EMPTY generation
-            # (a valid compacted state; the planner treats a pointed-at
-            # empty generation as zero segments, not a layout error)
-            pass
-        _publish_gen_flip(pdir, cur, gen_name, wdir=wdir)
-        if cur == pdir:
+    with _maint_lock(path, "compact_log_by_key") as held:
+        selected = _select_log_partitions(path, partitions)
+        # validate EVERY selected partition up front (key column only —
+        # a cheap columnar read) BEFORE publishing any generation flip,
+        # so a failing partition fails the WHOLE run atomically instead
+        # of after partitions 0..K-1 were already published
+        for pid, _pdir, cur, old_files in selected:
             for f in old_files:
-                os.remove(os.path.join(pdir, f))
-        else:
-            _retire_superseded(pdir)
-        report[pid] = (table.num_rows, compacted.num_rows)
+                if pq.read_table(os.path.join(cur, f), columns=["key"])[
+                    "key"
+                ].null_count:
+                    raise KafkaLogLayoutError(
+                        f"partition {pid} has null-key frames; log "
+                        "compaction requires keyed records (Kafka rejects "
+                        "unkeyed writes to compacted topics); validated "
+                        "before any rewrite — no partition was compacted "
+                        "or published"
+                    )
+        for pid, pdir, cur, old_files in selected:
+            if not old_files:
+                report[pid] = (0, 0)
+                continue
+            table = pa.concat_tables(
+                [pq.read_table(os.path.join(cur, f)) for f in old_files]
+            ).sort_by("offset")
+            # latest-per-key: sorted by offset, the LAST occurrence wins
+            last_idx: dict[bytes, int] = {}
+            for i, k in enumerate(table["key"].to_pylist()):
+                last_idx[bytes(k)] = i
+            values = table["value"]
+            keep = sorted(
+                i
+                for i in last_idx.values()
+                if retain_tombstones or values[i].is_valid
+            )
+            compacted = table.take(keep)
+            with _next_generation(pdir, cur, old_files, held) as wdir:
+                _write_chunks(compacted, wdir, target_rows)
+            report[pid] = (table.num_rows, compacted.num_rows)
     return report
 
 
@@ -1656,7 +1448,6 @@ def _select_log_partitions(
     return selected
 
 
-@_log_maintenance_locked
 def purge_keys(
     path: str,
     keys: list[bytes],
@@ -1675,8 +1466,11 @@ def purge_keys(
     the log size. Publication per partition is the same atomic
     generation flip as :func:`compact_segments`; a crash mid-purge
     leaves the old generation fully visible (erasure either happened
-    observably or not at all — auditable). Null-key frames never match.
-    Returns {partition_id: frames_removed}.
+    observably or not at all — auditable). Superseded generations may
+    still CONTAIN the keys, so they are erased with no read grace, both
+    before and after each partition's commit (erasure beats reader
+    liveness). Null-key frames never match. Returns
+    {partition_id: frames_removed}.
 
     Memory shape: per-SEGMENT pyarrow filter (never a whole partition
     in memory — unlike compaction, erasure needs no cross-segment
@@ -1690,79 +1484,42 @@ def purge_keys(
 
     keyset = {bytes(k) for k in keys}
     report: dict[int, int] = {}
-    try:
-        entries = os.listdir(path)
-    except OSError as exc:
-        raise KafkaLogLayoutError(f"cannot list log dir {path}") from exc
-    found = False
-    for e in sorted(entries):
-        m = _PARTITION_DIR.match(e)
-        if not m:
-            continue
-        found = True
-        pid = int(m.group(1))
-        if partitions is not None and pid not in partitions:
-            continue
-        pdir = os.path.join(path, e)
-        # GDPR first: superseded generations lingering inside the
-        # round-13 read grace may STILL CONTAIN the purged keys (a key
-        # compaction's pre-image, an earlier value history) even when
-        # the CURRENT generation has zero hits — erase them
-        # unconditionally before judging this partition (erasure beats
-        # reader liveness, the one retirement that never waits).
-        _retire_superseded(pdir, grace_s=0.0)
-        cur = _resolve_partition_dir(pdir)
-        old_files = sorted(f for f in os.listdir(cur) if _SEGMENT_FILE.match(f))
-        removed = 0
-        clean: list[str] = []
-        rewritten: list[pa.Table] = []
-        for f in old_files:
-            t = pq.read_table(os.path.join(cur, f))
-            mask = [
-                k is not None and bytes(k) in keyset
-                for k in t["key"].to_pylist()
-            ]
-            hits = sum(mask)
-            if hits == 0:
-                clean.append(f)
-                continue
-            removed += hits
-            kept = t.filter(pa.array([not x for x in mask]))
-            rewritten.append((f, kept))
-        report[pid] = removed
-        if removed == 0:
-            continue
-        cur_gen = 0
-        if cur != pdir:
-            cur_gen = int(_GEN_DIR.match(os.path.basename(cur)).group(1))
-        gen_name = f"gen-{cur_gen + 1:06d}"
-        gdir = os.path.join(pdir, gen_name)
-        wdir = _fresh_gen_dir(gdir)  # unique write dir, renamed at publish
-        for f in clean:
-            shutil.copy(os.path.join(cur, f), os.path.join(wdir, f))
-        for f, kept in rewritten:
-            if kept.num_rows:
-                first = kept["offset"][0].as_py()
-                pq.write_table(
-                    kept, os.path.join(wdir, f"segment-{first}.parquet")
-                )
-        _publish_gen_flip(pdir, cur, gen_name, wdir=wdir)
-        if cur == pdir:
+    with _maint_lock(path, "purge_keys") as held:
+        for pid, pdir, cur, old_files in _select_log_partitions(path, partitions):
+            # erase lingering superseded generations even when the
+            # current one has zero hits
+            genstore.gc(pdir, grace_s=0.0)
+            removed = 0
+            clean: list[str] = []
+            rewritten: list[tuple[str, pa.Table]] = []
             for f in old_files:
-                os.remove(os.path.join(pdir, f))
-        else:
-            # GDPR: the superseded generation still CONTAINS the purged
-            # keys — erase it immediately, the one retirement that must
-            # not wait out a read grace (erasure beats reader liveness)
-            shutil.rmtree(cur, ignore_errors=True)
-    if not found:
-        raise KafkaLogLayoutError(
-            f"no partition=N directories under {path} (A3 strictness)"
-        )
+                t = pq.read_table(os.path.join(cur, f))
+                mask = [
+                    k is not None and bytes(k) in keyset
+                    for k in t["key"].to_pylist()
+                ]
+                hits = sum(mask)
+                if hits == 0:
+                    clean.append(f)
+                    continue
+                removed += hits
+                rewritten.append((f, t.filter(pa.array([not x for x in mask]))))
+            report[pid] = removed
+            if removed == 0:
+                continue
+            with _next_generation(pdir, cur, old_files, held) as wdir:
+                for f in clean:
+                    shutil.copy(os.path.join(cur, f), os.path.join(wdir, f))
+                for f, kept in rewritten:
+                    if kept.num_rows:
+                        first = kept["offset"][0].as_py()
+                        pq.write_table(
+                            kept, os.path.join(wdir, f"segment-{first}.parquet")
+                        )
+            genstore.gc(pdir, grace_s=0.0)
     return report
 
 
-@_log_maintenance_locked
 def compact_log_by_key_spark(
     spark,
     path: str,
@@ -1779,90 +1536,67 @@ def compact_log_by_key_spark(
     ~``target_rows`` per output file. Executors never hold a partition;
     the driver only renames files and flips the pointer.
 
-    Output files are renamed to the ``segment-<first_offset>`` naming
-    the planner requires, using each part file's parquet footer MIN
-    stat (a metadata read, not a data read). Same atomic generation
-    publication as the pyarrow form; results are identical
-    (equality-tested).
+    Spark writes into the new generation's write dir; each part file
+    is renamed to the ``segment-<first_offset>`` naming the planner
+    requires, using its parquet footer MIN stat (a metadata read, not a
+    data read). Same atomic generation publication as the pyarrow form;
+    results are identical (equality-tested).
     """
     import glob
     import shutil
 
-    import pyarrow.parquet as pq
-
     from pyspark.sql import functions as F
 
     report: dict[int, tuple[int, int]] = {}
-    selected = _select_log_partitions(path, partitions)
-    # up-front atomic validation (the compact_log_by_key discipline):
-    # every selected partition is checked for null keys — one cheap
-    # key-column Spark job each — BEFORE any partition is rewritten or
-    # any generation pointer flips, so a bad partition fails the whole
-    # run with nothing half-applied.
-    for pid, _pdir, cur, old_files in selected:
-        if not old_files:
-            continue
-        src = spark.read.parquet(*[os.path.join(cur, f) for f in old_files])
-        if src.filter(F.col("key").isNull()).limit(1).count():
-            raise KafkaLogLayoutError(
-                f"partition {pid} has null-key frames; log compaction "
-                "requires keyed records (Kafka rejects unkeyed writes "
-                "to compacted topics); validated before any rewrite — "
-                "no partition was compacted or published"
-            )
-    for pid, pdir, cur, old_files in selected:
-        if not old_files:
-            report[pid] = (0, 0)
-            continue
-        src = spark.read.parquet(*[os.path.join(cur, f) for f in old_files])
-        rows_before = src.count()
-        cols = src.columns
-        latest = (
-            src.groupBy("key")
-            .agg(F.max_by(F.struct(*[F.col(c) for c in cols]), F.col("offset")).alias("_s"))
-            .select("_s.*")
-        )
-        if not retain_tombstones:
-            latest = latest.filter(F.col("value").isNotNull())
-        rows_after = latest.count()
-        n_files = max(1, -(-rows_after // target_rows))
-        cur_gen = 0
-        if cur != pdir:
-            cur_gen = int(_GEN_DIR.match(os.path.basename(cur)).group(1))
-        gen_name = f"gen-{cur_gen + 1:06d}"
-        gdir = os.path.join(pdir, gen_name)
-        staging = os.path.join(pdir, f".{gen_name}.staging")
-        (
-            latest.repartitionByRange(n_files, "offset")
-            .sortWithinPartitions("offset")
-            .write.mode("overwrite")
-            .parquet(staging)
-        )
-        wdir = _fresh_gen_dir(gdir)  # unique write dir, renamed at publish
-        for part in sorted(glob.glob(os.path.join(staging, "part-*.parquet"))):
-            meta = pq.read_metadata(part)
-            first = None
-            for rg in range(meta.num_row_groups):
-                st = meta.row_group(rg).column(
-                    [meta.schema.column(i).name for i in range(meta.num_columns)].index("offset")
-                ).statistics
-                if st is not None and st.has_min_max:
-                    first = st.min if first is None else min(first, st.min)
-            if first is None:  # empty part file
+    with _maint_lock(path, "compact_log_by_key_spark") as held:
+        selected = _select_log_partitions(path, partitions)
+        # up-front atomic validation (the compact_log_by_key
+        # discipline): one cheap key-column Spark job per partition
+        # BEFORE any partition is rewritten or any pointer flips
+        for pid, _pdir, cur, old_files in selected:
+            if not old_files:
                 continue
-            os.rename(part, os.path.join(wdir, f"segment-{int(first)}.parquet"))
-        shutil.rmtree(staging, ignore_errors=True)
-        _publish_gen_flip(pdir, cur, gen_name, wdir=wdir)
-        if cur == pdir:
-            for f in old_files:
-                os.remove(os.path.join(pdir, f))
-        else:
-            _retire_superseded(pdir)
-        report[pid] = (rows_before, rows_after)
+            src = spark.read.parquet(*[os.path.join(cur, f) for f in old_files])
+            if src.filter(F.col("key").isNull()).limit(1).count():
+                raise KafkaLogLayoutError(
+                    f"partition {pid} has null-key frames; log compaction "
+                    "requires keyed records (Kafka rejects unkeyed writes "
+                    "to compacted topics); validated before any rewrite — "
+                    "no partition was compacted or published"
+                )
+        for pid, pdir, cur, old_files in selected:
+            if not old_files:
+                report[pid] = (0, 0)
+                continue
+            src = spark.read.parquet(*[os.path.join(cur, f) for f in old_files])
+            rows_before = src.count()
+            latest = (
+                src.groupBy("key")
+                .agg(F.max_by(F.struct(*src.columns), "offset").alias("_s"))
+                .select("_s.*")
+            )
+            if not retain_tombstones:
+                latest = latest.filter(F.col("value").isNotNull())
+            rows_after = latest.count()
+            n_files = max(1, -(-rows_after // target_rows))
+            with _next_generation(pdir, cur, old_files, held) as wdir:
+                staging = os.path.join(wdir, "_spark")
+                (
+                    latest.repartitionByRange(n_files, "offset")
+                    .sortWithinPartitions("offset")
+                    .write.parquet(staging)
+                )
+                for part in glob.glob(os.path.join(staging, "part-*.parquet")):
+                    lo, _hi, nrows = _segment_meta(part)
+                    if nrows:  # Spark may write empty part files
+                        os.rename(
+                            part, os.path.join(wdir, f"segment-{lo}.parquet")
+                        )
+                shutil.rmtree(staging)
+            report[pid] = (rows_before, rows_after)
     return report
 
 
-@_log_maintenance_locked
 def expire_segments(
     path: str,
     min_offset: int,
@@ -1884,36 +1618,18 @@ def expire_segments(
     {partition_id: segments_deleted}.
     """
     report: dict[int, int] = {}
-    try:
-        entries = os.listdir(path)
-    except OSError as exc:
-        raise KafkaLogLayoutError(f"cannot list log dir {path}") from exc
-    found = False
-    for e in sorted(entries):
-        m = _PARTITION_DIR.match(e)
-        if not m:
-            continue
-        found = True
-        pid = int(m.group(1))
-        if partitions is not None and pid not in partitions:
-            continue
-        pdir = _resolve_partition_dir(os.path.join(path, e))
-        deleted = 0
-        for fname in sorted(os.listdir(pdir)):
-            if not _SEGMENT_FILE.match(fname):
-                continue
-            fpath = os.path.join(pdir, fname)
-            lo, hi, nrows = _segment_meta(fpath)
-            if lo is None and nrows > 0:
-                continue  # no stats → cannot prove it's expired; keep
-            if hi is not None and hi <= min_offset:
-                os.remove(fpath)
-                deleted += 1
-        report[pid] = deleted
-    if not found:
-        raise KafkaLogLayoutError(
-            f"no partition=N directories under {path} (A3 strictness)"
-        )
+    with _maint_lock(path, "expire_segments"):
+        for pid, _pdir, cur, files in _select_log_partitions(path, partitions):
+            deleted = 0
+            for fname in files:
+                fpath = os.path.join(cur, fname)
+                lo, hi, nrows = _segment_meta(fpath)
+                if lo is None and nrows > 0:
+                    continue  # no stats → cannot prove it's expired; keep
+                if hi is not None and hi <= min_offset:
+                    os.remove(fpath)
+                    deleted += 1
+            report[pid] = deleted
     return report
 
 
@@ -2294,12 +2010,7 @@ def _write_routing(path: str, route: str) -> None:
     offset-routed log, single-partition routing silently returns a
     STALE record (the key's latest may live elsewhere), the same
     wrong-answer class as a mismatched num_partitions."""
-    import json as _json
-
-    tmp = os.path.join(path, f".{_ROUTING}.tmp")
-    with open(tmp, "w") as fh:
-        _json.dump({"route": route}, fh)
-    os.replace(tmp, os.path.join(path, _ROUTING))
+    genstore.write_json(os.path.join(path, _ROUTING), {"route": route})
 
 
 def _read_routing(path: str) -> str | None:

@@ -393,24 +393,25 @@ def test_compaction_publishes_atomically_via_generation_pointer(spark, sf_dir, t
         pdir = os.path.join(log, p)
         assert os.path.exists(os.path.join(pdir, "_CURRENT"))
         cur = _resolve_partition_dir(pdir)
-        assert os.path.basename(cur) == "gen-000001"
+        assert os.path.basename(cur) == "gen-0000000000"
         assert any(f.startswith("segment-") for f in os.listdir(cur))
     # recompaction bumps the generation; the superseded one survives
-    # the round-13 read grace (a planner mid-scan keeps its files),
-    # then vacuum_log reclaims it on force-override
+    # the read grace (a planner mid-scan keeps its files), then
+    # vacuum_log reclaims it on force-override
     from presto_rakam_kafka_spark.sources.kafka_datasource import vacuum_log
 
     compact_segments(log, target_rows=10_000)
     for p in os.listdir(log):
         if p.startswith("partition="):
             pdir = os.path.join(log, p)
-            assert os.path.basename(_resolve_partition_dir(pdir)) == "gen-000002"
-            assert os.path.isdir(os.path.join(pdir, "gen-000001"))
+            cur = _resolve_partition_dir(pdir)
+            assert os.path.basename(cur) == "gen-0000000001"
+            assert os.path.isdir(os.path.join(pdir, "gen-0000000000"))
     vacuum_log(log, grace_s=0.0)
     for p in os.listdir(log):
         if p.startswith("partition="):
             pdir = os.path.join(log, p)
-            assert not os.path.isdir(os.path.join(pdir, "gen-000001"))
+            assert not os.path.isdir(os.path.join(pdir, "gen-0000000000"))
     spark.dataSource.register(KafkaSegmentDataSource)
     assert (
         spark.read.format("kafka_segments").option("path", log).load().count()
@@ -589,7 +590,7 @@ def test_catalog_table_snapshot_is_fixed_at_build(spark, sf_dir, tmp_path):
     # loose layout: compaction deletes the frame's files — it raises
     loose = catalog.table("tpch", "events")
     compact_segments(log, target_rows=50)
-    assert os.path.isdir(os.path.join(log, "partition=0", "gen-000001"))
+    assert os.path.isdir(os.path.join(log, "partition=0", "gen-0000000000"))
     with pytest.raises(Exception, match="FILE_NOT_EXIST|does not exist"):
         loose.count()
 
@@ -598,7 +599,7 @@ def test_catalog_table_snapshot_is_fixed_at_build(spark, sf_dir, tmp_path):
     rows = sorted(snap.collect())
     assert len(rows) == n_all
     compact_segments(log, target_rows=10_000)
-    assert os.path.isdir(os.path.join(log, "partition=0", "gen-000002"))
+    assert os.path.isdir(os.path.join(log, "partition=0", "gen-0000000001"))
     assert sorted(snap.collect()) == rows
     assert sorted(catalog.table("tpch", "events").collect()) == rows
 
@@ -2001,11 +2002,11 @@ def test_stream_survives_compaction_between_triggers(spark, sf_dir, tmp_path):
 def test_crash_orphan_generation_dir_does_not_brick_maintenance(
     spark, sf_dir, tmp_path
 ):
-    """Round 12: a maintainer that crashed between creating gen-N+1 and
-    flipping the pointer leaves an orphan generation dir. Pre-fix the
-    next compaction's bare os.makedirs raised FileExistsError forever —
-    maintenance bricked. Under the log flock the orphan is provably
-    crash residue (the pointer never reached it) and is reclaimed."""
+    """A maintainer that crashed between renaming its write dir to
+    gen-N+1 and flipping the pointer leaves an orphan generation dir
+    named like the next commit. Under the log flock the orphan is
+    provably crash residue (the pointer never reached it) and is
+    replaced; maintenance is not bricked."""
     from presto_rakam_kafka_spark.sources.kafka_datasource import (
         compact_segments,
     )
@@ -2027,7 +2028,7 @@ def test_crash_orphan_generation_dir_does_not_brick_maintenance(
     )
     # crash residue: the dir exists (with a half-written file), the
     # pointer does not reference it
-    orphan = os.path.join(log, "partition=0", "gen-000001")
+    orphan = os.path.join(log, "partition=0", "gen-0000000000")
     os.makedirs(orphan)
     with open(os.path.join(orphan, "segment-0.parquet"), "w") as fh:
         fh.write("torn half-written junk")
@@ -2040,16 +2041,18 @@ def test_crash_orphan_generation_dir_does_not_brick_maintenance(
     assert after == before
 
 
-def test_publish_gen_flip_fences_cross_host_writer(spark, sf_dir, tmp_path):
-    """Round 12: a maintenance op built on a generation another writer
-    has since superseded must have its publish REFUSED — winning the
-    pointer with a rewrite of the pre-purge generation would resurrect
-    purged keys."""
-    import pytest
+def test_stale_compaction_is_fenced_by_cross_host_commit(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A maintenance op built on a generation another writer has since
+    superseded (a maintainer on a host the flock does not reach) must
+    have its publish REFUSED — winning the pointer with a rewrite of
+    the pre-purge generation would resurrect purged keys."""
+    import shutil
 
+    from presto_rakam_kafka_spark import genstore
+    from presto_rakam_kafka_spark.sources import kafka_datasource as kds
     from presto_rakam_kafka_spark.sources.kafka_datasource import (
-        ConcurrentLogMaintenanceError,
-        _publish_gen_flip,
         _resolve_partition_dir,
         compact_segments,
     )
@@ -2064,13 +2067,21 @@ def test_publish_gen_flip_fences_cross_host_writer(spark, sf_dir, tmp_path):
     )
     write_segments(raw, log, num_partitions=1, segment_rows=50)
     pdir = os.path.join(log, "partition=0")
-    stale_cur = _resolve_partition_dir(pdir)  # this writer's read
-    compact_segments(log, target_rows=10_000)  # another writer commits
-    new_cur = _resolve_partition_dir(pdir)
-    assert new_cur != stale_cur
-    with pytest.raises(ConcurrentLogMaintenanceError):
-        _publish_gen_flip(pdir, stale_cur, "gen-000099")
-    assert _resolve_partition_dir(pdir) == new_cur  # commit intact
+    first = sorted(os.listdir(pdir))[0]
+
+    def other_host_commits_first():
+        monkeypatch.setattr(kds, "_before_flip_hook", None)
+        with genstore.Generation(pdir, None, kds) as g:
+            shutil.copy(os.path.join(pdir, first), g.dir)
+            g.commit({})
+
+    monkeypatch.setattr(kds, "_before_flip_hook", other_host_commits_first)
+    with pytest.raises(genstore.FencedMaintenanceError):
+        compact_segments(log, target_rows=10_000)
+    cur = _resolve_partition_dir(pdir)
+    assert os.path.basename(cur) == "gen-0000000000"
+    assert os.listdir(cur) == [first]  # the other commit, intact
+    assert not [e for e in os.listdir(pdir) if e.startswith("w-")]
 
 
 def test_concurrent_purge_and_compact_serialize(spark, tmp_path):
@@ -2126,8 +2137,8 @@ def test_concurrent_purge_and_compact_serialize(spark, tmp_path):
 
 
 def test_write_dir_rename_publish_and_residue_reclaim(spark, sf_dir, tmp_path):
-    """ADVICE r12 #3: maintenance ops write into a random-suffixed
-    ``gen-N.w-*`` dir and rename at publish, so a reclaim never shares
+    """Maintenance ops write into genstore's random-suffixed
+    ``w-gen-N-*`` dir and rename at publish, so a reclaim never shares
     a path with a live writer. Crash residue — an orphaned write dir —
     is invisible to readers and reclaimed by the next locked op."""
     from presto_rakam_kafka_spark.sources.kafka_datasource import (
@@ -2146,10 +2157,9 @@ def test_write_dir_rename_publish_and_residue_reclaim(spark, sf_dir, tmp_path):
     write_segments(raw, log, num_partitions=1, segment_rows=50)
     pdir = os.path.join(log, "partition=0")
     # crash residue: a write dir orphaned mid-rewrite, AGED past the
-    # reclaim grace (a fresh .w- dir is treated as a possibly-LIVE
-    # remote writer's in-progress dir and left alone — round-13
-    # second review)
-    orphan = os.path.join(pdir, "gen-000001.w-deadbeef")
+    # reclaim grace (a fresh w- dir is treated as a possibly-LIVE
+    # remote writer's in-progress dir and left alone)
+    orphan = os.path.join(pdir, "w-gen-0000000000-deadbeef")
     os.makedirs(orphan)
     junk = os.path.join(orphan, "segment-0.parquet")
     with open(junk, "w") as fh:
@@ -2157,7 +2167,7 @@ def test_write_dir_rename_publish_and_residue_reclaim(spark, sf_dir, tmp_path):
     os.utime(junk, (0, 0))
     os.utime(orphan, (0, 0))
     # a FRESH residue dir (possibly a live writer) must survive
-    fresh = os.path.join(pdir, "gen-000001.w-11fresh1")
+    fresh = os.path.join(pdir, "w-gen-0000000000-11fresh1")
     os.makedirs(fresh)
     with open(os.path.join(fresh, "segment-9.parquet"), "w") as fh:
         fh.write("a live remote writer's in-progress file")
@@ -2169,9 +2179,9 @@ def test_write_dir_rename_publish_and_residue_reclaim(spark, sf_dir, tmp_path):
     assert not os.path.isdir(orphan)  # aged residue reclaimed
     assert os.path.isdir(fresh)  # fresh dir spared (maybe live writer)
     cur = _resolve_partition_dir(pdir)
-    assert os.path.basename(cur) == "gen-000001"
+    assert os.path.basename(cur) == "gen-0000000000"
     # our own write dir never survives a successful publish
-    stray = [e for e in os.listdir(pdir) if ".w-" in e]
+    stray = [e for e in os.listdir(pdir) if e.startswith("w-")]
     assert stray == [os.path.basename(fresh)]
     after = (
         spark.read.format("kafka_segments").option("path", log).load().count()
@@ -2180,7 +2190,7 @@ def test_write_dir_rename_publish_and_residue_reclaim(spark, sf_dir, tmp_path):
 
 
 def test_purge_erases_lingering_superseded_generations(spark, sf_dir, tmp_path):
-    """Round 13: superseded generations linger inside the read grace —
+    """Superseded generations linger inside the read grace —
     but they may still CONTAIN purged keys, so purge_keys force-erases
     every superseded generation in each selected partition before
     judging it (GDPR beats reader liveness), including partitions whose
@@ -2201,12 +2211,12 @@ def test_purge_erases_lingering_superseded_generations(spark, sf_dir, tmp_path):
     )
     write_segments(raw, log, num_partitions=2, segment_rows=50,
                    route_by_key=True)
-    compact_segments(log, target_rows=100)   # → gen-000001
-    compact_segments(log, target_rows=10_000)  # → gen-000002, gen-1 lingers
+    compact_segments(log, target_rows=100)   # → gen-0000000000
+    compact_segments(log, target_rows=10_000)  # → gen-…01, gen-…00 lingers
     pdirs = [os.path.join(log, p) for p in sorted(os.listdir(log))
              if p.startswith("partition=")]
     assert any(
-        os.path.isdir(os.path.join(p, "gen-000001")) for p in pdirs
+        os.path.isdir(os.path.join(p, "gen-0000000000")) for p in pdirs
     )  # the grace kept it
     victim = (
         ev.select(F.col("user_id").cast("string")).first()[0].encode()
@@ -2214,8 +2224,7 @@ def test_purge_erases_lingering_superseded_generations(spark, sf_dir, tmp_path):
     purge_keys(log, [victim])
     for p in pdirs:
         cur = os.path.basename(_resolve_partition_dir(p))
-        gens = sorted(e for e in os.listdir(p) if e.startswith("gen-")
-                      and ".w-" not in e)
+        gens = sorted(e for e in os.listdir(p) if e.startswith("gen-"))
         assert gens == [cur], f"{p}: superseded generations survived {gens}"
     spark.dataSource.register(KafkaSegmentDataSource)
     left = (
@@ -2266,6 +2275,9 @@ def test_log_maintenance_storm_serializes_and_stays_exact(spark, sf_dir, tmp_pat
                 unexpected.append(exc)
         return threading.Thread(target=run)
 
+    # driver-side appends (no Spark off the main thread) race too
+    appends = [_staged_append(log, range(lo, lo + 10), 3)
+               for lo in (20_000, 30_000)]
     threads = [
         op(compact_segments, log, target_rows=50),
         op(compact_segments, log, target_rows=200),
@@ -2273,16 +2285,18 @@ def test_log_maintenance_storm_serializes_and_stays_exact(spark, sf_dir, tmp_pat
         op(vacuum_log, log),
         op(expire_segments, log, min_offset=0),  # retention no-op
         op(vacuum_log, log, grace_s=0.0),
-    ]
+    ] + [op(writer.commit, [msg]) for writer, msg in appends]
     for t in threads:
         t.start()
     for t in threads:
         t.join(timeout=600)
+    assert not any(t.is_alive() for t in threads)
     assert not unexpected, unexpected[:3]
     got = (
         spark.read.format("kafka_segments").option("path", log).load().count()
     )
-    assert got == base  # every racing rewrite preserved the data
+    # every racing rewrite preserved the data, every racing append landed
+    assert got == base + 20
     # the log still accepts appends after the storm (v2 writer runs on
     # the main thread — Spark resolves Python data sources per-thread)
     raw.withColumn("offset", F.col("offset") + 10_000).write.format(
@@ -2293,4 +2307,198 @@ def test_log_maintenance_storm_serializes_and_stays_exact(spark, sf_dir, tmp_pat
     got2 = (
         spark.read.format("kafka_segments").option("path", log).load().count()
     )
-    assert got2 == 2 * base
+    assert got2 == 2 * base + 20
+
+
+def _staged_append(log, offsets, num_partitions=2):
+    """One driver-side append of ``offsets``, staged and ready to
+    commit: ``(writer, commit message)``."""
+    import datetime as dt
+
+    from pyspark.sql import Row
+
+    from presto_rakam_kafka_spark.sources.kafka_datasource import (
+        KafkaSegmentWriter,
+    )
+
+    os.makedirs(log, exist_ok=True)
+    writer = KafkaSegmentWriter(
+        {"path": log, "numPartitions": str(num_partitions)}, overwrite=False
+    )
+    ts = dt.datetime(2024, 1, 1)
+    msg = writer.write(
+        Row(offset=o, key=str(o).encode(), value=b"v", topic=None, timestamp=ts)
+        for o in offsets
+    )
+    return writer, msg
+
+
+def _visible_offsets(log):
+    import pyarrow.parquet as pq
+
+    from presto_rakam_kafka_spark.sources.kafka_datasource import (
+        _enumerate_segments,
+    )
+
+    return sorted(
+        o
+        for segs in _enumerate_segments(log).values()
+        for f, *_ in segs
+        for o in pq.read_table(f, columns=["offset"])["offset"].to_pylist()
+    )
+
+
+@pytest.mark.parametrize("layout", ["flat", "generation"])
+def test_append_during_maintenance_is_not_lost(tmp_path, monkeypatch, layout):
+    """An append committed while a compaction holds the log — after the
+    compaction listed a partition, before its flip — queues on the log's
+    maintenance lock and lands in the new generation. Lock-free, it
+    landed in the superseded generation (retired with it) or loose
+    beside the flat layout's new pointer: appended rows went missing."""
+    import threading
+
+    from presto_rakam_kafka_spark.sources import kafka_datasource as kds
+
+    log = str(tmp_path / "mlog")
+    for lo in (0, 3):
+        writer, msg = _staged_append(log, range(lo, lo + 3))
+        writer.commit([msg])
+    if layout == "generation":
+        kds.compact_segments(log, target_rows=1)
+    writer, msg = _staged_append(log, range(100, 103))
+    errors: list[BaseException] = []
+
+    def commit():
+        try:
+            writer.commit([msg])
+        except BaseException as exc:  # noqa: BLE001 — surfaced below
+            errors.append(exc)
+
+    appender = threading.Thread(target=commit)
+
+    def append_before_flip():
+        monkeypatch.setattr(kds, "_before_flip_hook", None)
+        appender.start()
+        appender.join(timeout=1.0)  # unqueued, the append lands here
+
+    monkeypatch.setattr(kds, "_before_flip_hook", append_before_flip)
+    kds.compact_segments(log, target_rows=10_000)
+    appender.join(timeout=60)
+    assert not appender.is_alive() and not errors, errors
+    assert _visible_offsets(log) == [0, 1, 2, 3, 4, 5, 100, 101, 102]
+
+
+@pytest.mark.skipif(
+    not os.path.isdir("/proc/self/fd"), reason="needs /proc fd links"
+)
+def test_append_commit_syncs_segments_then_renames_then_dirs(
+    tmp_path, monkeypatch
+):
+    """An append is durable before it returns: each staged segment is
+    fsynced before its rename into the partition, and each partition
+    dir it touched is fsynced after the rename — so after a power loss
+    a visible segment name never points at lost data."""
+    log = os.path.realpath(str(tmp_path / "dlog"))
+    writer, msg = _staged_append(log, range(6))
+    events: list[tuple] = []
+    real_fsync, real_replace = os.fsync, os.replace
+
+    def recording_fsync(fd):
+        events.append(("fsync", os.readlink(f"/proc/self/fd/{fd}")))
+        return real_fsync(fd)
+
+    def recording_replace(src, dst):
+        events.append(("rename", str(src), str(dst)))
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "fsync", recording_fsync)
+    monkeypatch.setattr(os, "replace", recording_replace)
+    writer.commit([msg])
+    monkeypatch.setattr(os, "fsync", real_fsync)
+    monkeypatch.setattr(os, "replace", real_replace)
+
+    staged = {f for f, _pid, _first in msg.files}
+    renames = [e for e in events if e[0] == "rename" and e[1] in staged]
+    assert len(renames) == len(staged) == 2, events
+    for ev in renames:
+        _op, src, dst = ev
+        assert os.path.exists(dst)
+        synced_file = events.index(("fsync", src))
+        synced_dir = events.index(("fsync", os.path.dirname(dst)))
+        assert synced_file < events.index(ev) < synced_dir, events
+
+
+@pytest.mark.parametrize("layout", ["flat", "text_pointer"])
+def test_legacy_log_migrates_on_first_maintenance_commit(tmp_path, layout):
+    """Logs written before the segment log committed through genstore:
+    the flat layout (segments directly in ``partition=N/``) and a
+    plain-text ``_CURRENT`` naming a 6-digit ``gen-000001``. The first
+    maintenance commit migrates each partition with its rows unchanged;
+    ``vacuum_log(grace_s=0.0)`` then leaves only the new generation —
+    the 6-digit name orders below the 10-digit one."""
+    from presto_rakam_kafka_spark import genstore
+    from presto_rakam_kafka_spark.sources.kafka_datasource import (
+        _resolve_partition_dir,
+        compact_segments,
+        vacuum_log,
+    )
+
+    log = str(tmp_path / "legacy")
+    for lo in (0, 10):
+        writer, msg = _staged_append(log, range(lo, lo + 10))
+        writer.commit([msg])
+    pdirs = sorted(
+        os.path.join(log, e) for e in os.listdir(log)
+        if e.startswith("partition=")
+    )
+    if layout == "text_pointer":
+        for pdir in pdirs:
+            os.makedirs(os.path.join(pdir, "gen-000001"))
+            for f in os.listdir(pdir):
+                if f.startswith("segment-"):
+                    os.rename(os.path.join(pdir, f),
+                              os.path.join(pdir, "gen-000001", f))
+            with open(os.path.join(pdir, "_CURRENT"), "w") as fh:
+                fh.write("gen-000001")
+    rows = _visible_offsets(log)
+    assert rows == list(range(20))
+
+    compact_segments(log, target_rows=10_000)
+    new = "gen-0000000000" if layout == "flat" else "gen-0000000002"
+    for pdir in pdirs:
+        assert genstore.read_pointer(pdir)[0] == new
+        assert os.path.basename(_resolve_partition_dir(pdir)) == new
+    assert _visible_offsets(log) == rows
+
+    vacuum_log(log, grace_s=0.0)
+    for pdir in pdirs:
+        left = sorted(
+            e for e in os.listdir(pdir)
+            if e.startswith(("gen-", "segment-"))
+        )
+        assert left == [new], left
+    assert _visible_offsets(log) == rows
+
+
+def test_maintenance_ops_raise_on_log_without_partitions(tmp_path):
+    """A3 strictness is shared by every maintenance op: a log dir with
+    no ``partition=N`` dirs raises instead of reporting nothing done."""
+    from presto_rakam_kafka_spark.sources.kafka_datasource import (
+        compact_log_by_key,
+        compact_segments,
+        expire_segments,
+        purge_keys,
+        vacuum_log,
+    )
+
+    log = str(tmp_path / "empty")
+    os.makedirs(log)
+    for op in (
+        lambda: compact_segments(log),
+        lambda: compact_log_by_key(log),
+        lambda: purge_keys(log, [b"k"]),
+        lambda: expire_segments(log, min_offset=0),
+        lambda: vacuum_log(log),
+    ):
+        with pytest.raises(KafkaLogLayoutError, match="no partition=N"):
+            op()
