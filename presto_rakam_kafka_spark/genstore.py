@@ -27,6 +27,14 @@ tier's own state, replaced together (the serving HWM, the rollup's
 5. retires superseded generations after the ``gc_utils`` time grace,
    deleting only files no retained manifest references.
 
+A whole maintenance op — read the pointer, write, commit — runs under
+:func:`maintenance_lock`, the store's ``.MAINT_LOCK`` flock, so a second
+maintainer on the same host (or NFSv4 mount) queues and then reads the
+first one's commit. A crashed holder is released by the kernel; a wedged
+one makes the waiter raise ``locks.FlockTimeoutError`` after
+``MAINT_LOCK_TIMEOUT_S``. Where flock has no semantics (object stores,
+NFSv3) the fence in step 4 refuses the later commit.
+
 Durability: JSON is written temp → fsync → ``os.replace`` → fsync of
 the directory, and a generation's files, then its manifest, are synced
 before the pointer that names them. Each commit logs one INFO line:
@@ -42,7 +50,7 @@ import os
 import re
 import shutil
 import time
-from contextlib import suppress
+from contextlib import contextmanager, suppress
 
 from presto_rakam_kafka_spark.gc_utils import (
     GC_GRACE_S,
@@ -55,6 +63,13 @@ from presto_rakam_kafka_spark.locks import flock_guard
 POINTER = "_CURRENT"
 MANIFEST = "_MANIFEST.json"
 FLIP_LOCK = ".FLIP_LOCK"
+MAINT_LOCK = ".MAINT_LOCK"
+
+#: how long a maintenance op queues behind the holder of the store's
+#: ``.MAINT_LOCK``. Ops legitimately wait out one whole Spark rewrite, so
+#: this bound only detects a hung holder (wedged executor, stuck NFS); a
+#: crashed holder releases via the kernel at once
+MAINT_LOCK_TIMEOUT_S = 600.0
 
 #: the flip section is a pointer read, a rename and one replace, so a
 #: wait near this bound means a wedged holder, not contention (a crashed
@@ -68,9 +83,29 @@ _log = logging.getLogger(__name__)
 
 class FencedMaintenanceError(RuntimeError):
     """The store's generation moved between this writer's pointer read
-    and its commit — another writer (e.g. one that stole this slow
-    writer's expired lease) flipped first. The stale commit is refused:
-    its write dir is deleted and the pointer is untouched."""
+    and its commit — another writer (one the maintenance lock does not
+    reach) flipped first. The stale commit is refused: its write dir is
+    deleted and the pointer is untouched."""
+
+
+@contextmanager
+def maintenance_lock(store: str, op_name: str):
+    """Hold ``store``'s ``.MAINT_LOCK`` flock for a whole maintenance op,
+    queueing up to ``MAINT_LOCK_TIMEOUT_S`` behind the holder. Yields
+    whether the flock is held: only then may a commit reclaim other
+    writers' leaked write dirs (``Generation(reclaim=held)``). Logs one
+    DEBUG line per acquire with the queue wait."""
+    t0 = time.monotonic()
+    with flock_guard(
+        os.path.join(store, MAINT_LOCK),
+        timeout_s=MAINT_LOCK_TIMEOUT_S,
+        op_name=op_name,
+    ) as held:
+        _log.debug(
+            "maintenance_lock store=%s op=%s wait_ms=%.1f held=%s",
+            store, op_name, (time.monotonic() - t0) * 1e3, held,
+        )
+        yield held
 
 
 def fsync(path: str) -> None:

@@ -1893,12 +1893,11 @@ def gc_ivfpq_index(path: str, grace_s: float | None = None) -> list[str]:
         clear_retirement_marker,
         retirement_age_s,
     )
-    from presto_rakam_kafka_spark.locks import flock_guard
+    from presto_rakam_kafka_spark.genstore import maintenance_lock
 
     grace = GC_DELTA_GRACE_S if grace_s is None else float(grace_s)
     removed = []
-    with flock_guard(os.path.join(path, ".MAINT_LOCK"), timeout_s=600.0,
-                     op_name="gc_ivfpq_index"):
+    with maintenance_lock(path, "gc_ivfpq_index"):
         live = set(_read_manifest(path))
         for d in sorted(os.listdir(path)):
             if not d.startswith("delta-"):

@@ -50,7 +50,7 @@ import math
 import os
 import re
 import sys
-from contextlib import contextmanager
+from contextlib import contextmanager, suppress
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -80,7 +80,7 @@ from pyspark.sql.types import (
 )
 
 from presto_rakam_kafka_spark import genstore
-from presto_rakam_kafka_spark.locks import FlockTimeoutError, flock_guard
+from presto_rakam_kafka_spark.locks import FlockTimeoutError
 
 _log = logging.getLogger(__name__)
 
@@ -127,37 +127,26 @@ def _resolve_partition_dir(pdir: str) -> str:
 
 
 class ConcurrentLogMaintenanceError(RuntimeError):
-    """A log op waited ``_MAINT_LOCK_TIMEOUT_S`` for the log's
+    """A log op waited ``genstore.MAINT_LOCK_TIMEOUT_S`` for the log's
     maintenance lock behind a holder that neither finished nor crashed.
     (A stale publish — another maintainer, on a host the flock does not
     reach, flipped the partition first — raises
     :class:`genstore.FencedMaintenanceError`.)"""
 
 
-#: how long a log op waits in the queue behind a holder before giving
-#: up. Ops legitimately queue for the length of one whole Spark rewrite
-#: (minutes at scale) — this bound is a HUNG-holder detector (wedged
-#: executor, stuck NFS; a crashed holder releases via the kernel
-#: instantly), not a contention error.
-_MAINT_LOCK_TIMEOUT_S = 600.0
-
-
 @contextmanager
 def _maint_lock(path: str, op_name: str):
-    """Hold the log's ``.MAINT_LOCK`` flock for a whole maintenance op
-    or append commit, so they queue instead of interleaving (an append
-    renamed into a generation a rewrite has already listed would be
-    flipped past and lost). Yields whether the flock is held: only then
-    may a commit reclaim other writers' leaked write dirs. Without
-    flock semantics the generation fence alone guards."""
+    """Hold the log's ``genstore.maintenance_lock`` for a whole
+    maintenance op or append commit, so they queue instead of
+    interleaving (an append renamed into a generation a rewrite has
+    already listed would be flipped past and lost). Yields whether the
+    flock is held: only then may a commit reclaim other writers' leaked
+    write dirs. Without flock semantics the generation fence alone
+    guards."""
     if not os.path.isdir(path):
         raise KafkaLogLayoutError(f"cannot list log dir {path}")
     try:
-        with flock_guard(
-            os.path.join(path, ".MAINT_LOCK"),
-            timeout_s=_MAINT_LOCK_TIMEOUT_S,
-            op_name=op_name,
-        ) as held:
+        with genstore.maintenance_lock(path, op_name) as held:
             yield held
     except FlockTimeoutError as exc:
         raise ConcurrentLogMaintenanceError(
@@ -172,7 +161,7 @@ def _next_generation(pdir: str, cur: str, old_files: list[str], held: bool):
     (the dir the op listed) is the one it replaces — and on leaving
     publish it: genstore's fenced flip, then graced GC of the
     superseded generation. A flat-layout partition's loose segments
-    are removed once the flip has migrated it."""
+    and their bloom sidecars are removed once the flip has migrated it."""
     gen_read = None if cur == pdir else os.path.basename(cur)
     with genstore.Generation(pdir, gen_read, _TIER, reclaim=held) as g:
         yield g.dir
@@ -180,6 +169,8 @@ def _next_generation(pdir: str, cur: str, old_files: list[str], held: bool):
     if gen_read is None:
         for f in old_files:
             os.remove(os.path.join(pdir, f))
+            with suppress(FileNotFoundError):
+                os.remove(os.path.join(pdir, _bloom_sidecar_name(f)))
 
 
 #: test-injection point: called right before each partition's flip

@@ -49,12 +49,6 @@ from presto_rakam_kafka_spark import genstore
 _META = "_META.json"
 _TIER = sys.modules[__name__]
 
-#: bounded queue wait on the store's whole-op guard — a hung-holder
-#: detector (a crashed holder releases via the kernel instantly; ops
-#: legitimately queue for one whole merge), mirroring the segment
-#: log's ``_MAINT_LOCK_TIMEOUT_S`` (VERDICT r12 #1).
-_MAINT_GUARD_TIMEOUT_S = 600.0
-
 
 def _shard_col(key_col: str, num_buckets: int) -> F.Column:
     from presto_rakam_kafka_spark.operators.datasets import shard_expr
@@ -188,23 +182,18 @@ def merge_into_snapshot(
     delete_col: str | None = None,
     txn: tuple[str, int] | None = None,
 ) -> tuple[str, list[int]]:
-    """Public entry: the whole merge runs under the store's flock guard,
-    so two writers QUEUE — the second's pointer read sees the first's
-    commit and both land — instead of both basing on one generation and
-    the later commit being fenced. flock doesn't span object stores;
-    there the fence refuses the loser and the documented
-    single-owning-writer contract is the guarantee. The queue wait is
-    BOUNDED: a holder that neither finishes nor crashes raises
+    """Public entry: the whole merge runs under the store's
+    ``genstore.maintenance_lock``, so two writers QUEUE — the second's
+    pointer read sees the first's commit and both land — instead of
+    both basing on one generation and the later commit being fenced.
+    flock doesn't span object stores; there the fence refuses the loser
+    and the documented single-owning-writer contract is the guarantee.
+    The queue wait is BOUNDED: a holder that neither finishes nor
+    crashes raises
     :class:`~presto_rakam_kafka_spark.locks.FlockTimeoutError` naming
-    the holder after ``_MAINT_GUARD_TIMEOUT_S`` instead of blocking
-    every later merge forever behind a wedged process."""
-    from presto_rakam_kafka_spark.locks import flock_guard
-
-    with flock_guard(
-        os.path.join(path, ".MAINT_GUARD"),
-        timeout_s=_MAINT_GUARD_TIMEOUT_S,
-        op_name="merge_into_snapshot",
-    ) as held:
+    the holder after ``genstore.MAINT_LOCK_TIMEOUT_S`` instead of
+    blocking every later merge forever behind a wedged process."""
+    with genstore.maintenance_lock(path, "merge_into_snapshot") as held:
         return _merge_into_snapshot_locked(
             updates, path, key_col, delete_col, txn, held
         )
@@ -412,18 +401,12 @@ def rebase_snapshot(spark, path: str) -> tuple[str, int]:
     rewrite is one shuffle-free scan+write per bucket (the read is
     already bucket-partitioned), and incremental merges continue
     against the new baseline immediately after the flip."""
-    from presto_rakam_kafka_spark.locks import flock_guard
-
     meta = _read_meta(path)
     if meta.get("carry") != "manifest":
         raise ValueError("rebase_snapshot applies to carry='manifest' stores")
     nb = int(meta["num_buckets"])
     key_col = meta["key_col"]
-    with flock_guard(
-        os.path.join(path, ".MAINT_GUARD"),
-        timeout_s=_MAINT_GUARD_TIMEOUT_S,
-        op_name="rebase_snapshot",
-    ) as held:
+    with genstore.maintenance_lock(path, "rebase_snapshot") as held:
         return _rebase_locked(spark, path, nb, key_col, held)
 
 

@@ -56,12 +56,6 @@ from presto_rakam_kafka_spark.fixtures import staging_mkdtemp
 
 _TIER = sys.modules[__name__]
 
-#: bounded queue wait on the state store's whole-op guard — a
-#: hung-holder detector (crashed holders release via the kernel; folds
-#: legitimately queue for one whole trigger), the round-13 discipline
-#: shared with the CDC and segment-log tiers.
-_MAINT_GUARD_TIMEOUT_S = 600.0
-
 
 def _read_pointer(path: str) -> tuple[str | None, dict, str | None]:
     """(current_gen, txns, emitted_thru) — all None/empty on a fresh
@@ -96,21 +90,15 @@ def _drain(stream_df: DataFrame, store: str, name: str, app_id: str,
     """Drain ``stream_df`` (AvailableNow) through
     ``fold(batch_df, epoch_id, gen, txns, emitted_thru, held)`` and
     return the final pointer. Each fold runs under the store's
-    ``.MAINT_GUARD`` flock — two maintainers would derive the same next
-    generation from one pointer read; guarded, they queue and the second
-    reads the first's commit — and a replayed epoch never reaches it.
-    A caller-supplied ``store`` need not exist yet: the guard's O_CREAT
-    open needs the dir."""
-    from presto_rakam_kafka_spark.locks import flock_guard
-
+    ``genstore.maintenance_lock`` — two maintainers would derive the
+    same next generation from one pointer read; locked, they queue and
+    the second reads the first's commit — and a replayed epoch never
+    reaches it. A caller-supplied ``store`` need not exist yet: the
+    lock file's O_CREAT open needs the dir."""
     os.makedirs(store, exist_ok=True)
 
     def on_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        with flock_guard(
-            os.path.join(store, ".MAINT_GUARD"),
-            timeout_s=_MAINT_GUARD_TIMEOUT_S,
-            op_name=op_name,
-        ) as held:
+        with genstore.maintenance_lock(store, op_name) as held:
             cur, txns, emitted_thru = _read_pointer(store)
             if txns.get(app_id, -1) >= epoch_id:
                 return  # replayed epoch: exact no-op

@@ -48,11 +48,13 @@ boolean chains to broadcast-joined bounds maps past the codegen cutoff
 
 Concurrency model: serves are lock-free and SNAPSHOT-CONSISTENT — one
 pointer read per serve, cells resolved from that snapshot's generation,
-GC grace keeping superseded generations alive. Writers hold a TTL lease
-(cross-host exclusion by expiry, same-host crash steal by pid) for
-liveness; every commit — fold, rebuild, repair — goes through
+GC grace keeping superseded generations alive. Each maintenance op
+holds the store's ``genstore.maintenance_lock`` (a kernel flock) for its
+whole read-fold-commit, so a second maintainer queues and then folds
+only what is left; every commit — fold, rebuild, repair — goes through
 :func:`_commit_days`, i.e. the ``genstore`` protocol (unique write dir,
-fenced flip of (cells, HWM, txn), graced GC) for safety. Streaming
+fenced flip of (cells, HWM, txn), graced GC), whose fence refuses a
+stale commit from a maintainer the flock does not reach. Streaming
 maintenance is idempotent by OFFSET (each batch filtered to ≥ the stored
 HWM), never by epoch alignment.
 :func:`repair_rollup_days` is the GDPR path: re-fold only the purged
@@ -64,7 +66,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -78,290 +79,7 @@ from presto_rakam_kafka_spark.genstore import (  # noqa: F401 — re-exported
     FencedMaintenanceError,
 )
 
-_LOCK = "_MAINTENANCE_LOCK"
 _TIER = sys.modules[__name__]
-
-
-class ConcurrentMaintenanceError(RuntimeError):
-    """A second maintainer attached to a store whose lease is held by a
-    LIVE holder — proceeding would race the generation sequence (both
-    writers derive the same next name and the later overwrite clobbers
-    the earlier commit's files: a lost update)."""
-
-
-#: lease validity window. Any single fixture-scale fold finishes in
-#: seconds; production folds over big tails should renew (``renew()``)
-#: between phases. Past expiry the lease is stealable by design — the
-#: generation-fence at flip time (not the lock) is what keeps a stolen
-#: lease's original holder from corrupting the store.
-_LEASE_TTL_S = 300.0
-
-
-class _store_lock:
-    """TTL-lease maintenance lock, object-store-safe (VERDICT r10 #4).
-
-    The lease file holds ``{holder, pid, host, expires}`` (wall-clock
-    expiry). Acquisition: O_EXCL create. A held lease is stolen iff
-    (a) it EXPIRED — the only signal that works when maintainers run
-    on different hosts and cannot probe each other's pids — or (b) it
-    belongs to a dead pid on THIS host (crash detection faster than
-    the TTL; a crashed maintainer must not brick the store for a full
-    TTL). A live, unexpired lease raises. Mutual exclusion across
-    hosts is therefore only as good as the TTL — which is why commits
-    are additionally FENCED by the store-level generation sequence
-    (see :func:`_fold_cells`): a maintainer that lost its lease to
-    expiry can still scan, but its pointer flip is refused once the
-    thief has committed. Serving never takes the lock — reads go
-    through the atomic pointer."""
-
-    def __init__(self, store: str, ttl_s: float | None = None):
-        self._path = os.path.join(store, _LOCK)
-        self._ttl = float(ttl_s if ttl_s is not None else _LEASE_TTL_S)
-        self._holder = f"{_hostname()}:{os.getpid()}:{os.urandom(4).hex()}"
-
-    def _lease(self) -> bytes:
-        import time as _time
-
-        return json.dumps(
-            {
-                "holder": self._holder,
-                "pid": os.getpid(),
-                "host": _hostname(),
-                "expires": _time.time() + self._ttl,
-            }
-        ).encode()
-
-    def _sidecar_path(self, holder: str) -> str:
-        """The renew sidecar for ``holder`` — holder-keyed, so each
-        holder writes ONLY its own sidecar and a renew can never clobber
-        another maintainer's state (the round-11 check-then-replace
-        renew could: a thief stealing between the holder check and the
-        replace had its fresh lease overwritten by the victim's renew,
-        re-admitting two maintainers). The shared lease file is now
-        written only by atomic O_EXCL create and rename-steal."""
-        import hashlib
-
-        return f"{self._path}.renew-{hashlib.sha1(holder.encode()).hexdigest()[:16]}"
-
-    def _guard(self):
-        """A kernel flock serializing every LOCAL mutation of the lease
-        file (acquire, steal, renew, release). Round 12: review + a
-        4-way stress harness showed that EVERY observe-then-mutate
-        steal variant over a bare path (remove, blind rename, even
-        rename + content-verify + restore-via-link) re-admits a double
-        hold — rename/remove act on the PATH, and the vacant-path
-        window between a winner's steal and its re-create lets another
-        contender in. flock is the primitive that actually closes it:
-        crash-released by the kernel, held only for the µs of one
-        check-or-mutate step. Cross-HOST exclusion remains what it
-        always was — the TTL lease cooperatively, the generation fence
-        authoritatively (flock does not span object stores or NFSv3;
-        the lease protocol never claimed perfect cross-host exclusion,
-        the fence is the safety)."""
-        from presto_rakam_kafka_spark.locks import flock_guard
-
-        # degrades to the TTL-only protocol on filesystems without
-        # flock semantics (flock_guard yields False there) — the
-        # pre-round-12 behavior and the documented cross-host level
-        return flock_guard(f"{self._path}.guard")
-
-    def __enter__(self):
-        import errno
-
-        while True:
-            with self._guard():
-                try:
-                    fd = os.open(
-                        self._path, os.O_CREAT | os.O_EXCL | os.O_WRONLY
-                    )
-                    os.write(fd, self._lease())
-                    os.close(fd)
-                    return self
-                except OSError as exc:
-                    if exc.errno != errno.EEXIST:
-                        raise
-                # raises ConcurrentMaintenanceError on a live lease
-                stale_holder, _raw = self._held_lease_is_stale()
-                # stale (expired, or dead pid on this host): under the
-                # guard the remove-and-retry steal is race-free — no
-                # other LOCAL contender can create, judge, or remove
-                # between our staleness check and our remove, and the
-                # O_EXCL create above happens under the same guard, so
-                # no torn-create window is observable either
-                for leftover in (
-                    self._path,
-                    self._sidecar_path(stale_holder or ""),
-                ):
-                    try:
-                        os.remove(leftover)
-                    except OSError:
-                        pass
-            # loop re-enters the guard for the create — each guard hold
-            # stays one short check-or-mutate step
-
-    def _held_lease_is_stale(self) -> tuple[str | None, str | None]:
-        """Stale → returns ``(holder, raw_content)`` of the observed
-        stale lease (both None when it vanished) so the stealer can
-        clean the holder's renew sidecar. Raises
-        :class:`ConcurrentMaintenanceError` on a live, unexpired lease.
-        Callers mutate only under :meth:`_guard`. Tolerates the legacy
-        bare-pid file format (pre-lease stores). Effective expiry is
-        the MAX of the lease file's and the holder's renew sidecar's —
-        renewals extend the lease without ever rewriting the shared
-        file."""
-        import time as _time
-
-        try:
-            with open(self._path) as fh:
-                raw = fh.read().strip()
-        except OSError:
-            return None, None  # vanished under us: retry the create
-        pid, expires, host, holder = 0, None, _hostname(), None
-        try:
-            d = json.loads(raw)
-            pid = int(d.get("pid", 0))
-            expires = float(d.get("expires", 0.0))
-            host = d.get("host", host)
-            holder = d.get("holder")
-        except (ValueError, TypeError, AttributeError):
-            try:
-                pid = int(raw or "0")  # legacy bare-pid lock file
-            except ValueError:
-                return None, raw  # unreadable garbage: steal
-        if holder:
-            try:
-                with open(self._sidecar_path(holder)) as fh:
-                    side = json.load(fh)
-                if side.get("holder") == holder and expires is not None:
-                    expires = max(expires, float(side.get("expires", 0.0)))
-            except (OSError, ValueError, TypeError, AttributeError):
-                pass  # no/garbled sidecar: the lease file's expiry rules
-        if expires is not None and _time.time() > expires:
-            return holder, raw  # expired: stealable whoever holds it
-        if host == _hostname() and pid and not _pid_alive_for_lock(pid):
-            return holder, raw  # same-host crash: steal before the TTL
-        raise ConcurrentMaintenanceError(
-            f"store is being maintained by live pid {pid} on {host} "
-            f"({self._path}); run one maintainer per store"
-        )
-
-    def _file_holder(self) -> str | None:
-        try:
-            with open(self._path) as fh:
-                return json.load(fh).get("holder")
-        except (OSError, ValueError, AttributeError):
-            return None
-
-    def renew(self) -> None:
-        """Extend the lease — call between phases of a long fold so a
-        slow-but-alive maintainer isn't stolen from. Writes ONLY the
-        holder-keyed renew SIDECAR (staleness checks take the max of
-        lease-file and sidecar expiry), never the shared lease file —
-        so a renew racing a steal can never clobber the thief's fresh
-        lease (ADVICE r11 #4: the old rewrite-in-place renew could;
-        the fence caught the stale commit, but both maintainers burned
-        a full fold). Raises if the lease no longer carries our holder
-        (checked before AND after the sidecar write under the local
-        flock guard: a cross-host steal landing in between leaves our
-        sidecar orphaned — holder-keyed, so the thief's staleness math
-        ignores it — and we must abort)."""
-        import time as _time
-
-        with self._guard():
-            if self._file_holder() != self._holder:
-                raise ConcurrentMaintenanceError(
-                    f"lease {self._path} no longer held by {self._holder} "
-                    f"(expired and stolen mid-fold); aborting before the "
-                    f"fence would have refused the commit anyway"
-                )
-            side = self._sidecar_path(self._holder)
-            # write_json's temp name is unique per call: the keepalive
-            # heartbeat and an explicit phase renew are serialized by the
-            # guard flock, but on a flock-less filesystem the guard
-            # excludes nothing and a shared tmp name would let one
-            # renew's replace steal the other's half-written file
-            genstore.write_json(
-                side,
-                {"holder": self._holder, "expires": _time.time() + self._ttl},
-            )
-            if self._file_holder() != self._holder:
-                try:
-                    os.remove(side)
-                except OSError:
-                    pass
-                raise ConcurrentMaintenanceError(
-                    f"lease {self._path} no longer held by {self._holder} "
-                    f"(stolen during renew); aborting"
-                )
-
-    @contextmanager
-    def keepalive(self):
-        """Renew from a daemon heartbeat thread for the WHOLE locked
-        section (VERDICT r12 #6): between-phase renews keep a
-        multi-phase fold alive, but a SINGLE phase longer than the TTL
-        — one huge day bucket's generation write, or even driver-side
-        plan construction before the first renew (the keepalive test
-        caught exactly that) — still expired mid-phase, and the wasted
-        work was the whole fold (the fence refused the stolen lease's
-        commit; safety never depended on this). Every maintenance
-        entry point therefore wraps its entire locked body:
-        ``with _store_lock(store) as lk, lk.keepalive(): ...``. The
-        heartbeat renews every TTL/3. A renew that finds the lease
-        stolen stops beating and re-raises AFTER the body — the doomed
-        write cannot be interrupted mid-Spark-job anyway, and the
-        fence is the safety either way."""
-        import threading
-
-        stop = threading.Event()
-        errs: list = []
-        interval = max(0.05, self._ttl / 3.0)
-
-        def beat():
-            while not stop.wait(interval):
-                try:
-                    self.renew()
-                except Exception as exc:  # noqa: BLE001 — re-raised below
-                    errs.append(exc)
-                    return
-
-        t = threading.Thread(target=beat, daemon=True, name="lease-keepalive")
-        t.start()
-        try:
-            yield
-        finally:
-            stop.set()
-            t.join(timeout=max(5.0, interval * 3))
-        if errs:
-            raise errs[0]
-
-    def __exit__(self, *exc):
-        # release ONLY our own lease (under the local guard): if it
-        # expired and was stolen, removing the file would destroy the
-        # thief's LIVE lease and let a third maintainer in alongside it
-        with self._guard():
-            if self._file_holder() == self._holder:
-                for p in (self._path, self._sidecar_path(self._holder)):
-                    try:
-                        os.remove(p)
-                    except OSError:
-                        pass
-        return False
-
-
-def _hostname() -> str:
-    import socket
-
-    return socket.gethostname()
-
-
-def _pid_alive_for_lock(pid: int) -> bool:
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except OSError:
-        return True  # EPERM etc.: exists, not ours — treat as alive
-    return True
 
 
 # ---------------------------------------------------------------------
@@ -679,7 +397,7 @@ def _fold_cells(
     day_col: str,
     gen_read: str | None,
     txns_read: dict,
-    lk=None,
+    held: bool,
 ) -> None:
     """Merge ``new_cells`` into the store and commit (cells, HWM, txn)
     in one pointer flip. Only day buckets present in ``new_cells`` are
@@ -691,21 +409,12 @@ def _fold_cells(
     taken here: a thief committing between the caller's read and this
     fold would otherwise become the base generation, pass the fence,
     and have the overlap double-counted (round-11 review finding #1).
-
-    ``lk`` (the caller's held lease) is RENEWED between the fold's long
-    phases — after the touched-days scan and again before the flip — so
-    a backfill tail bigger than one TTL keeps its lease instead of being
-    stolen mid-write and wasting the whole fold (VERDICT r11 note #2;
-    safety never depended on it — the fence refuses a stolen lease's
-    commit — this is the liveness half). A renew that finds the lease
-    stolen raises, aborting BEFORE the doomed write instead of after."""
+    ``held``: the caller holds the store's maintenance lock."""
     touched = [
         r[day_col]
         for r in new_cells.select(day_col).distinct().collect()
         if r[day_col] is not None
     ]
-    if lk is not None:
-        lk.renew()  # the touched-days scan was the first long phase
     prev_days: dict[str, list[str]] = (
         _read_manifest(store, gen_read) if gen_read is not None else {}
     )
@@ -726,7 +435,7 @@ def _fold_cells(
         store, gen_read, txns_read, (app_id, epoch), new_hwm,
         merged.groupBy(*group_cols).agg(*merge_exprs), touched,
         {d: fs for d, fs in prev_days.items() if d not in touched},
-        day_col, lk,
+        day_col, held,
     )
 
 
@@ -740,17 +449,17 @@ def _commit_days(
     days: list[str],
     kept: dict[str, list[str]],
     day_col: str,
-    lk=None,
+    held: bool,
 ) -> list[str]:
     """The one serving commit (fold, rebuild and repair): write
     ``cells`` — rows of ``days`` only — as ``_day=`` buckets of the next
     generation, carry every day of ``kept`` (day → store-relative files)
     by manifest reference, and commit (cells, ``hwm``, ``txn``) through
     the ``genstore`` protocol, fenced against ``gen_read``. A day of
-    ``days`` without cells drops out of the manifest. ``lk`` (the held
-    lease) is renewed after the write, the long phase. Returns the days
-    written."""
-    with genstore.Generation(store, gen_read, _TIER, reclaim=True) as g:
+    ``days`` without cells drops out of the manifest. Only a caller
+    that ``held`` the maintenance lock reclaims leaked write dirs.
+    Returns the days written."""
+    with genstore.Generation(store, gen_read, _TIER, reclaim=held) as g:
         if days:
             (
                 cells.withColumn("_day", F.col(day_col))
@@ -760,8 +469,6 @@ def _commit_days(
                 .parquet(g.dir)
             )
         written = {d: fs for d in days if (fs := g.files(f"_day={d}"))}
-        if lk is not None:
-            lk.renew()
         g.commit(
             txns, txn, _hwm_payload(hwm),
             manifest={"days": {**kept, **written}}, keep_last=2,
@@ -770,8 +477,8 @@ def _commit_days(
 
 
 #: test-injection point: called right before a commit's fence check —
-#: a fencing test uses it to simulate a second maintainer (one that
-#: stole this writer's expired lease) committing first.
+#: a fencing test uses it to simulate a second maintainer (one the
+#: maintenance lock does not reach) committing first.
 _before_flip_hook = None
 
 #: test-injection point: called right after a flipper ACQUIRES the flip
@@ -803,16 +510,16 @@ def maintain_rollup(
     HWM map. Re-running with nothing new is a metadata no-op (the tail
     scan plans a single empty split; no generation is written)."""
     os.makedirs(store, exist_ok=True)
-    with _store_lock(store) as lk, lk.keepalive():
+    with genstore.maintenance_lock(store, "maintain_rollup") as held:
         return _maintain_locked(
             spark, log_dir, store, cell_fn, group_cols, merge_exprs,
-            day_col, up_to, app_id, lk,
+            day_col, up_to, app_id, held,
         )
 
 
 def _maintain_locked(
     spark, log_dir, store, cell_fn, group_cols, merge_exprs,
-    day_col, up_to, app_id, lk=None,
+    day_col, up_to, app_id, held,
 ) -> dict:
     _gen, txns, hwm = _read_pointer(store)
     ends = _log_end_offsets(log_dir)
@@ -838,11 +545,9 @@ def _maintain_locked(
     # (no committed coverage target) — their rows fold next tick
     tail = _per_partition_offset_filter(tail, new_hwm, lower=False)
     epoch = txns.get(app_id, -1) + 1
-    if lk is not None:
-        lk.renew()  # the fold is the long phase; enter it with a fresh lease
     _fold_cells(
         spark, store, cell_fn(tail), new_hwm, epoch, app_id,
-        group_cols, merge_exprs, day_col, _gen, txns, lk=lk,
+        group_cols, merge_exprs, day_col, _gen, txns, held,
     )
     return new_hwm
 
@@ -883,7 +588,9 @@ def run_rollup_maintenance(
         if batch_df.isEmpty():
             return  # trailing no-data trigger: no coverage to commit
         progressed = True
-        with _store_lock(store) as batch_lk, batch_lk.keepalive():
+        with genstore.maintenance_lock(
+            store, "run_rollup_maintenance"
+        ) as held:
             _gen, txns, hwm = _read_pointer(store)
             # Idempotency is OFFSET-based, not epoch-based (ADVICE
             # r10): a later maintainer resuming a persisted store from
@@ -914,8 +621,7 @@ def run_rollup_maintenance(
             epoch = max(txns.get(app_id, -1) + 1, int(epoch_id))
             _fold_cells(
                 spark, store, cell_fn(batch_df), new_hwm, epoch,
-                app_id, group_cols, merge_exprs, day_col, _gen, txns,
-                lk=batch_lk,
+                app_id, group_cols, merge_exprs, day_col, _gen, txns, held,
             )
 
     ckpt = staging_mkdtemp(f"ckpt_{name}_")
@@ -1021,16 +727,16 @@ def rebuild_rollup(
     guarantee as incremental maintenance). Cost is one full log fold —
     the same price the reference pays for EVERY query."""
     os.makedirs(store, exist_ok=True)
-    with _store_lock(store) as lk, lk.keepalive():
+    with genstore.maintenance_lock(store, "rebuild_rollup") as held:
         return _rebuild_locked(
             spark, log_dir, store, cell_fn, group_cols, merge_exprs,
-            day_col, app_id, lk,
+            day_col, app_id, held,
         )
 
 
 def _rebuild_locked(
     spark, log_dir, store, cell_fn, group_cols, merge_exprs, day_col,
-    app_id, lk=None,
+    app_id, held,
 ) -> dict:
     gen_prev, txns, hwm_prev = _read_pointer(store)
     new_hwm = _log_end_offsets(log_dir)
@@ -1041,8 +747,6 @@ def _rebuild_locked(
     scan = _tail_scan(spark, log_dir, {}, up_to=max(new_hwm.values()))
     scan = _per_partition_offset_filter(scan, new_hwm, lower=False)
     merged = cell_fn(scan).groupBy(*group_cols).agg(*merge_exprs)
-    if lk is not None:
-        lk.renew()  # full-log fold ahead: fresh lease
     touched = [
         r[day_col]
         for r in merged.select(day_col).distinct().collect()
@@ -1050,7 +754,7 @@ def _rebuild_locked(
     ]
     _commit_days(
         store, gen_prev, txns, (app_id, txns.get(app_id, -1) + 1), new_hwm,
-        merged, touched, {}, day_col, lk,
+        merged, touched, {}, day_col, held,
     )
     return new_hwm
 
@@ -1089,19 +793,19 @@ def repair_rollup_days(
     the source table): the purged log no longer knows where the
     victims' rows were, and an incomplete list leaves stale cells —
     when in doubt, :func:`rebuild_rollup` is the whole-log fallback.
-    Repair takes the maintenance lease; run it between a live
-    maintainer's ticks (a held lease raises, by design)."""
+    Repair takes the store's maintenance lock, so it queues behind a
+    running maintenance tick and the next tick queues behind it."""
     os.makedirs(store, exist_ok=True)
-    with _store_lock(store) as lk, lk.keepalive():
+    with genstore.maintenance_lock(store, "repair_rollup_days") as held:
         return _repair_days_locked(
             spark, log_dir, store, days, cell_fn, group_cols,
-            merge_exprs, day_col, app_id, lk,
+            merge_exprs, day_col, app_id, held,
         )
 
 
 def _repair_days_locked(
     spark, log_dir, store, days, cell_fn, group_cols, merge_exprs,
-    day_col, app_id, lk=None,
+    day_col, app_id, held,
 ) -> list[str]:
     import datetime as _dt
 
@@ -1127,15 +831,13 @@ def _repair_days_locked(
         scan = scan.filter(day_pred)
     cells = cell_fn(scan).filter(F.col(day_col).isin(days))
     merged = cells.groupBy(*group_cols).agg(*merge_exprs)
-    if lk is not None:
-        lk.renew()
     # a day whose rows were all purged drops out of the manifest
     rewritten = _commit_days(
         store, gen_prev, txns, (app_id, txns.get(app_id, -1) + 1), hwm,
         merged, days,
         {d: fs for d, fs in _read_manifest(store, gen_prev).items()
          if d not in days},
-        day_col, lk,
+        day_col, held,
     )
     _clear_repair_intent(store, days)
     return rewritten
@@ -1148,7 +850,7 @@ def _clear_repair_intent(store: str, repaired_days: list[str]) -> None:
     forever, and the next one-call invocation would re-repair days
     already covered. Days the hand repair did NOT cover stay journaled
     — the leak protection is exactly as strong as before. Runs after
-    the repair's commit, under the caller's held lease."""
+    the repair's commit, under the caller's maintenance lock."""
     intent_path = os.path.join(store, ".REPAIR_INTENT")
     try:
         with open(intent_path) as fh:
@@ -1350,14 +1052,14 @@ def purge_and_repair_rollup(
     steps by hand in the wrong order. Returns the day buckets
     rewritten.
 
-    The store LEASE is held across the WHOLE sequence (round-12 review
-    finding #1): with derive and purge outside the lease, a concurrent
-    maintenance tick landing between them could fold victim rows beyond
-    the derive-time HWM into the cells — those days would miss the
-    repair list, and after the purge the log can no longer say they
-    needed repair: a permanent GDPR leak in the materialized tier. A
-    live maintainer therefore raises here (run the purge between
-    ticks); the lease is renewed between phases as usual.
+    The store's maintenance lock is held across the WHOLE sequence
+    (round-12 review finding #1): with derive and purge outside it, a
+    concurrent maintenance tick landing between them could fold victim
+    rows beyond the derive-time HWM into the cells — those days would
+    miss the repair list, and after the purge the log can no longer say
+    they needed repair: a permanent GDPR leak in the materialized tier.
+    A maintenance tick started meanwhile therefore queues until the
+    repair has committed, then folds the purged log.
 
     CRASH-SAFE between purge and repair: the derived day list is
     journaled to ``.REPAIR_INTENT`` (atomic publish) BEFORE the purge
@@ -1372,7 +1074,7 @@ def purge_and_repair_rollup(
 
     os.makedirs(store, exist_ok=True)
     intent_path = os.path.join(store, ".REPAIR_INTENT")
-    with _store_lock(store) as lk, lk.keepalive():
+    with genstore.maintenance_lock(store, "purge_and_repair_rollup") as held:
         pending: list[str] = []
         try:
             with open(intent_path) as fh:
@@ -1394,16 +1096,14 @@ def purge_and_repair_rollup(
         days = sorted(
             set(victim_rollup_days(spark, log_dir, store, keys)) | set(pending)
         )
-        lk.renew()  # the derive scan was a long phase
         if days:  # durable before the purge: the only record of owed days
             genstore.write_json(intent_path, {"days": days})
         purge_keys(log_dir, [bytes(k) for k in keys])
         if not days:
             return []
-        lk.renew()  # back from the purge: fresh lease for the repair
         rewritten = _repair_days_locked(
             spark, log_dir, store, days, cell_fn, group_cols,
-            merge_exprs, day_col, app_id, lk,
+            merge_exprs, day_col, app_id, held,
         )
         try:
             os.remove(intent_path)  # repair committed: intent fulfilled

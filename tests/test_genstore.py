@@ -47,23 +47,21 @@ def test_serving_commit_syncs_files_then_manifest_then_pointer(
     maintain_rollup(spark, log, store, _cells, GROUP, _merge(), up_to=150)
     monkeypatch.setattr(os, "fsync", real_fsync)
 
-    # the lease's renew sidecar is synced too; only the commit matters
-    commit = [p for p in synced if "_MAINTENANCE_LOCK" not in p]
     data = [
-        i for i, p in enumerate(commit)
+        i for i, p in enumerate(synced)
         if "/w-gen-0000000000-" in p and p.endswith(".parquet")
     ]
     manifest_tmp = r"/w-gen-0000000000-\w+/\._MANIFEST\.json\.\w+\.tmp$"
-    manifest = [i for i, p in enumerate(commit) if re.search(manifest_tmp, p)]
+    manifest = [i for i, p in enumerate(synced) if re.search(manifest_tmp, p)]
     pointer = [
-        i for i, p in enumerate(commit)
+        i for i, p in enumerate(synced)
         if re.search(r"/\._CURRENT\.\w+\.tmp$", p)
     ]
-    assert data and len(manifest) == 1 and len(pointer) == 1, commit
-    assert max(data) < manifest[0] < pointer[0], commit
+    assert data and len(manifest) == 1 and len(pointer) == 1, synced
+    assert max(data) < manifest[0] < pointer[0], synced
     # the rename is made durable before the pointer that names it
-    assert store in commit[manifest[0] + 1:pointer[0]], commit
-    assert commit[-1] == store, commit
+    assert store in synced[manifest[0] + 1:pointer[0]], synced
+    assert synced[-1] == store, synced
     assert _read_pointer(store)[0] == "gen-0000000000"
 
 

@@ -2435,10 +2435,12 @@ def test_legacy_log_migrates_on_first_maintenance_commit(tmp_path, layout):
     plain-text ``_CURRENT`` naming a 6-digit ``gen-000001``. The first
     maintenance commit migrates each partition with its rows unchanged;
     ``vacuum_log(grace_s=0.0)`` then leaves only the new generation —
-    the 6-digit name orders below the 10-digit one."""
+    the 6-digit name orders below the 10-digit one. A flat partition's
+    bloom sidecars leave with its loose segments."""
     from presto_rakam_kafka_spark import genstore
     from presto_rakam_kafka_spark.sources.kafka_datasource import (
         _resolve_partition_dir,
+        build_key_blooms,
         compact_segments,
         vacuum_log,
     )
@@ -2460,6 +2462,9 @@ def test_legacy_log_migrates_on_first_maintenance_commit(tmp_path, layout):
                               os.path.join(pdir, "gen-000001", f))
             with open(os.path.join(pdir, "_CURRENT"), "w") as fh:
                 fh.write("gen-000001")
+    if layout == "flat":
+        build_key_blooms(log)
+        assert any(f.endswith(".bloom") for p in pdirs for f in os.listdir(p))
     rows = _visible_offsets(log)
     assert rows == list(range(20))
 
@@ -2477,6 +2482,7 @@ def test_legacy_log_migrates_on_first_maintenance_commit(tmp_path, layout):
             if e.startswith(("gen-", "segment-"))
         )
         assert left == [new], left
+        assert not [e for e in os.listdir(pdir) if e.endswith(".bloom")]
     assert _visible_offsets(log) == rows
 
 

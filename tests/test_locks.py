@@ -1,6 +1,7 @@
 """The shared kernel-flock guard (locks.py): degrade classification,
 degrade observability, and the round-13 bounded-wait / hung-holder
-diagnostics (VERDICT r12 "what's wrong" #1 and #3, ADVICE r12 #5)."""
+diagnostics (VERDICT r12 "what's wrong" #1 and #3, ADVICE r12 #5),
+checked through ``genstore.maintenance_lock`` for every store tier."""
 
 from __future__ import annotations
 
@@ -101,15 +102,9 @@ def test_timeout_acquire_queues_behind_finishing_holder(tmp_path):
     assert got == {"held": True}
 
 
-def test_log_maintenance_times_out_with_named_error(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """A hung holder of the log's .MAINT_LOCK must fail later ops with
-    ConcurrentLogMaintenanceError naming the holder, not block forever
-    (VERDICT r12 #1)."""
+def _log_case(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F
 
-    from presto_rakam_kafka_spark.sources import kafka_datasource as kds
     from presto_rakam_kafka_spark.sources.kafka_datasource import (
         ConcurrentLogMaintenanceError,
         compact_segments,
@@ -128,16 +123,15 @@ def test_log_maintenance_times_out_with_named_error(
         )
     )
     write_segments(raw, log, num_partitions=1, segment_rows=50)
-    monkeypatch.setattr(kds, "_MAINT_LOCK_TIMEOUT_S", 0.3)
-    with flock_guard(os.path.join(log, ".MAINT_LOCK"), op_name="wedged_op"):
-        with pytest.raises(ConcurrentLogMaintenanceError) as ei:
-            compact_segments(log, target_rows=10_000)
-    assert "wedged_op" in str(ei.value)
-    # holder released: the op succeeds
-    compact_segments(log, target_rows=10_000)
+
+    def op():
+        compact_segments(log, target_rows=10_000)
+        return len(spark.read.parquet(log).collect())
+
+    return log, op, ConcurrentLogMaintenanceError, 100
 
 
-def test_cdc_merge_times_out_behind_hung_holder(spark, tmp_path, monkeypatch):
+def _cdc_case(spark, sf_dir, tmp_path):
     import datetime as dt
 
     from presto_rakam_kafka_spark.streaming import cdc
@@ -147,11 +141,87 @@ def test_cdc_merge_times_out_behind_hung_holder(spark, tmp_path, monkeypatch):
     base = spark.createDataFrame([(1, "b", t0, 0)], sch)
     path = str(tmp_path / "hungsnap")
     cdc.init_snapshot(base, path, key_col="k", num_buckets=2)
-    monkeypatch.setattr(cdc, "_MAINT_GUARD_TIMEOUT_S", 0.3)
     upd = spark.createDataFrame([(2, "n", t0, 1)], sch)
-    with flock_guard(os.path.join(path, ".MAINT_GUARD"), op_name="wedged_merge"):
-        with pytest.raises(FlockTimeoutError) as ei:
-            cdc.merge_into_snapshot(upd, path, key_col="k")
-    assert "wedged_merge" in str(ei.value)
-    cdc.merge_into_snapshot(upd, path, key_col="k")
-    assert {r["k"] for r in cdc.read_snapshot(spark, path).collect()} == {1, 2}
+
+    def op():
+        cdc.merge_into_snapshot(upd, path, key_col="k")
+        return {r["k"] for r in cdc.read_snapshot(spark, path).collect()}
+
+    return path, op, FlockTimeoutError, {1, 2}
+
+
+def _day_cells(df):
+    from pyspark.sql import functions as F
+
+    return df.groupBy(
+        F.date_format("ts", "yyyy-MM-dd").alias("day")
+    ).agg(F.count(F.lit(1)).alias("n"))
+
+
+def _rollup_case(spark, sf_dir, tmp_path):
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql import functions as F
+
+    from presto_rakam_kafka_spark.streaming import rollup, runner
+
+    src = str(tmp_path / "hungsrc")
+    spark.read.parquet(os.path.join(sf_dir, "events.parquet")).filter(
+        F.col("event_id") < 100
+    ).select("ts").coalesce(1).write.parquet(src)
+    store = str(tmp_path / "hungstate")
+    os.makedirs(store)
+
+    def op():
+        stream = runner.read_file_stream(
+            spark, src, spark.read.parquet(src).schema
+        )
+        cells = rollup.run_windowed_cells(
+            stream, _day_cells, ["day"], [F.sum("n").alias("n")], "day",
+            10_000, "hung_rollup", path=store,
+        )
+        return sum(r["n"] for r in cells.collect())
+
+    return store, op, StreamingQueryException, 100
+
+
+def _serving_case(spark, sf_dir, tmp_path):
+    from pyspark.sql import functions as F
+
+    from presto_rakam_kafka_spark.streaming import serving
+
+    log, _op, _exc, _n = _log_case(spark, sf_dir, tmp_path)
+    store = str(tmp_path / "hungstore")
+    os.makedirs(store)
+
+    def cells(df):
+        return _day_cells(df.withColumnRenamed("timestamp", "ts"))
+
+    def op():
+        serving.maintain_rollup(
+            spark, log, store, cells, ["day"], [F.sum("n").alias("n")]
+        )
+        got = serving.read_store_cells(spark, store)
+        return sum(r["n"] for r in got.collect())
+
+    return store, op, FlockTimeoutError, 100
+
+
+@pytest.mark.parametrize("tier", ["log", "cdc", "rollup", "serving"])
+def test_maintenance_times_out_behind_hung_holder(
+    spark, sf_dir, tmp_path, monkeypatch, tier
+):
+    """A hung holder of a store's ``.MAINT_LOCK`` fails every tier's
+    next maintenance op with an error naming the holder once
+    ``genstore.MAINT_LOCK_TIMEOUT_S`` is out, instead of blocking it
+    forever (VERDICT r12 #1); once the holder lets go, the op runs."""
+    from presto_rakam_kafka_spark import genstore
+
+    case = {"log": _log_case, "cdc": _cdc_case, "rollup": _rollup_case,
+            "serving": _serving_case}[tier]
+    store, op, error, expected = case(spark, sf_dir, tmp_path)
+    monkeypatch.setattr(genstore, "MAINT_LOCK_TIMEOUT_S", 0.3)
+    with flock_guard(os.path.join(store, ".MAINT_LOCK"), op_name="wedged_op"):
+        with pytest.raises(error) as ei:
+            op()
+    assert "wedged_op" in str(ei.value)
+    assert op() == expected

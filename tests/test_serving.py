@@ -733,34 +733,159 @@ def test_streaming_maintenance_is_family_generic_hll(spark, sf_dir, tmp_path):
 
 
 def test_maintenance_lock_excludes_live_steals_dead(spark, sf_dir, tmp_path):
-    """One maintainer per store: a lock held by a LIVE pid raises
-    (racing the generation sequence is a lost update); a crashed
-    maintainer's stale lock is stolen so the store never bricks.
-    Serving never takes the lock."""
-    from presto_rakam_kafka_spark.streaming.serving import (
-        ConcurrentMaintenanceError,
-    )
+    """One maintainer per store at a time: a tick started while another
+    process holds the store's maintenance lock QUEUES — nothing is
+    committed until the holder lets go — and then folds the rest.
+    Serving never takes the lock: serves answer while it is held."""
+    import threading
+
+    from presto_rakam_kafka_spark.locks import flock_guard
 
     log = str(tmp_path / "log")
     _write_log(spark, sf_dir, log, hi=300)
     store = str(tmp_path / "store")
     maintain_rollup(spark, log, store, _cells, GROUP, _merge(), up_to=100)
+    gen0 = _read_pointer(store)[0]
 
-    lock = os.path.join(store, "_MAINTENANCE_LOCK")
-    with open(lock, "w") as fh:  # simulate a LIVE concurrent maintainer
-        fh.write(str(os.getpid()))
-    with pytest.raises(ConcurrentMaintenanceError, match="live pid"):
-        maintain_rollup(spark, log, store, _cells, GROUP, _merge())
-    # reads are lock-free
-    assert read_store_cells(spark, store) is not None
-    serve_rollup_tail(
-        spark, log, store, _cells, GROUP, _merge(), finish_fn=_finish
-    ).collect()
+    done: list[object] = []
 
-    with open(lock, "w") as fh:  # crashed maintainer: dead pid
-        fh.write("999999999")
-    maintain_rollup(spark, log, store, _cells, GROUP, _merge())  # steals
-    assert not os.path.exists(lock)  # released after the commit
+    def tick():
+        try:
+            done.append(maintain_rollup(spark, log, store, _cells, GROUP,
+                                        _merge()))
+        except BaseException as exc:  # noqa: BLE001 — asserted below
+            done.append(exc)
+
+    # a separate open file: it contends like another process would
+    with flock_guard(os.path.join(store, ".MAINT_LOCK"), op_name="holder"):
+        t = threading.Thread(target=tick)
+        t.start()
+        t.join(timeout=2.0)
+        assert t.is_alive() and not done  # queued behind the holder
+        assert _read_pointer(store)[0] == gen0
+        # reads are lock-free
+        assert read_store_cells(spark, store) is not None
+        assert _got(serve_rollup_tail(
+            spark, log, store, _cells, GROUP, _merge(), finish_fn=_finish
+        )) == _expected(spark, sf_dir, hi=300)
+    t.join(timeout=300)
+    assert len(done) == 1 and isinstance(done[0], dict), done
+    got = _got(
+        serve_rollup_tail(
+            spark, log, store, _cells, GROUP, _merge(), finish_fn=_finish
+        )
+    )
+    assert got == _expected(spark, sf_dir, hi=300)
+
+
+def test_second_maintainer_queues_then_folds_the_rest(
+    spark, sf_dir, tmp_path, caplog
+):
+    """Two maintainers tick one store at once: the second queues on the
+    maintenance lock (its acquire logs a non-zero wait), re-reads the
+    pointer the first committed and folds only what is left. Both
+    return, neither is fenced, both txns are recorded and the serve is
+    exact."""
+    import logging
+    import re
+    import threading
+    import time as _time
+
+    log = str(tmp_path / "log")
+    _write_log(spark, sf_dir, log, hi=600)
+    store = str(tmp_path / "store")
+    maintain_rollup(spark, log, store, _cells, GROUP, _merge(), up_to=100)
+
+    first_in = threading.Event()
+
+    def slow_cells(df_raw):  # built by the first maintainer, under the lock
+        first_in.set()
+        _time.sleep(1.0)
+        return _cells(df_raw)
+
+    results: dict[str, object] = {}
+
+    def run(app_id, cell_fn, up_to):
+        try:
+            results[app_id] = maintain_rollup(
+                spark, log, store, cell_fn, GROUP, _merge(), up_to=up_to,
+                app_id=app_id,
+            )
+        except BaseException as exc:  # noqa: BLE001 — asserted below
+            results[app_id] = exc
+
+    with caplog.at_level(
+        logging.DEBUG, logger="presto_rakam_kafka_spark.genstore"
+    ):
+        a = threading.Thread(target=run, args=("a", slow_cells, 300))
+        a.start()
+        assert first_in.wait(timeout=120)
+        b = threading.Thread(target=run, args=("b", _cells, None))
+        b.start()
+        a.join(timeout=300)
+        b.join(timeout=300)
+    assert set(results) == {"a", "b"}, results
+    assert all(isinstance(v, dict) for v in results.values()), results
+    _gen, txns, hwm = _read_pointer(store)
+    assert {"a", "b"} <= set(txns)
+    assert hwm == results["b"]
+    waits = [
+        float(m.group(1)) for r in caplog.records
+        if (m := re.search(
+            rf"maintenance_lock store={re.escape(store)} "
+            r"op=maintain_rollup wait_ms=([\d.]+)", r.getMessage()
+        ))
+    ]
+    assert len(waits) == 2 and waits[1] > 0, waits
+    got = _got(
+        serve_rollup_tail(
+            spark, log, store, _cells, GROUP, _merge(), finish_fn=_finish
+        )
+    )
+    assert got == _expected(spark, sf_dir, hi=600)
+
+
+def test_crashed_maintainer_releases_lock_via_kernel(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A maintainer that dies holding the store's maintenance lock
+    leaves only the lock FILE behind: the kernel drops its flock, so
+    the next tick proceeds at once — no lease expiry to wait out, no
+    steal protocol."""
+    import signal
+    import subprocess
+    import sys
+
+    from presto_rakam_kafka_spark import genstore
+
+    log = str(tmp_path / "log")
+    _write_log(spark, sf_dir, log, hi=300)
+    store = str(tmp_path / "store")
+    maintain_rollup(spark, log, store, _cells, GROUP, _merge(), up_to=100)
+    holder = subprocess.Popen(
+        [sys.executable, "-c",
+         "import sys, time\n"
+         "from presto_rakam_kafka_spark import genstore\n"
+         "with genstore.maintenance_lock(sys.argv[1], 'crashed'):\n"
+         "    print('held', flush=True)\n"
+         "    time.sleep(600)\n",
+         store],
+        stdout=subprocess.PIPE, text=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    try:
+        assert holder.stdout.readline().strip() == "held"
+        holder.send_signal(signal.SIGKILL)
+        holder.wait(timeout=30)
+    finally:
+        if holder.poll() is None:
+            holder.kill()
+            holder.wait()
+    with open(os.path.join(store, ".MAINT_LOCK")) as fh:
+        assert json.load(fh)["op"] == "crashed"  # the dead holder's record
+    # a lock still held would time out instead of waiting 600 s
+    monkeypatch.setattr(genstore, "MAINT_LOCK_TIMEOUT_S", 1.0)
+    maintain_rollup(spark, log, store, _cells, GROUP, _merge())
     got = _got(
         serve_rollup_tail(
             spark, log, store, _cells, GROUP, _merge(), finish_fn=_finish
@@ -897,56 +1022,15 @@ def test_serve_respects_user_conf_override(spark, sf_dir, tmp_path):
     assert got == _expected(spark, sf_dir, hi=100)
 
 
-def test_lease_lock_cross_host_ttl(spark, sf_dir, tmp_path):
-    """VERDICT r10 #4: the maintenance lock is a TTL lease. A live,
-    unexpired lease held on ANOTHER host excludes (pids can't be
-    probed across hosts — expiry is the only cross-host signal); an
-    EXPIRED lease is stolen no matter whose it is."""
-    import time as _time
-
-    from presto_rakam_kafka_spark.streaming.serving import (
-        ConcurrentMaintenanceError,
-    )
-
-    log = str(tmp_path / "log")
-    _write_log(spark, sf_dir, log, hi=300)
-    store = str(tmp_path / "store")
-    maintain_rollup(spark, log, store, _cells, GROUP, _merge(), up_to=100)
-    lock = os.path.join(store, "_MAINTENANCE_LOCK")
-
-    # live remote lease (pid unknown to this host, expiry in the future)
-    with open(lock, "w") as fh:
-        json.dump(
-            {"holder": "x", "pid": 1, "host": "some-other-host",
-             "expires": _time.time() + 300}, fh,
-        )
-    with pytest.raises(ConcurrentMaintenanceError):
-        maintain_rollup(spark, log, store, _cells, GROUP, _merge())
-
-    # expired remote lease: stolen, maintenance proceeds
-    with open(lock, "w") as fh:
-        json.dump(
-            {"holder": "x", "pid": 1, "host": "some-other-host",
-             "expires": _time.time() - 1}, fh,
-        )
-    maintain_rollup(spark, log, store, _cells, GROUP, _merge())
-    assert not os.path.exists(lock)
-    got = _got(
-        serve_rollup_tail(
-            spark, log, store, _cells, GROUP, _merge(), finish_fn=_finish
-        )
-    )
-    assert got == _expected(spark, sf_dir, hi=300)
-
-
 def test_fence_refuses_stale_commit_after_lease_steal(
     spark, sf_dir, tmp_path, monkeypatch
 ):
-    """The generation fence: a maintainer that lost its lease mid-fold
-    (here: a thief steals and commits between the victim's fold and its
-    flip) must have its commit REFUSED — the pointer stays on the
-    thief's generation, nothing is clobbered, and the store still
-    serves exactly."""
+    """The generation fence: a maintainer the maintenance lock does not
+    reach (another host on a mount without flock semantics — here a
+    thief calling the unlocked fold directly) commits between the
+    victim's fold and its flip; the victim's commit must be REFUSED —
+    the pointer stays on the thief's generation, nothing is clobbered,
+    and the store still serves exactly."""
     from presto_rakam_kafka_spark.streaming import serving as S
 
     log = str(tmp_path / "log")
@@ -956,12 +1040,9 @@ def test_fence_refuses_stale_commit_after_lease_steal(
 
     def thief_commits_first():
         monkeypatch.setattr(S, "_before_flip_hook", None)
-        # the thief got here by stealing the victim's EXPIRED lease —
-        # simulated by dropping the lock file the victim still holds
-        os.remove(os.path.join(store, "_MAINTENANCE_LOCK"))
-        maintain_rollup(
-            spark, log, store, _cells, GROUP, _merge(), up_to=200,
-            app_id="thief",
+        S._maintain_locked(
+            spark, log, store, _cells, GROUP, _merge(), "day", 200, "thief",
+            False,
         )
 
     monkeypatch.setattr(S, "_before_flip_hook", thief_commits_first)
@@ -982,7 +1063,7 @@ def test_fence_refuses_stale_commit_after_lease_steal(
 
 
 def test_stale_writer_cannot_overwrite_committed_generation(
-    spark, sf_dir, tmp_path, monkeypatch
+    spark, sf_dir, tmp_path
 ):
     """A thief that commits between a victim's pointer read and the
     victim's generation write: both derive the same next generation
@@ -997,19 +1078,16 @@ def test_stale_writer_cannot_overwrite_committed_generation(
     _write_log(spark, sf_dir, log, hi=600)
     store = str(tmp_path / "store")
     maintain_rollup(spark, log, store, _cells, GROUP, _merge(), up_to=100)
-    # the victim's renews cannot see the steal (they all landed before
-    # it): only the fence stands between the stale fold and the store
-    monkeypatch.setattr(S._store_lock, "renew", lambda self: None)
     stolen: list[int] = []
 
     def cells_after_theft(df_raw):
         if not stolen:
             stolen.append(1)
-            # the thief got here by stealing the victim's EXPIRED lease
-            os.remove(os.path.join(store, "_MAINTENANCE_LOCK"))
-            maintain_rollup(
-                spark, log, store, _cells, GROUP, _merge(), up_to=200,
-                app_id="thief",
+            # a maintainer the flock does not reach: only the fence
+            # stands between the stale fold and the store
+            S._maintain_locked(
+                spark, log, store, _cells, GROUP, _merge(), "day", 200,
+                "thief", False,
             )
         return _cells(df_raw)
 
@@ -1094,118 +1172,6 @@ def test_keyed_day_and_range_serve_exact(spark, sf_dir, tmp_path):
         )
     )
     assert got_range == {k: v for k, v in exp.items() if k[0] <= mid}
-
-
-def test_lease_renew_extends_expiry(spark, sf_dir, tmp_path):
-    """renew() pushes the EFFECTIVE lease expiry forward — via the
-    holder-keyed sidecar (round 12: renew never rewrites the shared
-    lease file, so it can never clobber a thief's fresh lease) — and a
-    would-be stealer's staleness check honors the extension."""
-    import time as _time
-
-    from presto_rakam_kafka_spark.streaming.serving import (
-        ConcurrentMaintenanceError,
-        _store_lock,
-    )
-
-    store = str(tmp_path / "store")
-    os.makedirs(store)
-    with _store_lock(store, ttl_s=40) as lk:
-        p = os.path.join(store, "_MAINTENANCE_LOCK")
-        with open(p) as fh:
-            first = json.load(fh)["expires"]
-        _time.sleep(0.05)
-        lk.renew()
-        # the shared lease file is untouched; the sidecar extends it
-        side = lk._sidecar_path(lk._holder)
-        with open(side) as fh:
-            renewed = json.load(fh)
-        assert renewed["expires"] > first
-        assert renewed["holder"] == lk._holder
-        # a second maintainer sees the extended lease as LIVE
-        thief = _store_lock(store)
-        with pytest.raises(ConcurrentMaintenanceError):
-            thief._held_lease_is_stale()
-    assert not os.path.exists(p)  # released on exit
-    assert not os.path.exists(side)  # sidecar released too
-
-
-def test_renew_past_lease_file_expiry_keeps_lease_alive(tmp_path):
-    """A slow-but-alive maintainer whose LEASE-FILE expiry has lapsed
-    but who renewed in time stays exclusive: staleness is judged on
-    max(lease expiry, sidecar expiry)."""
-    import time as _time
-
-    from presto_rakam_kafka_spark.streaming.serving import (
-        ConcurrentMaintenanceError,
-        _store_lock,
-    )
-
-    store = str(tmp_path / "store")
-    os.makedirs(store)
-    with _store_lock(store, ttl_s=0.2) as lk:
-        lk._ttl = 60.0  # renewals grant a fresh full window
-        lk.renew()
-        _time.sleep(0.3)  # lease FILE expiry lapses; sidecar holds
-        thief = _store_lock(store)
-        with pytest.raises(ConcurrentMaintenanceError):
-            thief._held_lease_is_stale()
-
-
-def test_lease_steal_race_single_winner(tmp_path):
-    """Many maintainers racing to steal the SAME expired lease: exactly
-    one may hold. Round 12 serializes every local lease mutation under
-    a kernel flock guard — a 4-way stress harness showed that every
-    observe-then-mutate steal over the bare path (remove, rename, even
-    rename+verify+restore) admits a double hold via the vacant-path
-    window between a winner's steal and its re-create."""
-    import threading
-    import time as _time
-
-    from presto_rakam_kafka_spark.streaming.serving import (
-        ConcurrentMaintenanceError,
-        _store_lock,
-    )
-
-    store = str(tmp_path / "store")
-    os.makedirs(store)
-    lock_path = os.path.join(store, "_MAINTENANCE_LOCK")
-    for trial in range(20):
-        with open(lock_path, "w") as fh:
-            json.dump(
-                {"holder": "crashed", "pid": 1, "host": "other-host",
-                 "expires": _time.time() - 5}, fh,
-            )
-        results: dict[str, object] = {}
-
-        def contend(name: str) -> None:
-            lk = _store_lock(store)
-            try:
-                lk.__enter__()
-                results[name] = lk
-            except ConcurrentMaintenanceError as exc:
-                results[name] = exc
-
-        ts = [
-            threading.Thread(target=contend, args=(f"t{i}",))
-            for i in range(4)
-        ]
-        for t in ts:
-            t.start()
-        for t in ts:
-            t.join()
-
-        holders = [v for v in results.values() if isinstance(v, _store_lock)]
-        losers = [
-            v for v in results.values()
-            if isinstance(v, ConcurrentMaintenanceError)
-        ]
-        assert len(holders) == 1 and len(losers) == 3, (trial, results)
-        # the winner's lease file is intact and carries ITS holder token
-        with open(lock_path) as fh:
-            assert json.load(fh)["holder"] == holders[0]._holder
-        holders[0].__exit__(None, None, None)
-        assert not os.path.exists(lock_path)
 
 
 def test_flip_lock_two_flippers_exactly_one_commit(
@@ -1316,29 +1282,6 @@ def test_flip_lock_crashed_holder_releases_via_kernel(
         )
     )
     assert got == _expected(spark, sf_dir, hi=300)
-
-
-def test_fold_renews_lease_between_phases(spark, sf_dir, tmp_path, monkeypatch):
-    """VERDICT r11 note #2 (liveness): a fold longer than the lease TTL
-    must renew BETWEEN phases — after the touched-days scan, after the
-    day-bucket write, and before the flip — so a slow backfill is not
-    stolen from mid-write and wasted. Spy on renew(): one batch
-    maintenance tick renews at least three times."""
-    from presto_rakam_kafka_spark.streaming.serving import _store_lock
-
-    calls = []
-    orig = _store_lock.renew
-
-    def spying_renew(self):
-        calls.append(1)
-        return orig(self)
-
-    monkeypatch.setattr(_store_lock, "renew", spying_renew)
-    log = str(tmp_path / "log")
-    _write_log(spark, sf_dir, log, hi=300)
-    store = str(tmp_path / "store")
-    maintain_rollup(spark, log, store, _cells, GROUP, _merge(), up_to=200)
-    assert len(calls) >= 3, calls
 
 
 def test_residual_filter_broadcast_join_path_exact(
@@ -1565,37 +1508,6 @@ def test_second_session_gets_pushdown_conf(spark, sf_dir, tmp_path):
     )
     assert got == _expected(spark, sf_dir, hi=100)
     del pe, resolvable
-
-
-def test_stolen_lease_renew_raises_and_exit_spares_thief(tmp_path):
-    """A holder whose lease was stolen must not clobber the thief:
-    renew() raises instead of overwriting the thief's live lease, and
-    __exit__ leaves a lease that is not ours untouched."""
-    from presto_rakam_kafka_spark.streaming.serving import (
-        ConcurrentMaintenanceError,
-        _store_lock,
-    )
-
-    store = str(tmp_path / "store")
-    os.makedirs(store)
-    lock_path = os.path.join(store, "_MAINTENANCE_LOCK")
-    victim = _store_lock(store)
-    victim.__enter__()
-    # thief steals (simulating post-expiry): replaces the lease file
-    thief = _store_lock(store)
-    os.remove(lock_path)
-    thief.__enter__()
-    with open(lock_path) as fh:
-        thief_lease = fh.read()
-
-    with pytest.raises(ConcurrentMaintenanceError, match="no longer held"):
-        victim.renew()
-    victim.__exit__(None, None, None)
-    # the thief's lease survived the victim's exit
-    with open(lock_path) as fh:
-        assert fh.read() == thief_lease
-    thief.__exit__(None, None, None)
-    assert not os.path.exists(lock_path)
 
 
 def test_grouped_topn_prune_exact_and_bounded(spark):
@@ -1847,12 +1759,16 @@ def test_purge_and_repair_holds_lease_across_sequence(
     spark, sf_dir, tmp_path, monkeypatch
 ):
     """Round-12 review finding #1: the one-call GDPR path must hold the
-    store lease across derive → purge → repair. A maintenance tick
-    interleaving between the day derivation and the purge would fold
-    victim rows beyond the derive-time HWM into cells the repair list
-    doesn't cover — a permanent leak the purged log can't even reveal.
-    Receipt: a maintainer attempting to tick WHILE the purge runs gets
-    ConcurrentMaintenanceError."""
+    store's maintenance lock across derive → purge → repair. A
+    maintenance tick interleaving between the day derivation and the
+    purge would fold victim rows beyond the derive-time HWM into cells
+    the repair list doesn't cover — a permanent leak the purged log
+    can't even reveal. Receipt: a maintainer started WHILE the purge
+    runs queues and commits only after the repair's commit, folding the
+    purged log."""
+    import threading
+    import time as _time
+
     from presto_rakam_kafka_spark.fixtures import read_table
     from presto_rakam_kafka_spark.sources import kafka_datasource as KD
     from presto_rakam_kafka_spark.streaming import serving as S
@@ -1871,17 +1787,33 @@ def test_purge_and_repair_holds_lease_across_sequence(
     maintain_rollup(spark, log, store, _cells, GROUP, _merge(), up_to=200)
 
     raced: list[object] = []
+    commits: list[str] = []
     real_purge = KD.purge_keys
+    real_commit_days = S._commit_days
+
+    def recording_commit_days(store_, gen_read, txns, txn, *args):
+        out = real_commit_days(store_, gen_read, txns, txn, *args)
+        commits.append(txn[0])
+        return out
+
+    def racer():
+        try:
+            maintain_rollup(spark, log, store, _cells, GROUP, _merge(),
+                            app_id="racer")
+            raced.append("maintained")
+        except BaseException as exc:  # noqa: BLE001 — asserted below
+            raced.append(exc)
+
+    racer_t = threading.Thread(target=racer)
 
     def racing_purge(path, keys, partitions=None):
-        # a live maintainer ticks mid-purge: the held lease must exclude
-        try:
-            maintain_rollup(spark, log, store, _cells, GROUP, _merge())
-            raced.append("maintained")  # would be the leak
-        except S.ConcurrentMaintenanceError as exc:
-            raced.append(exc)
+        # a live maintainer ticks mid-purge: the held lock must queue it
+        racer_t.start()
+        _time.sleep(1.0)  # the racer is parked on the lock by now
+        assert not raced
         return real_purge(path, keys, partitions)
 
+    monkeypatch.setattr(S, "_commit_days", recording_commit_days)
     monkeypatch.setattr(KD, "purge_keys", racing_purge)
     victims = [
         str(r["user_id"]).encode()
@@ -1891,8 +1823,9 @@ def test_purge_and_repair_holds_lease_across_sequence(
     S.purge_and_repair_rollup(
         spark, log, store, victims, _cells, GROUP, _merge()
     )
-    assert len(raced) == 1
-    assert isinstance(raced[0], S.ConcurrentMaintenanceError), raced
+    racer_t.join(timeout=300)
+    assert not racer_t.is_alive() and raced == ["maintained"], raced
+    assert commits == ["repair", "racer"], commits
     # post-repair serve still exact over the purged covered prefix +
     # purged tail
     victim_ids = {int(v.decode()) for v in victims}
@@ -2038,67 +1971,14 @@ def test_hand_repair_clears_covered_intent_days(spark, sf_dir, tmp_path):
     assert got == _expected(spark, sf_dir, hi=400)
 
 
-def test_keepalive_renews_through_slow_single_phase(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """VERDICT r12 #6: between-phase renews keep a multi-phase fold
-    alive, but ONE phase longer than the TTL (a huge day bucket's
-    write) still expired mid-phase. The keepalive heartbeat renews
-    DURING the phase: a fold whose every pass sleeps past several tiny
-    TTLs completes, commits unfenced, and a thief probing mid-phase
-    finds the lease LIVE (ConcurrentMaintenanceError), not expired."""
-    import threading
-    import time as _time
-
-    from presto_rakam_kafka_spark.streaming import serving as S
-
-    monkeypatch.setattr(S, "_LEASE_TTL_S", 1.0)
-    log = str(tmp_path / "log")
-    _write_log(spark, sf_dir, log, hi=300)
-    store = str(tmp_path / "store")
-
-    def slow_cells(df_raw):
-        def nap(batches):
-            for pdf in batches:
-                _time.sleep(0.6)  # > TTL/2 per batch, several per pass
-                yield pdf
-
-        return _cells(df_raw.mapInPandas(nap, schema=df_raw.schema))
-
-    thief: list[object] = []
-
-    def steal_attempt():
-        _time.sleep(1.8)  # well past the un-renewed TTL, mid-phase
-        try:
-            with S._store_lock(store):
-                thief.append("stole")  # keepalive failed: lease expired
-        except S.ConcurrentMaintenanceError as exc:
-            thief.append(exc)
-
-    t = threading.Thread(target=steal_attempt)
-    t.start()
-    maintain_rollup(spark, log, store, slow_cells, GROUP, _merge())
-    t.join(timeout=30)
-    assert thief and thief[0] != "stole"  # live mid-phase, not expired
-    gen, txns, _hwm = _read_pointer(store)
-    assert gen is not None and txns  # committed, fence never tripped
-    got = _got(serve_rollup_tail(
-        spark, log, store, _cells, GROUP, _merge(), finish_fn=_finish
-    ))
-    assert got == _expected(spark, sf_dir, hi=300)
-
-
 def test_concurrent_maintainers_and_serves_storm(spark, sf_dir, tmp_path):
     """Round-13 composition stress: four maintainers hammer ONE store
-    (tiny TTL, keepalive, graced GC all active) while serves read
-    concurrently. Invariants: the only maintainer-visible errors are
-    the cooperative ones (ConcurrentMaintenanceError on a live lease,
-    FencedMaintenanceError on a lost race), serves never crash (the
-    graced GC keeps their snapshots alive), and the final serve equals
-    truth exactly."""
+    (maintenance lock and graced GC active) while serves read
+    concurrently. Invariants: maintainers queue on the lock, so none
+    sees any error — not even FencedMaintenanceError — serves never
+    crash (the graced GC keeps their snapshots alive), and the final
+    serve equals truth exactly."""
     import threading
-
-    from presto_rakam_kafka_spark.streaming import serving as S
 
     log = str(tmp_path / "log")
     _write_log(spark, sf_dir, log, hi=400)
@@ -2106,21 +1986,14 @@ def test_concurrent_maintainers_and_serves_storm(spark, sf_dir, tmp_path):
     maintain_rollup(spark, log, store, _cells, GROUP, _merge(), up_to=50)
 
     unexpected: list[BaseException] = []
-    cooperative = 0
-    lock = threading.Lock()
 
     def maintainer(seed: int):
-        nonlocal cooperative
         for i in range(3):
             try:
                 maintain_rollup(
                     spark, log, store, _cells, GROUP, _merge(),
                     up_to=100 + 50 * ((seed + i) % 6),
                 )
-            except (S.ConcurrentMaintenanceError,
-                    S.FencedMaintenanceError):
-                with lock:
-                    cooperative += 1
             except BaseException as exc:  # noqa: BLE001 — surfaced below
                 unexpected.append(exc)
 
@@ -2154,10 +2027,9 @@ def test_flock_unsupported_degrades_not_bricks(
     spark, sf_dir, tmp_path, monkeypatch
 ):
     """Round-12 review finding #3: on a filesystem without flock
-    semantics (ENOTSUP), the flip micro-lock degrades to fence-only and
-    the lease guard to the TTL-only protocol — maintenance and serves
-    keep working instead of stalling out with a 'wedged filesystem'
-    error on every commit."""
+    semantics (ENOTSUP), the flip lock and the maintenance lock degrade
+    to fence-only — maintenance and serves keep working instead of
+    stalling out with a 'wedged filesystem' error on every commit."""
     import errno
     import fcntl as _fcntl
 

@@ -1845,7 +1845,7 @@ def test_cdc_concurrent_merges_queue_not_clobber(spark):
 def test_rollup_state_flip_is_fenced(spark, monkeypatch):
     """ADVICE r12 #2: the windowed-cells/rolling-pairs state commits
     must refuse a stale publish when the pointer moved since the fold's
-    read — on a flock-less filesystem the .MAINT_GUARD excludes nothing
+    read — on a flock-less filesystem the .MAINT_LOCK excludes nothing
     and two maintainers would otherwise clobber generation dirs and
     last-writer-win the pointer. The hook lands a second maintainer's
     flip inside the check-then-flip window."""
