@@ -1,6 +1,6 @@
-"""Time-graced retirement shared by every tier that garbage-collects
-superseded generation directories (serving store, rollup state, CDC
-snapshots, segment log, ANN index).
+"""Time-graced retirement of superseded generation directories, used
+by ``genstore.gc`` for every generation store (serving store, rollup
+state, CDC snapshots, segment log, ANN index).
 
 Round-13 discipline (VERDICT r12 #2): count-based grace ("keep the
 newest superseded generation") protects a reader across exactly ONE
@@ -31,12 +31,12 @@ RETIRED_MARKER = ".RETIRED"
 
 def clear_retirement_marker(gdir: str) -> None:
     """Remove a stale ``.RETIRED`` marker from a directory that turned
-    out to be LIVE (referenced). Without this, a marker written while
-    the dir was transiently unreferenced — an ANN delta between its
-    write and its manifest commit — would silently pre-age the dir:
-    hours later, the first GC pass after a genuine supersession reads
-    the old marker and deletes immediately, stranding mid-scan readers
-    with zero grace (round-13 third review)."""
+    out to be retained. Without this, a marker written by a pass that
+    saw the dir as a victim — one run with a smaller ``keep_last`` than
+    the next — would silently pre-age the dir: hours later, the first
+    GC pass after a genuine supersession reads the old marker and
+    deletes immediately, stranding mid-scan readers with zero grace
+    (round-13 third review)."""
     try:
         os.remove(os.path.join(gdir, RETIRED_MARKER))
     except OSError:

@@ -1,7 +1,9 @@
 """The one commit protocol of the generation-sequence stores: the
-serving store, the rollup state, the CDC snapshot and each
-``partition=N/`` of a segment log (whose generations carry no
+serving store, the rollup state, the CDC snapshot, the IVF-PQ index
+and each ``partition=N/`` of a segment log (whose generations carry no
 manifest: a partition's segments are its generation dir's listing).
+The dataset export's single manifest uses the same lock and durable
+JSON write (:func:`maintenance_lock`, :func:`write_json`).
 
 A store is a directory of immutable generation dirs ``gen-NNNNNNNNNN``
 plus a ``_CURRENT`` pointer, the JSON object ``{"gen", "txns",
@@ -116,7 +118,7 @@ def fsync(path: str) -> None:
         os.close(fd)
 
 
-def _fsync_tree(root: str) -> int:
+def fsync_tree(root: str) -> int:
     """fsync every file under ``root``, then each dir bottom-up (``root``
     last). Returns the number of files."""
     n = 0
@@ -382,7 +384,7 @@ class Generation:
         (app_id, epoch) in ``txns`` (never moving an app backwards), flip
         with ``payload``, then :func:`gc` keeping ``keep_last``
         generations (None: no GC)."""
-        n_files = sum(_fsync_tree(w) for w, _final in self.renames)
+        n_files = sum(fsync_tree(w) for w, _final in self.renames)
         if manifest is not None:
             write_json(os.path.join(self.dir, MANIFEST), manifest)
         txns = dict(txns)

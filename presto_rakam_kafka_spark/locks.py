@@ -1,7 +1,7 @@
 """Kernel-flock guards shared by every tier that publishes atomic
 pointer/generation flips (serving store, rollup state, CDC snapshot,
-segment log, ANN index). Whole maintenance ops take them through
-``genstore.maintenance_lock``.
+segment log, ANN index) or a manifest (the dataset export). Whole
+maintenance ops take them through ``genstore.maintenance_lock``.
 
 Round-12 lesson, promoted to a module: **no observe-then-mutate
 protocol over a bare lock path is sound** — ``rename``/``remove`` act

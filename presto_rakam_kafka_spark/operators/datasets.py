@@ -26,6 +26,10 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from presto_rakam_kafka_spark import genstore
+
+_MANIFEST = "_MANIFEST.json"
+
 
 def shard_expr(id_col: str, num_shards: int) -> str:
     """Deterministic engine-portable shard id: top 4 md5 hex chars of
@@ -105,10 +109,10 @@ def export_dataset(
     per-shard (n_docs, n_tokens, checksum) rows from
     :func:`shard_stats`. Returns the manifest dict.
 
-    The manifest is written LAST, after the data commit — a reader
-    that requires the manifest therefore never sees a half-written
-    export (the same publish-ordering discipline as the segment
-    writer's two-phase commit)."""
+    The manifest is written LAST, after the data files are synced — a
+    reader that requires the manifest therefore never sees a
+    half-written export, even after a power loss (the same
+    publish-ordering discipline as the ``genstore`` commits)."""
     out = df.withColumn("shard", F.expr(shard_expr(id_col, num_shards)))
     out.write.mode("overwrite").partitionBy("shard").parquet(path)
     stats = {
@@ -126,10 +130,8 @@ def export_dataset(
         "total_docs": sum(s["n_docs"] for s in stats.values()),
         "total_tokens": sum(s["n_tokens"] for s in stats.values()),
     }
-    tmp = os.path.join(path, "_MANIFEST.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.replace(tmp, os.path.join(path, "_MANIFEST.json"))
+    genstore.fsync_tree(path)
+    genstore.write_json(os.path.join(path, _MANIFEST), manifest)
     return manifest
 
 
@@ -137,7 +139,7 @@ def verify_export(spark, path: str, text_col: str, id_col: str) -> bool:
     """Integrity check a reader runs before training: recompute the
     per-shard stats from the exported files and compare to the
     manifest. True iff every shard matches (count, tokens, checksum)."""
-    with open(os.path.join(path, "_MANIFEST.json")) as f:
+    with open(os.path.join(path, _MANIFEST)) as f:
         manifest = json.load(f)
     df = spark.read.parquet(path)
     got = {
@@ -149,6 +151,31 @@ def verify_export(spark, path: str, text_col: str, id_col: str) -> bool:
         for k, v in manifest["shards"].items()
     }
     return got == want
+
+
+def _read_export_manifest(mpath: str, version: str, num_shards: int) -> dict:
+    """The streaming export's manifest, or an empty one. A manifest from
+    the pre-(app_id, epoch) exporter (the r7 shape recorded an
+    ``epochs`` list) is migrated in memory: the default app's
+    high-water mark is seeded from it, so a post-upgrade replay of an
+    already-committed epoch is still skipped instead of re-folding its
+    stats (ADVICE r8); the next commit persists the migrated shape."""
+    try:
+        with open(mpath) as f:
+            manifest = json.load(f)
+    except FileNotFoundError:
+        return {
+            "version": version,
+            "num_shards": num_shards,
+            "shards": {},
+            "txns": {},
+        }
+    if "txns" not in manifest:
+        legacy = manifest.pop("epochs", [])
+        manifest["txns"] = (
+            {"default": max(int(e) for e in legacy)} if legacy else {}
+        )
+    return manifest
 
 
 def export_batch_fn(
@@ -164,14 +191,15 @@ def export_batch_fn(
     ``epoch_id``).
 
     Idempotence comes from the epoch-keyed two-phase commit — the same
-    discipline as `streaming/sinks.py` and the segment writer
-    (`sources/kafka_datasource.py`):
+    discipline as `streaming/sinks.py` and the ``genstore`` stores:
 
     1. the batch's rows are written under ``epoch=<id>/shard=<k>/`` with
-       ``mode("overwrite")`` on the epoch directory, and
-    2. the manifest flip both accumulates the batch's per-shard stats
-       AND records ``manifest["txns"][app_id] = epoch``; a batch at or
-       below its app's committed epoch is skipped entirely.
+       ``mode("overwrite")`` on the epoch directory, then fsynced, and
+    2. under the export's ``genstore.maintenance_lock`` the manifest is
+       re-read, and one ``genstore.write_json`` replace both accumulates
+       the batch's per-shard stats AND records
+       ``manifest["txns"][app_id] = epoch``; a batch at or below its
+       app's committed epoch is skipped entirely.
 
     The txn key is ``(app_id, epoch)`` — Delta's foreachBatch
     txnAppId/txnVersion recipe — NOT the epoch alone: a stream
@@ -194,31 +222,13 @@ def export_batch_fn(
     accumulated once — detected by verify_export, but the export then
     needed a manual rebuild.)"""
 
+    mpath = os.path.join(path, _MANIFEST)
+
     def on_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        mpath = os.path.join(path, "_MANIFEST.json")
-        if os.path.exists(mpath):
-            with open(mpath) as f:
-                manifest = json.load(f)
-            if "txns" not in manifest:
-                # migrate a pre-(app_id, epoch) manifest (the r7 shape
-                # recorded an 'epochs' list): seed the default app's
-                # high-water mark from it so a post-upgrade replay of an
-                # already-committed epoch is still skipped instead of
-                # re-folding its stats into the manifest (ADVICE r8)
-                legacy = manifest.pop("epochs", [])
-                manifest["txns"] = (
-                    {"default": max(int(e) for e in legacy)} if legacy else {}
-                )
-        else:
-            manifest = {
-                "version": version,
-                "num_shards": num_shards,
-                "shards": {},
-                "txns": {},
-            }
-        if int(epoch_id) <= manifest.get("txns", {}).get(app_id, -1):
+        committed = _read_export_manifest(mpath, version, num_shards)["txns"]
+        if int(epoch_id) <= committed.get(app_id, -1):
             return  # already committed by THIS app — replay, exactly-once skip
         out = batch_df.withColumn(
             "shard", F.expr(shard_expr(id_col, num_shards))
@@ -236,23 +246,14 @@ def export_batch_fn(
                 batch_df, text_col, id_col, num_shards
             ).collect()
         }
-        # commit the stats under a flock guard, RE-READING the manifest
-        # inside the critical section (round 12): the manifest supports
+        genstore.fsync_tree(epoch_dir)
+        # merge the stats under the export's maintenance lock, RE-READING
+        # the manifest inside it (round 12): the manifest supports
         # multiple concurrent appending apps (per-app txns), and an
         # unguarded read-merge-replace lost whichever app's stats
         # committed first — counts silently wrong, verify_export red.
-        from presto_rakam_kafka_spark.locks import flock_guard
-
-        with flock_guard(mpath + ".guard"):
-            if os.path.exists(mpath):
-                with open(mpath) as f:
-                    manifest = json.load(f)
-                if "txns" not in manifest:
-                    legacy = manifest.pop("epochs", [])  # same migration
-                    manifest["txns"] = (
-                        {"default": max(int(e) for e in legacy)}
-                        if legacy else {}
-                    )
+        with genstore.maintenance_lock(path, "export_batch"):
+            manifest = _read_export_manifest(mpath, version, num_shards)
             if int(epoch_id) <= manifest["txns"].get(app_id, -1):
                 return  # committed while we built the epoch dir: replay
             shards = {int(k): v for k, v in manifest["shards"].items()}
@@ -266,19 +267,14 @@ def export_batch_fn(
                     "checksum": prev["checksum"] + c,
                 }
             manifest["shards"] = shards
-            txns = dict(manifest.get("txns", {}))
-            txns[app_id] = int(epoch_id)
-            manifest["txns"] = txns
+            manifest["txns"][app_id] = int(epoch_id)
             manifest["total_docs"] = sum(
                 s["n_docs"] for s in shards.values()
             )
             manifest["total_tokens"] = sum(
                 s["n_tokens"] for s in shards.values()
             )
-            tmp = mpath + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(manifest, f, indent=1, sort_keys=True)
-            os.replace(tmp, mpath)
+            genstore.write_json(mpath, manifest)
 
     return on_batch
 

@@ -21,9 +21,13 @@ All cosine math is the left-fold double form from
 
 from __future__ import annotations
 
+import os
+import sys
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from presto_rakam_kafka_spark import genstore
 from presto_rakam_kafka_spark.functions.hashing import hyperplanes
 from presto_rakam_kafka_spark.operators.dedup import cosine_expr, cosine_expr_duckdb
 from presto_rakam_kafka_spark.fixtures import staging_mkdtemp
@@ -1608,58 +1612,47 @@ def assign_clusters_pandas(
     return df.select(id_col, vec_col).mapInPandas(fn, schema)
 
 
-class ConcurrentIndexMaintenanceError(RuntimeError):
-    """The index manifest changed between a compaction's fold and its
-    publish — an upsert landed mid-fold; flipping the stale fold would
-    silently drop that upsert's vectors from every probe."""
+#: the index is a ``genstore`` store: commits log as ``tier=similarity``
+#: and read this module's test-injection hooks
+_TIER = sys.modules[__name__]
+
+#: test-injection point: called after an index commit has written its
+#: delta and manifest, right before its fenced flip — the window a
+#: concurrent maintainer (GC, another upsert, a compaction) must be
+#: proven safe against.
+_before_flip_hook = None
 
 
-def _next_auto_id(deltas: list[str]) -> int:
-    """Next ordinal for an auto-named delta: max over the NUMERIC
-    second segment of existing names, +1. Pinned names (the streaming
-    exactly-once keys, e.g. ``delta-epoch-3``) carry a non-numeric
-    segment and are skipped — the r11 parse crashed the first
-    auto-upsert after any pinned one."""
-    ids = [
-        int(parts[1])
-        for d in deltas
-        if len(parts := d.split("-")) > 1 and parts[1].isdigit()
+def _index_pointer(path: str) -> tuple[str, dict[str, int]]:
+    """The index's committed generation and ``{app_id: epoch}`` txn
+    record. A pointer from before the index was a generation store (a
+    bare ``deltas`` list, no ``gen``) is refused, never overwritten: a
+    commit over it would drop every delta it names."""
+    gen, txns, payload = genstore.read_pointer(path)
+    if gen is None:
+        if "deltas" in payload:
+            raise ValueError(
+                f"{path}: IVF-PQ index in the legacy delta-list layout "
+                f"(its pointer names {payload['deltas']!r}, no generation); "
+                f"rebuild it with init_ivfpq_index — its delta-* dirs are "
+                f"neither read nor removed"
+            )
+        raise FileNotFoundError(
+            f"{path}: no IVF-PQ index; create one with init_ivfpq_index"
+        )
+    return gen, txns
+
+
+def _write_delta(g: genstore.Generation, coded: DataFrame,
+                 carried: dict[str, list[str]]) -> dict:
+    """Write ``coded`` list-partitioned into ``g``'s write dir; returns
+    the manifest naming it beside the ``carried`` deltas."""
+    coded.write.mode("overwrite").partitionBy("list_id").parquet(g.dir)
+    files = [
+        f for sub in sorted(os.listdir(g.dir)) if sub.startswith("list_id=")
+        for f in g.files(sub)
     ]
-    return (max(ids) + 1) if ids else len(deltas)
-
-
-def _unique_delta_name(deltas: list[str]) -> str:
-    """Auto-allocated PHYSICAL delta dir name — ordinal for ordering,
-    random suffix for uniqueness (round 12): names derived from an
-    UNLOCKED manifest read collide — two concurrent auto-upserts, or a
-    compaction's fold racing an upsert, both derive ``gen+1`` and the
-    later ``mode=overwrite`` write destroys the earlier one's DATA even
-    when the manifest commit itself is protected. Pinned names
-    (``delta_name=``) stay caller-chosen: they are the idempotence key
-    of ONE writer's replays, not a cross-writer allocation."""
-    import os as _os
-
-    return f"delta-{_next_auto_id(deltas):08d}-{_os.urandom(4).hex()}"
-
-
-def _read_manifest(path: str) -> list[str]:
-    import json
-    import os
-
-    with open(os.path.join(path, "_CURRENT")) as f:
-        return json.load(f)["deltas"]
-
-
-def _flip_manifest(path: str, deltas: list[str]) -> None:
-    """Replace the index manifest atomically and durably with
-    :func:`genstore.write_json` — the generation stores' pointer write —
-    so a concurrent reader sees either the old delta set or the new
-    one, never a half-written file or a partially-visible delta."""
-    import os
-
-    from presto_rakam_kafka_spark import genstore
-
-    genstore.write_json(os.path.join(path, "_CURRENT"), {"deltas": deltas})
+    return {"deltas": {**carried, g.name: files}}
 
 
 def init_ivfpq_index(
@@ -1673,32 +1666,23 @@ def init_ivfpq_index(
     m: int = PQ_M,
     ksub: int = PQ_KSUB,
 ) -> None:
-    """Create an INCREMENTAL persisted IVF-PQ index at ``path``:
-    delta directories (each list-partitioned parquet, exactly the
-    :func:`stage_ivfpq_index` layout) plus a ``_CURRENT`` manifest
-    naming the live deltas. Geometry (centroids/codebooks) is frozen
-    at init — upserts code new vectors against the same broadcast
-    literals, the standard IVF discipline (re-training centroids is a
-    rebuild, not an upsert)."""
-    import os
-
+    """Create an INCREMENTAL persisted IVF-PQ index at ``path``: a
+    ``genstore`` store whose generations are delta directories (each
+    list-partitioned parquet, exactly the :func:`stage_ivfpq_index`
+    layout) and whose committed manifest names the live deltas.
+    Geometry (centroids/codebooks) is frozen at init — upserts code new
+    vectors against the same broadcast literals, the standard IVF
+    discipline (re-training centroids is a rebuild, not an upsert).
+    Over an existing index (either layout) this is that rebuild: one
+    commit naming only the new delta, with an empty txn record."""
     os.makedirs(path, exist_ok=True)
     coded = ivfpq_code_corpus(
         corpus, vec_col, id_col, dim, num_centroids=num_centroids, m=m, ksub=ksub
     )
-    delta = "delta-00000000"
-    coded.write.mode("overwrite").partitionBy("list_id").parquet(
-        os.path.join(path, delta)
-    )
-    _flip_manifest(path, [delta])
-
-
-#: test-injection point: called between an upsert's delta write and its
-#: manifest commit — the window a concurrent maintainer (GC, another
-#: upsert, a compaction) must be proven safe against. Tests and the
-#: `sim_topk_stream_batch_upsert` gate row use it to land a concurrent
-#: commit deterministically inside that window.
-_before_upsert_commit_hook = None
+    with genstore.maintenance_lock(path, "init_ivfpq_index") as held:
+        gen = genstore.read_pointer(path)[0]
+        with genstore.Generation(path, gen, _TIER, reclaim=held) as g:
+            g.commit({}, manifest=_write_delta(g, coded, {}))
 
 
 def upsert_ivfpq_index(
@@ -1711,75 +1695,73 @@ def upsert_ivfpq_index(
     num_centroids: int = NUM_CENTROIDS,
     m: int = PQ_M,
     ksub: int = PQ_KSUB,
-    delta_name: str | None = None,
+    txn: tuple[str, int] | None = None,
 ) -> str:
     """Index NEW vectors without rebuilding: code them against the
-    frozen geometry, write one new list-partitioned delta directory,
-    then atomically flip the manifest to include it (write-then-flip:
-    a failure before the flip leaves an orphan directory invisible to
-    every reader — the same two-phase append discipline as the
-    `kafka_segments` writer). Returns the delta's name.
+    frozen geometry and commit them as one new list-partitioned delta
+    generation whose manifest carries every earlier delta by reference.
+    Write-then-flip: a failure before the flip leaves only a write dir
+    no reader resolves. Returns the committed generation.
 
-    ``delta_name`` pins the delta directory name instead of allocating
-    the next free id — the exactly-once hook for streaming ingestion
-    (`streaming/ann_index.py` passes ``epoch-<id>``): if the pinned
-    name is already live in the manifest the whole upsert is a no-op,
-    so a replayed foreachBatch can never index the same vectors twice
-    (duplicate entries would displace genuine neighbors in top-k
-    probes); a replay after a crash BEFORE the flip overwrites the
-    same directory and then commits once.
+    The whole upsert runs under the index's
+    ``genstore.maintenance_lock``, so two upserts on one host QUEUE and
+    the second commits on top of the first; a writer the flock does not
+    reach is refused by the generation fence
+    (:class:`~presto_rakam_kafka_spark.genstore.FencedMaintenanceError`).
+
+    ``txn`` = (app_id, epoch) is the exactly-once key of streaming
+    ingestion (`streaming/ann_index.py`): it is recorded in the same
+    pointer replace as the delta, and an upsert whose epoch is at or
+    below its app's recorded one is a no-op returning the committed
+    generation, so a replayed foreachBatch never indexes its vectors
+    twice (duplicate entries would displace genuine neighbors in top-k
+    probes).
 
     100 TB shape: an upsert touches ONLY the new vectors (one coded
     projection + one partitioned write); probes stay partition-pruned
     because every delta shares the `list_id=` layout, so a probe of
-    lists L opens |deltas| × |L| partition directories — compaction
-    (fold deltas into one) reuses init on the unioned index when
-    |deltas| grows, exactly like segment compaction."""
-    import os
+    lists L opens |deltas| × |L| partition directories —
+    :func:`compact_ivfpq_index` folds them into one when |deltas|
+    grows, exactly like segment compaction."""
+    with genstore.maintenance_lock(path, "upsert_ivfpq_index") as held:
+        return _upsert_locked(
+            new_vectors, path, vec_col, id_col, dim, num_centroids, m, ksub,
+            txn, held,
+        )
 
-    from presto_rakam_kafka_spark.locks import flock_guard
 
-    deltas = _read_manifest(path)
-    if delta_name is not None:
-        if delta_name in deltas:
-            return delta_name  # already committed — idempotent replay
-        delta = delta_name
-    else:
-        delta = _unique_delta_name(deltas)
+def _upsert_locked(
+    new_vectors: DataFrame, path: str, vec_col: str, id_col: str, dim: int,
+    num_centroids: int, m: int, ksub: int, txn: tuple[str, int] | None,
+    held: bool,
+) -> str:
+    gen, txns = _index_pointer(path)
+    if txn is not None and int(txn[1]) <= txns.get(txn[0], -1):
+        return gen  # replayed txn: already committed
     coded = ivfpq_code_corpus(
         new_vectors, vec_col, id_col, dim,
         num_centroids=num_centroids, m=m, ksub=ksub,
     )
-    coded.write.mode("overwrite").partitionBy("list_id").parquet(
-        os.path.join(path, delta)
-    )
-    if _before_upsert_commit_hook is not None:
-        _before_upsert_commit_hook()
-    # commit under the index flock, RE-READING the manifest inside the
-    # critical section (round 12): two concurrent upserts that both
-    # read [d0] and flipped [d0, mine] last-writer-lost the other's
-    # delta — orphaned on disk, its vectors silently absent from every
-    # probe. Upsert commits are commutative appends, so the fix is
-    # simply merge-at-commit; flock does not span object stores, where
-    # a single ingest owner per index remains the documented contract.
-    with flock_guard(os.path.join(path, ".MAINT_LOCK")):
-        live = _read_manifest(path)
-        if delta not in live:
-            _flip_manifest(path, live + [delta])
-    return delta
+    with genstore.Generation(path, gen, _TIER, reclaim=held) as g:
+        man = _write_delta(
+            g, coded, genstore.read_manifest(path, gen)["deltas"]
+        )
+        g.commit(txns, txn, manifest=man)
+    return g.name
 
 
 def read_ivfpq_index(spark, path: str) -> DataFrame:
-    """The live index: the union of the manifest's delta directories.
-    Deltas are read as separate partitioned tables and unioned (Spark
-    rejects multiple partitioned roots in one read), so a probe's
-    `list_id IN (...)` filter pushes into EVERY delta's scan as a
-    partition filter — pruning is per-delta, plan-asserted in tests."""
+    """The live index: the union of the committed manifest's delta
+    generations. Deltas are read as separate partitioned tables and
+    unioned (Spark rejects multiple partitioned roots in one read), so a
+    probe's `list_id IN (...)` filter pushes into EVERY delta's scan as
+    a partition filter — pruning is per-delta, plan-asserted in tests."""
     import functools
-    import os
 
+    gen = _index_pointer(path)[0]
     frames = [
-        spark.read.parquet(os.path.join(path, d)) for d in _read_manifest(path)
+        spark.read.parquet(os.path.join(path, d))
+        for d in sorted(genstore.read_manifest(path, gen)["deltas"])
     ]
     return functools.reduce(lambda a, b: a.unionByName(b), frames)
 
@@ -1800,9 +1782,6 @@ def stage_ivfpq_index_upserted(
     the staged two-delta index the upsert gate query probes (cached per
     key like the other layout stagings: cold pays init+upsert, warm
     pays only the probe, mirroring build-once/probe-many)."""
-    import os
-    import tempfile
-
     key = (cache_key, f"ivfpq_upsert:{vec_col}:{num_centroids}:{m}:{ksub}")
     if key in _INDEX_CACHE and os.path.isdir(_INDEX_CACHE[key]):
         return _INDEX_CACHE[key]
@@ -1823,100 +1802,37 @@ def compact_ivfpq_index(spark, path: str) -> str:
     """Fold ALL live deltas into one — the index counterpart of
     segment compaction (`kafka_datasource.py:compact_segments`):
     upserts grow the delta list (probe opens |deltas| × |lists|
-    directories), compaction reads the manifest union once, rewrites
-    it as a single list-partitioned delta, and atomically flips the
-    manifest to just that delta. Old directories stay on disk for
-    in-flight readers of the previous snapshot; :func:`gc_ivfpq_index`
-    removes them once drained (the caller owns that retention window,
-    exactly like segment GC)."""
-    import os
-
-    from presto_rakam_kafka_spark.locks import flock_guard
-
-    deltas = _read_manifest(path)
-    merged = read_ivfpq_index(spark, path)
-    delta = _unique_delta_name(deltas)  # never collides with an upsert
-    merged.write.mode("overwrite").partitionBy("list_id").parquet(
-        os.path.join(path, delta)
-    )
-    # FENCED flip (round 12): the compacted delta embodies exactly the
-    # manifest read above — an upsert committing between that read and
-    # this flip would have its delta silently dropped from the index.
-    # Unlike an upsert, a compaction cannot merge-at-commit (its data
-    # is already folded), so a changed manifest refuses the publish;
-    # the orphan fold dir is reclaimed by gc_ivfpq_index.
-    with flock_guard(os.path.join(path, ".MAINT_LOCK")):
-        live = _read_manifest(path)
-        if live != deltas:
-            raise ConcurrentIndexMaintenanceError(
-                f"index {path}: manifest changed {deltas} → {live} during "
-                f"compaction; refusing stale publish {delta!r} (an upsert "
-                f"landed mid-fold — rerun compaction)"
-            )
-        _flip_manifest(path, [delta])
-    return delta
-
-
-#: unreferenced delta dirs younger than this survive GC — an upsert
-#: writes its delta BEFORE its flock'd manifest commit, so a fresh
-#: unreferenced dir may be an IN-FLIGHT upsert about to commit, not
-#: garbage (VERDICT r12 #2a). 15 min bounds any realistic write-to-
-#: commit gap (the commit is µs after the write finishes); the
-#: Delta/Iceberg vacuum-retention discipline.
-GC_DELTA_GRACE_S = 900.0
+    directories), compaction reads the manifest union once and commits
+    it as a single list-partitioned delta generation whose manifest
+    names only itself. Runs under the index's maintenance lock, so
+    upserts queue behind it; a writer the lock does not reach that
+    commits mid-fold makes the fold stale, and the generation fence
+    refuses it (``FencedMaintenanceError``) instead of dropping that
+    writer's delta. Superseded deltas stay on disk for in-flight
+    readers of the previous snapshot until :func:`gc_ivfpq_index`
+    retires them. Returns the committed generation."""
+    with genstore.maintenance_lock(path, "compact_ivfpq_index") as held:
+        gen, txns = _index_pointer(path)
+        merged = read_ivfpq_index(spark, path)
+        with genstore.Generation(path, gen, _TIER, reclaim=held) as g:
+            g.commit(txns, manifest=_write_delta(g, merged, {}))
+    return g.name
 
 
 def gc_ivfpq_index(path: str, grace_s: float | None = None) -> list[str]:
-    """Delete delta directories no longer referenced by the manifest —
-    under the index maintenance flock AND a time grace (round 13,
-    VERDICT r12 #2a): the flock serializes the manifest read against
-    in-flight commits (upserts and compactions hold it to flip), and
-    the grace protects the write-before-commit window the lock cannot
-    see — an upsert's delta dir exists before its manifest entry, and
-    the round-12 GC deleted exactly those, leaving the upsert to
-    commit a manifest pointing at a dead dir (every later probe of its
-    lists failed). A dir is garbage only when it is BOTH unreferenced
-    and observed unreferenced for ``grace_s`` (the shared ``.RETIRED``
-    marker discipline, `gc_utils` — a dir's mtime measures CREATION,
-    so an old delta superseded by compaction a second ago would
-    mis-age and strand a mid-scan probe; the round-13 second review
-    caught exactly that). The marker also covers the in-flight upsert:
-    its fresh pre-commit delta gets a first-observation marker and a
-    skip, and by the next aged pass it is either committed (referenced
-    → live) or provably orphaned. ``grace_s=0.0`` is the explicit
-    force-override (the Delta vacuum ``retentionDurationCheck`` escape
-    hatch — caller asserts no writer or reader is in flight)."""
-    import os
-    import shutil
-
-    from presto_rakam_kafka_spark.gc_utils import (
-        clear_retirement_marker,
-        retirement_age_s,
-    )
-    from presto_rakam_kafka_spark.genstore import maintenance_lock
-
-    grace = GC_DELTA_GRACE_S if grace_s is None else float(grace_s)
-    removed = []
-    with maintenance_lock(path, "gc_ivfpq_index"):
-        live = set(_read_manifest(path))
-        for d in sorted(os.listdir(path)):
-            if not d.startswith("delta-"):
-                continue
-            dpath = os.path.join(path, d)
-            if d in live:
-                # a marker written while this delta was transiently
-                # unreferenced (pre-commit upsert window) must not
-                # pre-age it: once superseded for real, the grace
-                # clock has to START there (round-13 third review)
-                clear_retirement_marker(dpath)
-                continue
-            if grace > 0:
-                age = retirement_age_s(dpath)
-                if age is None or age < grace:
-                    continue  # first observation / still inside the grace
-            shutil.rmtree(dpath)
-            removed.append(d)
-    return removed
+    """Retire delta generations the committed manifest no longer needs —
+    :func:`genstore.gc` under the index's maintenance lock, the way
+    ``vacuum_log`` retires segment generations. A superseded generation
+    survives ``grace_s`` (default ``gc_utils.GC_GRACE_S``) after a pass
+    first observes it (the ``.RETIRED`` marker), then loses only the
+    files no retained manifest references, so a delta carried by
+    reference keeps its data. An in-flight upsert's write dir is never
+    a candidate. ``grace_s=0.0`` is the force-override (the Delta vacuum
+    ``retentionDurationCheck`` escape hatch — caller asserts no reader
+    is mid-probe). Returns the retired generation names."""
+    with genstore.maintenance_lock(path, "gc_ivfpq_index"):
+        _index_pointer(path)
+        return genstore.gc(path, grace_s=grace_s)
 
 
 # ---------------------------------------------------------------------
@@ -2057,7 +1973,7 @@ def _mine_contrastive_pairs_indexed(
 
     index = (
         read_ivfpq_index(spark, index_path)
-        if os.path.exists(os.path.join(index_path, "_CURRENT"))
+        if os.path.exists(os.path.join(index_path, genstore.POINTER))
         else spark.read.parquet(index_path)
     )
     lists = probe_lists_for(

@@ -9,6 +9,12 @@ from pyspark.sql import functions as F
 from presto_rakam_kafka_spark.fixtures import read_table
 from presto_rakam_kafka_spark.operators import dedup, multimodal, similarity
 from presto_rakam_kafka_spark.fixtures import staging_mkdtemp
+from presto_rakam_kafka_spark import genstore
+
+
+def _index_deltas(path):
+    """The committed IVF-PQ index generation's ``{delta gen: files}``."""
+    return genstore.read_manifest(path, genstore.read_pointer(path)[0])["deltas"]
 
 
 def test_exact_dedup_idempotent(spark, sf_dir):
@@ -823,8 +829,8 @@ def test_substring_trim_token_conservation_and_idempotence(spark, sf_dir):
 
 def test_ivfpq_upsert_equals_rebuild_and_orphan_invisible(spark, sf_dir):
     """Incremental-index contracts: (a) probe after upsert equals a
-    from-scratch rebuild over the full corpus; (b) a delta directory
-    written WITHOUT the manifest flip (crash between phases) is
+    from-scratch rebuild over the full corpus; (b) a delta generation
+    written WITHOUT the pointer flip (crash between phases) is
     invisible to readers."""
     import os
     import tempfile
@@ -863,14 +869,13 @@ def test_ivfpq_upsert_equals_rebuild_and_orphan_invisible(spark, sf_dir):
     )
     assert got == rebuilt
 
-    # orphan delta: written but never flipped into the manifest
-    orphan = os.path.join(path, "delta-00000099")
+    # orphan delta: renamed into place but never flipped into the pointer
+    orphan = os.path.join(path, "gen-0000000002")
     sim.ivfpq_code_corpus(
         emb.filter(F.col("vec_id") < 3), "embedding", "vec_id", dim=64
     ).write.mode("overwrite").partitionBy("list_id").parquet(orphan)
-    man = sim._read_manifest(path)
-    assert man[0] == "delta-00000000" and len(man) == 2
-    assert man[1].startswith("delta-00000001")  # unique-suffixed (r12)
+    man = _index_deltas(path)
+    assert sorted(man) == ["gen-0000000000", "gen-0000000001"]
     after = sorted(
         map(
             tuple,
@@ -933,7 +938,7 @@ def test_streaming_ivfpq_index_equals_batch_rebuild(spark, sf_dir):
     )
     query.awaitTermination()
 
-    assert len(sim._read_manifest(path)) == 3  # init + 2 micro-batches
+    assert len(_index_deltas(path)) == 3  # init + 2 micro-batches
     got = sorted(
         map(
             tuple,
@@ -992,12 +997,12 @@ def test_ivfpq_compaction_preserves_probes_and_gc_removes_dead_deltas(spark, sf_
 
     before = probe()
     new_delta = sim.compact_ivfpq_index(spark, path)
-    assert sim._read_manifest(path) == [new_delta]
+    assert list(_index_deltas(path)) == [new_delta]
     assert probe() == before
     # old dirs still on disk (reader retention window): the default
     # time grace retains freshly-superseded dirs (round 13) — nothing
     # is removed until the grace elapses or the caller force-overrides
-    dirs = {d for d in os.listdir(path) if d.startswith("delta-")}
+    dirs = {d for d in os.listdir(path) if d.startswith("gen-")}
     assert new_delta in dirs and len(dirs) == 3
     assert sim.gc_ivfpq_index(path) == []  # inside the grace window
     removed = sim.gc_ivfpq_index(path, grace_s=0.0)  # force-override
@@ -1008,12 +1013,14 @@ def test_ivfpq_compaction_preserves_probes_and_gc_removes_dead_deltas(spark, sf_
 def test_gc_racing_inflight_upsert_never_deletes_precommit_delta(
     spark, sf_dir
 ):
-    """VERDICT r12 #2a: an upsert writes its delta BEFORE its flock'd
-    manifest commit; a GC firing inside that window must not delete the
-    fresh dir (the upsert would then commit a manifest entry pointing
+    """VERDICT r12 #2a: an upsert writes its delta BEFORE its pointer
+    flip; a GC firing inside that window — even a forced one, from a
+    writer the maintenance lock does not reach — must not delete the
+    fresh delta (the upsert would then commit a manifest entry pointing
     at a dead directory and every later probe of those lists would
-    fail). The time grace is the protection — the hook lands the GC
-    deterministically in the write-to-commit window."""
+    fail). An in-flight ``w-`` write dir is never a GC candidate; the
+    hook lands the GC deterministically in the write-to-commit
+    window."""
     import os
 
     import pyspark.sql.functions as F
@@ -1031,18 +1038,18 @@ def test_gc_racing_inflight_upsert_never_deletes_precommit_delta(
     gc_report = {}
 
     def gc_in_window():
-        gc_report["removed"] = sim.gc_ivfpq_index(path)
+        gc_report["removed"] = genstore.gc(path, grace_s=0.0)
 
-    sim._before_upsert_commit_hook = gc_in_window
+    sim._before_flip_hook = gc_in_window
     try:
         delta = sim.upsert_ivfpq_index(
             spark, emb.filter(F.col("vec_id") % 2 == 1), path,
             "embedding", "vec_id", dim=64,
         )
     finally:
-        sim._before_upsert_commit_hook = None
+        sim._before_flip_hook = None
     assert gc_report["removed"] == []  # the fresh delta survived the GC
-    man = sim._read_manifest(path)
+    man = _index_deltas(path)
     assert delta in man
     for d in man:  # no manifest entry points at a deleted dir
         assert os.path.isdir(os.path.join(path, d))
@@ -1204,8 +1211,8 @@ def test_export_dataset_manifest_roundtrip(spark, sf_dir):
 
 
 def test_ivfpq_epoch_upsert_replay_is_noop(spark, sf_dir):
-    """Streaming-indexer replay semantics (ADVICE r6): an upsert with a
-    pinned epoch delta name that is already live in the manifest does
+    """Streaming-indexer replay semantics (ADVICE r6): an upsert whose
+    txn (app_id, epoch) is already recorded in the index pointer does
     nothing — delta list, index contents, and probe results unchanged —
     so a replayed foreachBatch can never double-index its vectors."""
     import tempfile
@@ -1223,31 +1230,30 @@ def test_ivfpq_epoch_upsert_replay_is_noop(spark, sf_dir):
     sim.init_ivfpq_index(spark, base, path, "embedding", "vec_id", dim=64)
     name = sim.upsert_ivfpq_index(
         spark, delta, path, "embedding", "vec_id", dim=64,
-        delta_name="epoch-00000007",
+        txn=("app", 7),
     )
-    assert name == "epoch-00000007"
-    deltas = sim._read_manifest(path)
-    assert deltas == ["delta-00000000", "epoch-00000007"]
+    assert name == "gen-0000000001"
+    assert genstore.read_pointer(path)[:2] == (name, {"app": 7})
+    deltas = _index_deltas(path)
+    assert sorted(deltas) == ["gen-0000000000", "gen-0000000001"]
     rows = sim.read_ivfpq_index(spark, path).count()
 
-    # replay: same epoch name again — exact no-op
+    # replay: same txn again — exact no-op
     name2 = sim.upsert_ivfpq_index(
         spark, delta, path, "embedding", "vec_id", dim=64,
-        delta_name="epoch-00000007",
+        txn=("app", 7),
     )
-    assert name2 == "epoch-00000007"
-    assert sim._read_manifest(path) == deltas
+    assert name2 == name
+    assert _index_deltas(path) == deltas
     assert sim.read_ivfpq_index(spark, path).count() == rows
 
-    # un-pinned upserts still allocate past the epoch-named delta
+    # upserts without a txn still commit on top, keeping the record
     more = emb.filter(F.col("vec_id") < 3)
     name3 = sim.upsert_ivfpq_index(
         spark, more, path, "embedding", "vec_id", dim=64
     )
-    # ordinal derives from the max NUMERIC second segment across all
-    # live names (epoch-00000007 counts); a random suffix guarantees
-    # physical uniqueness across racing writers (r12)
-    assert name3.startswith("delta-00000008-")
+    assert name3 == "gen-0000000002"
+    assert genstore.read_pointer(path)[:2] == (name3, {"app": 7})
 
 
 def test_ivfpq_refined_recall_on_clustered_corpus(spark):
@@ -1464,11 +1470,11 @@ def test_contrastive_indexed_hard_leg_is_index_bounded(spark, sf_dir):
 
 
 def test_ann_index_concurrent_upserts_keep_both_deltas(spark):
-    """Round 12: two upserts committing concurrently must BOTH stay in
+    """Round 12: two upserts launched concurrently must BOTH stay in
     the manifest — the pre-fix read-merge-flip lost whichever delta
     flipped first (orphaned on disk, its vectors absent from every
-    probe). Commits now merge-at-commit under the index flock; a
-    compaction racing an upsert fences instead of dropping it."""
+    probe). Upserts now queue on the index's maintenance lock, so the
+    second commits on top of the first."""
     import threading
 
     import numpy as np
@@ -1493,29 +1499,71 @@ def test_ann_index_concurrent_upserts_keep_both_deltas(spark):
 
     errs: list[BaseException] = []
 
-    def upsert(lo, hi, name):
+    def upsert(lo, hi, app):
         try:
             SIM.upsert_ivfpq_index(
                 spark, vecs(range(lo, hi)), path, "emb", "id", 8,
-                num_centroids=4, m=4, ksub=16, delta_name=name,
+                num_centroids=4, m=4, ksub=16, txn=(app, 1),
             )
         except BaseException as exc:  # noqa: BLE001 — surfaced below
             errs.append(exc)
 
-    t1 = threading.Thread(target=upsert, args=(64, 96, "delta-epoch-a"))
-    t2 = threading.Thread(target=upsert, args=(96, 128, "delta-epoch-b"))
-    t1.start(); t2.start(); t1.join(); t2.join()
+    t1 = threading.Thread(target=upsert, args=(64, 96, "a"))
+    t2 = threading.Thread(target=upsert, args=(96, 128, "b"))
+    t1.start(); t2.start(); t1.join(timeout=300); t2.join(timeout=300)
+    assert not t1.is_alive() and not t2.is_alive()
     assert not errs, errs
-    live = set(SIM._read_manifest(path))
-    assert {"delta-epoch-a", "delta-epoch-b"} <= live, live
+    assert genstore.read_pointer(path)[1] == {"a": 1, "b": 1}
+    assert len(_index_deltas(path)) == 3
     # every vector is probe-visible
     assert SIM.read_ivfpq_index(spark, path).count() == 128
 
 
+def test_ann_legacy_delta_list_pointer_is_refused_not_overwritten(
+    spark, tmp_path
+):
+    """An index pointer from the delta-list layout (``{"deltas": [...]}``,
+    no generation) is refused with an error naming the rebuild, and
+    left as it was: an unfenced first commit over it would drop every
+    legacy delta. ``init_ivfpq_index`` is the rebuild."""
+    import json
+    import os
+
+    import numpy as np
+
+    from presto_rakam_kafka_spark.operators import similarity as SIM
+
+    rng = np.random.default_rng(3)
+    vecs = spark.createDataFrame(
+        [(i, [float(x) for x in rng.normal(size=8)]) for i in range(16)],
+        "id LONG, emb ARRAY<FLOAT>",
+    )
+    geom = {"num_centroids": 4, "m": 4, "ksub": 16}
+    path = str(tmp_path / "legacy_index")
+    os.makedirs(path)
+    ptr = os.path.join(path, "_CURRENT")
+    with open(ptr, "w") as fh:
+        json.dump({"deltas": ["delta-00000000"]}, fh)
+    for op in (
+        lambda: SIM.upsert_ivfpq_index(spark, vecs, path, "emb", "id", 8,
+                                       **geom),
+        lambda: SIM.compact_ivfpq_index(spark, path),
+        lambda: SIM.read_ivfpq_index(spark, path),
+    ):
+        with pytest.raises(ValueError, match="init_ivfpq_index"):
+            op()
+    with open(ptr) as fh:
+        assert json.load(fh) == {"deltas": ["delta-00000000"]}
+    SIM.init_ivfpq_index(spark, vecs, path, "emb", "id", 8, **geom)
+    assert list(_index_deltas(path)) == ["gen-0000000000"]
+    assert SIM.read_ivfpq_index(spark, path).count() == 16
+
+
 def test_ann_compaction_fences_when_upsert_lands_midfold(spark, monkeypatch):
-    """A compaction whose fold misses a mid-fold upsert must refuse its
-    publish (ConcurrentIndexMaintenanceError) — flipping it would drop
-    the upsert's vectors from the index."""
+    """A compaction whose fold misses a mid-fold upsert by a writer the
+    maintenance lock does not reach (the unlocked upsert body) must
+    refuse its publish (FencedMaintenanceError) — flipping it would
+    drop the upsert's vectors from the index."""
     import tempfile
 
     import numpy as np
@@ -1544,14 +1592,14 @@ def test_ann_compaction_fences_when_upsert_lands_midfold(spark, monkeypatch):
         out = real_read(spark_, p)
         if not fired:
             fired.append(1)
-            SIM.upsert_ivfpq_index(
-                spark, vecs(range(32, 48)), path, "emb", "id", 8,
-                num_centroids=4, m=4, ksub=16,
+            SIM._upsert_locked(
+                vecs(range(32, 48)), path, "emb", "id", 8, 4, 4, 16,
+                None, False,
             )
         return out
 
     monkeypatch.setattr(SIM, "read_ivfpq_index", read_then_upsert)
-    with pytest.raises(SIM.ConcurrentIndexMaintenanceError):
+    with pytest.raises(genstore.FencedMaintenanceError):
         SIM.compact_ivfpq_index(spark, path)
     # the mid-fold upsert's vectors are still probe-visible
     assert real_read(spark, path).count() == 48
@@ -1563,14 +1611,12 @@ def test_ann_compaction_fences_when_upsert_lands_midfold(spark, monkeypatch):
 
 def test_streaming_and_batch_upsert_race_both_deltas_survive(spark, sf_dir):
     """VERDICT r12 next-5: a STREAMING ingest and a concurrent BATCH
-    upsert land on one index — the batch commit is injected into the
-    stream upsert's write-to-commit window, and merge-at-commit must
-    keep BOTH deltas in the manifest (the pre-round-12 flip orphaned
-    the earlier one). Probe equals the full batch rebuild."""
-    import glob
-    import os
-    import shutil
-    import time
+    upsert land on one index — the batch upsert starts on another
+    thread inside the stream upsert's write-to-commit window, queues on
+    the index's maintenance lock, and commits on top of the stream's
+    delta: BOTH deltas stay in the manifest (the pre-round-12 flip
+    orphaned the earlier one). Probe equals the full batch rebuild."""
+    from concurrent.futures import ThreadPoolExecutor
 
     import pyspark.sql.functions as F
 
@@ -1588,30 +1634,36 @@ def test_streaming_and_batch_upsert_race_both_deltas_survive(spark, sf_dir):
     src = staging_mkdtemp("ivfpq_race_src_")
     emb.filter(F.col("vec_id") % 3 == 1).write.mode("overwrite").parquet(src)
 
-    def batch_in_window():
-        sim._before_upsert_commit_hook = None  # fire once, no recursion
-        sim.upsert_ivfpq_index(
-            spark, emb.filter(F.col("vec_id") % 3 == 2), path,
-            "embedding", "vec_id", dim=64,
-        )
+    batch = []
+    with ThreadPoolExecutor(max_workers=1) as pool:
 
-    sim._before_upsert_commit_hook = batch_in_window
-    try:
-        query = (
-            index_stream(
-                spark.readStream.schema(emb.schema).parquet(src),
-                path, "embedding", "vec_id", dim=64,
-                checkpoint=staging_mkdtemp("ivfpq_race_ckpt_"),
+        def batch_in_window():
+            sim._before_flip_hook = None  # fire once, no recursion
+            batch.append(pool.submit(
+                sim.upsert_ivfpq_index,
+                spark, emb.filter(F.col("vec_id") % 3 == 2), path,
+                "embedding", "vec_id", dim=64,
+            ))
+
+        sim._before_flip_hook = batch_in_window
+        try:
+            query = (
+                index_stream(
+                    spark.readStream.schema(emb.schema).parquet(src),
+                    path, "embedding", "vec_id", dim=64,
+                    checkpoint=staging_mkdtemp("ivfpq_race_ckpt_"),
+                )
+                .trigger(availableNow=True)
+                .start()
             )
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        sim._before_upsert_commit_hook = None
-    man = sim._read_manifest(path)
+            query.awaitTermination()
+        finally:
+            sim._before_flip_hook = None
+    # the stream committed gen 1, the queued batch upsert gen 2 on top
+    assert batch and batch[0].result(timeout=0) == "gen-0000000002"
+    man = _index_deltas(path)
     assert len(man) == 3, man  # init + streaming delta + batch delta
-    assert any(d.startswith("epoch-") for d in man)  # the stream's
+    assert genstore.read_pointer(path)[1] == {"default": 0}  # the stream's
     got = sorted(
         map(
             tuple,

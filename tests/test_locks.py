@@ -206,7 +206,32 @@ def _serving_case(spark, sf_dir, tmp_path):
     return store, op, FlockTimeoutError, 100
 
 
-@pytest.mark.parametrize("tier", ["log", "cdc", "rollup", "serving"])
+def _ann_case(spark, sf_dir, tmp_path):
+    import numpy as np
+
+    from presto_rakam_kafka_spark.operators import similarity as sim
+
+    rng = np.random.default_rng(5)
+    vecs = spark.createDataFrame(
+        [(i, [float(x) for x in rng.normal(size=8)]) for i in range(48)],
+        "id LONG, emb ARRAY<FLOAT>",
+    )
+    path = str(tmp_path / "hungindex")
+    geom = {"num_centroids": 4, "m": 4, "ksub": 16}
+    sim.init_ivfpq_index(
+        spark, vecs.filter("id < 32"), path, "emb", "id", 8, **geom
+    )
+
+    def op():
+        sim.upsert_ivfpq_index(
+            spark, vecs.filter("id >= 32"), path, "emb", "id", 8, **geom
+        )
+        return sim.read_ivfpq_index(spark, path).count()
+
+    return path, op, FlockTimeoutError, 48
+
+
+@pytest.mark.parametrize("tier", ["log", "cdc", "rollup", "serving", "ann"])
 def test_maintenance_times_out_behind_hung_holder(
     spark, sf_dir, tmp_path, monkeypatch, tier
 ):
@@ -217,7 +242,7 @@ def test_maintenance_times_out_behind_hung_holder(
     from presto_rakam_kafka_spark import genstore
 
     case = {"log": _log_case, "cdc": _cdc_case, "rollup": _rollup_case,
-            "serving": _serving_case}[tier]
+            "serving": _serving_case, "ann": _ann_case}[tier]
     store, op, error, expected = case(spark, sf_dir, tmp_path)
     monkeypatch.setattr(genstore, "MAINT_LOCK_TIMEOUT_S", 0.3)
     with flock_guard(os.path.join(store, ".MAINT_LOCK"), op_name="wedged_op"):
