@@ -272,7 +272,10 @@ def gc(
     number, so a shorter legacy ``gen-000001`` sorts below
     ``gen-0000000002``. Paths are compared store-relative and
     normalized, so an aliased store path (trailing slash, ``..``) never
-    deletes a referenced file. Returns the removed generation names."""
+    deletes a referenced file. Returns the generations whose directory
+    is gone: a victim still holding files that a retained manifest
+    carries by reference loses its manifest but is not reported, so a
+    carried generation is never named as removed on every pass."""
     root = os.path.realpath(store)
     if current is None:
         current = read_pointer(root)[0]
@@ -314,7 +317,7 @@ def gc(
                         os.remove(p)
             with suppress(OSError):  # still holds referenced files
                 os.rmdir(d)
-    return victims
+    return [g for g in victims if not os.path.isdir(os.path.join(root, g))]
 
 
 class Generation:

@@ -47,24 +47,43 @@ def _event_order() -> list[Column]:
     return [F.col("ts"), F.col("event_id")]
 
 
+# The report operators below are each ONE `spark.sql` statement over
+# the input frame, passed as the `{events}` (or `{depths}`) kwarg: one
+# parse and one analysis per operator instead of one per DataFrame step
+# and several py4j round trips per Column call. Every user value (step
+# names, the session gap) is bound with a `:name` parameter marker,
+# never spliced into the SQL text.
+
+# One per-user event order shared by both sessionize window passes.
+_SESSION_WINDOW = "PARTITION BY user_id ORDER BY ts, event_id"
+
+# `{events}` rows plus the 1-based `session_seq` (and the `_new_sess`
+# flag it sums). Microsecond integers on both engines (`unix_micros` /
+# `epoch_us`): second-floor casts diverge (Spark floors, DuckDB CAST
+# rounds).
+_SESSIONIZED = (
+    "SELECT *, sum(_new_sess) OVER (" + _SESSION_WINDOW
+    + " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq"
+    " FROM (SELECT *, CASE WHEN (unix_micros(ts) - lag(unix_micros(ts)) OVER w) IS NULL"
+    " OR (unix_micros(ts) - lag(unix_micros(ts)) OVER w) > :gap_us"
+    " THEN 1 ELSE 0 END AS _new_sess"
+    " FROM {events} WINDOW w AS (" + _SESSION_WINDOW + "))"
+)
+
+
+def _gap_args(gap_minutes: int) -> dict[str, int]:
+    return {"gap_us": gap_minutes * 60 * 1_000_000}
+
+
 def sessionize(events: DataFrame, gap_minutes: int = SESSION_GAP_MINUTES) -> DataFrame:
     """Assign a per-user ``session_seq`` (1-based) to every event: a new
     session starts when the gap to the previous event exceeds
     ``gap_minutes``. Classic lag-flag-cumsum; both window passes share
     one hash partition on ``user_id``."""
-    # Microsecond integers on both engines (`unix_micros` / `epoch_us`):
-    # second-floor casts diverge (Spark floors, DuckDB CAST rounds).
-    w = Window.partitionBy("user_id").orderBy(*_event_order())
-    gap_us = F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)
-    new_sess = F.when(
-        gap_us.isNull() | (gap_us > gap_minutes * 60 * 1_000_000), 1
-    ).otherwise(0)
-    running = Window.partitionBy("user_id").orderBy(*_event_order()).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
+    return events.sparkSession.sql(
+        "SELECT * EXCEPT (_new_sess) FROM (" + _SESSIONIZED + ")",
+        _gap_args(gap_minutes), events=events,
     )
-    return events.withColumn("_new_sess", new_sess).withColumn(
-        "session_seq", F.sum("_new_sess").over(running)
-    ).drop("_new_sess")
 
 
 def user_session_stats(
@@ -75,16 +94,50 @@ def user_session_stats(
     Integer-only output keeps the oracle hash exact. Two aggregation
     levels, both keyed by a ``user_id`` prefix → one real shuffle plus
     a cheap session-level re-agg."""
-    sess = sessionize(events, gap_minutes)
-    per_session = sess.groupBy("user_id", "session_seq").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        (F.max(F.unix_micros("ts")) - F.min(F.unix_micros("ts"))).alias("active_us"),
+    return events.sparkSession.sql(
+        "SELECT user_id, count(1) AS n_sessions, sum(n_events) AS n_events,"
+        " max(n_events) AS max_session_events,"
+        " sum(active_us) AS total_active_us"
+        " FROM (SELECT user_id, count(1) AS n_events,"
+        " max(unix_micros(ts)) - min(unix_micros(ts)) AS active_us"
+        " FROM (" + _SESSIONIZED + ") GROUP BY user_id, session_seq)"
+        " GROUP BY user_id",
+        _gap_args(gap_minutes), events=events,
     )
-    return per_session.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_sessions"),
-        F.sum("n_events").alias("n_events"),
-        F.max("n_events").alias("max_session_events"),
-        F.sum("active_us").alias("total_active_us"),
+
+
+def _step_params(steps: tuple[str, ...]) -> tuple[list[str], dict[str, str]]:
+    """Parameter markers ``:s0, :s1, …`` for the funnel steps, and their
+    bindings: step names reach Spark as bound literals, so no name is
+    ever spliced into SQL text (a backslash or quote in a name is
+    just data)."""
+    return (
+        [f":s{i}" for i in range(len(steps))],
+        {f"s{i}": s for i, s in enumerate(steps)},
+    )
+
+
+def _prefix_counts_sql(
+    depths: str,
+    marks: list[str],
+    group_before: tuple[str, ...] = (),
+    group_after: tuple[str, ...] = (),
+) -> str:
+    """The SQL of :func:`_prefix_counts` over the relation ``depths``
+    (a kwarg placeholder or a parenthesized subquery)."""
+    keys = ", ".join([*group_before, "step", *group_after])
+    fan_out = ", ".join(
+        [*group_before, *group_after, "explode(sequence(1, depth)) AS step"]
+    )
+    out = ", ".join([
+        *group_before, "step",
+        f"element_at(array({', '.join(marks)}), step) AS step_name",
+        *group_after, "n_users",
+    ])
+    return (
+        f"SELECT {out} FROM (SELECT {keys}, count(1) AS n_users"
+        f" FROM (SELECT {fan_out} FROM {depths} WHERE depth >= 1)"
+        f" GROUP BY {keys})"
     )
 
 
@@ -104,26 +157,13 @@ def _prefix_counts(
     §2.4 — remove the join outright). Row-for-row identical: the inner
     θ-join emitted exactly the prefixes 1..depth per user and nothing
     for depth 0; the step-name lookup is ``element_at`` on an array of
-    literals (built column-wise, so no step name is ever spliced into
-    SQL text). Output columns: [*group_before, step, step_name,
-    *group_after, n_users] — the exact former join+groupBy order."""
-    names_arr = F.array(*[F.lit(s) for s in steps])
-    return (
-        depths.filter(F.col("depth") >= 1)
-        .select(
-            *group_before,
-            *group_after,
-            F.explode(F.sequence(F.lit(1), F.col("depth"))).alias("step"),
-        )
-        .groupBy(*group_before, "step", *group_after)
-        .agg(F.count(F.lit(1)).alias("n_users"))
-        .select(
-            *group_before,
-            "step",
-            F.element_at(names_arr, F.col("step")).alias("step_name"),
-            *group_after,
-            "n_users",
-        )
+    bound step-name parameters. Output columns: [*group_before, step,
+    step_name, *group_after, n_users] — the exact former join+groupBy
+    order."""
+    marks, args = _step_params(steps)
+    return depths.sparkSession.sql(
+        _prefix_counts_sql("{depths}", marks, group_before, group_after),
+        args, depths=depths,
     )
 
 
@@ -139,24 +179,20 @@ def funnel(events: DataFrame, steps: tuple[str, ...] = FUNNEL_STEPS) -> DataFram
     rows). Equivalent to the chained min-timestamp construction
     (`t2 = min ts of step2 with ts > t1`, …) whenever (ts, event_id)
     is unique, which the fixture guarantees and event stores provide
-    via offsets."""
-    step_idx = F.create_map(
-        *[x for i, s in enumerate(steps) for x in (F.lit(s), F.lit(i))]
+    via offsets. One statement: the fold is the subquery the shared
+    prefix-count finish reads."""
+    marks, args = _step_params(steps)
+    step_idx = ", ".join(f"{m}, {i}" for i, m in enumerate(marks))
+    depths = (
+        "(SELECT user_id, aggregate(array_sort(collect_list(ev)), 0,"
+        " (acc, e) -> CASE WHEN e.idx = acc THEN acc + 1 ELSE acc END) AS depth"
+        f" FROM (SELECT user_id, struct(ts, event_id, map({step_idx})[event_type]"
+        f" AS idx) AS ev FROM {{events}} WHERE event_type IN ({', '.join(marks)}))"
+        " GROUP BY user_id)"
     )
-    evs = events.filter(F.col("event_type").isin(list(steps))).select(
-        "user_id",
-        F.struct(
-            F.col("ts"), F.col("event_id"), step_idx[F.col("event_type")].alias("idx")
-        ).alias("ev"),
+    return events.sparkSession.sql(
+        _prefix_counts_sql(depths, marks), args, events=events
     )
-    depth = F.aggregate(
-        F.array_sort(F.collect_list("ev")),
-        F.lit(0),
-        lambda acc, ev: F.when(ev["idx"] == acc, acc + 1).otherwise(acc),
-    )
-    depths = evs.groupBy("user_id").agg(depth.alias("depth"))
-    # One row per funnel step: users whose depth reaches that step.
-    return _prefix_counts(depths, steps)
 
 
 def funnel_windowed(
@@ -434,22 +470,17 @@ def retention_cohorts(events: DataFrame) -> DataFrame:
     history — ~52/year — never by event volume), then explode + a
     cell-level agg over ≤ users×weeks rows. The textbook
     firsts⋈activity formulation costs two scans and four exchanges;
-    this is one scan and two."""
-    per_user = events.groupBy("user_id").agg(
-        F.date_trunc("week", F.min("ts")).alias("cohort_wk"),
-        F.collect_set(F.date_trunc("week", F.col("ts"))).alias("wks"),
-    )
-    return (
-        per_user.select(
-            "cohort_wk", F.explode("wks").alias("wk")
-        )
-        .groupBy(
-            F.date_format("cohort_wk", "yyyy-MM-dd").alias("cohort_week"),
-            F.floor(F.datediff(F.col("wk"), F.col("cohort_wk")) / 7).alias(
-                "week_offset"
-            ),
-        )
-        .agg(F.count(F.lit(1)).alias("n_users"))
+    this is one scan and two. One statement, no user value in it."""
+    return events.sparkSession.sql(
+        "SELECT date_format(cohort_wk, 'yyyy-MM-dd') AS cohort_week,"
+        " floor(datediff(wk, cohort_wk) / 7) AS week_offset,"
+        " count(1) AS n_users"
+        " FROM (SELECT cohort_wk, explode(wks) AS wk"
+        " FROM (SELECT date_trunc('week', min(ts)) AS cohort_wk,"
+        " collect_set(date_trunc('week', ts)) AS wks"
+        " FROM {events} GROUP BY user_id))"
+        " GROUP BY cohort_week, week_offset",
+        events=events,
     )
 
 

@@ -214,8 +214,9 @@ def stage_zordered(
     bits: int = 10,
 ) -> str:
     """Write ``df`` clustered by the Morton interleave of two columns
-    (range-partitioned + sorted on the z-value, small row groups) —
-    the Delta/Iceberg Z-ORDER discipline from first principles. A
+    (range-partitioned on the z-value's quantiles + sorted on it, small
+    row groups) — the Delta/Iceberg Z-ORDER discipline from first
+    principles. A
     single-column sort gives tight stats on ONE column and destroys
     locality on others; the z-curve keeps BOTH columns' min/max ranges
     narrow per row group, so selective predicates on either column (or
@@ -243,10 +244,21 @@ def stage_zordered(
     b0, b1 = int(mm["b0"]), int(mm["b1"])
     sa = f"(CAST(({col_a} - {a0}) AS BIGINT) * {top} DIV {max(a1 - a0, 1)})"
     sb = f"(CAST(({col_b} - {b0}) AS BIGINT) * {top} DIV {max(b1 - b0, 1)})"
-    z = zorder_expr(sa, sb, bits)
+    zdf = df.withColumn("_z", F.expr(zorder_expr(sa, sb, bits)))
+    # Range bounds at the z-value's n-quantiles, to within 1/10000 of
+    # the rows, and each row routed by how many bounds it exceeds. Not
+    # repartitionByRange: its bounds come from a few-hundred-row sample
+    # seeded by the RDD id, so a bound can land a few percent of the
+    # rows off the curve's half-way point, which puts low-col_b rows
+    # into an upper-half file that a col_b band then has to read.
+    bounds = zdf.agg(F.percentile_approx(
+        "_z", [i / num_ranges for i in range(1, num_ranges)], 10000
+    )).collect()[0][0]
+    rank = sum(
+        ((F.col("_z") > F.lit(b)).cast("int") for b in bounds), F.lit(0)
+    )
     (
-        df.withColumn("_z", F.expr(z))
-        .repartitionByRange(num_ranges, F.col("_z"))
+        zdf.repartitionById(num_ranges, rank)
         .sortWithinPartitions("_z")
         .drop("_z")
         .write.mode("overwrite")

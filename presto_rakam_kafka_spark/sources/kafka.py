@@ -194,29 +194,37 @@ class KafkaEventSource:
                     raw, schema, avro_schema, project, collection
                 )
         else:
-            # PERMISSIVE from_json yields an all-null struct (not NULL)
-            # for malformed payloads, so corrupt rows must be tagged
-            # explicitly to be droppable.
+            # Parse each payload ONCE, as the reference reads each
+            # message once (KafkaConnectorPageSource.java:301). Catalyst
+            # inlines an aliased parse into every filter that references
+            # it (a `ts` window, the corrupt drop), once per reference;
+            # inside a generator, `inline(array(…))`, it stays put,
+            # because no filter on a generated column is pushed below
+            # the Generate.
             from pyspark.sql import types as T
 
             parse_schema = T.StructType(
                 [*schema.fields, T.StructField("_corrupt_record", T.StringType())]
             )
-            decoded = raw.select(
-                F.col("offset").alias("_offset"),
-                F.from_json(
-                    F.col("value").cast("string"),
-                    parse_schema,
-                    {"columnNameOfCorruptRecord": "_corrupt_record"},
-                ).alias("r"),
-                F.col("topic"),
-                *extras,
+            parsed = F.from_json(
+                F.col("value").cast("string"),
+                parse_schema,
+                {"columnNameOfCorruptRecord": "_corrupt_record"},
             )
             # Corrupt-record tolerance (A14): drop the whole message,
             # keep scanning (KafkaConnectorPageSource.java:300-308).
-            decoded = decoded.filter(
-                F.col("r").isNotNull() & F.col("r._corrupt_record").isNull()
-            ).withColumn("r", F.col("r").dropFields("_corrupt_record"))
+            # PERMISSIVE from_json tags a malformed payload in
+            # `_corrupt_record` (the filter drops it); a NULL payload
+            # parses to a NULL struct, which `array_compact` removes
+            # before `inline` could turn it into an all-NULL row.
+            # Hidden columns (A7) as below.
+            return raw.select(
+                F.col("offset").alias("_offset"),
+                F.lit(project).alias("project"),
+                F.lit(collection).alias("collection"),
+                *extras,
+                F.inline(F.array_compact(F.array(parsed))),
+            ).filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
         # Hidden-column synthesis (A7) from the topic name, split on the
         # first '_' (KafkaConnectorPageSource.java:88-89,134-138).
         return decoded.select(

@@ -64,6 +64,19 @@ def test_funnel_step_names_with_backslash_and_quote(spark):
     assert got == {"a\\b": 2, "it's": 1, "c\\": 1}
 
 
+def test_report_operators_leave_no_temp_view(spark, sf_dir):
+    """Each report operator is one ``spark.sql`` statement over its
+    input frame; the temp view that carries the frame into the
+    statement is dropped once it is built, however many are built."""
+    e = _events(spark, sf_dir)
+    for _ in range(10):
+        ev.funnel(e)
+        ev.retention_cohorts(e)
+        ev.user_session_stats(e)
+    views = [t.name for t in spark.catalog.listTables() if t.name.startswith("_pyspark_")]
+    assert views == []
+
+
 def test_funnel_window_boundary(spark):
     """A step exactly AT the window edge converts; one microsecond past
     does not — and the windowed funnel can never exceed the unwindowed

@@ -156,8 +156,13 @@ def test_one_log_line_per_commit_serving_and_cdc(
     assert "txn=maintain:2" in last, last
     assert re.search(r" files=[1-9]\d* ", last), last
     assert re.search(r" flip_lock_wait_ms=\d+\.\d ", last), last
-    # keep_last=2: the third commit retires the first generation
-    assert last.endswith("gc=['gen-0000000000']"), last
+    # keep_last=2: the third commit retires the first generation; its
+    # manifest goes, but the later manifests carry its day buckets by
+    # reference, so its directory stays and GC names no generation
+    assert last.endswith("gc=[]"), last
+    gen0 = os.path.join(store, "gen-0000000000")
+    assert os.path.isdir(gen0)
+    assert not os.path.exists(os.path.join(gen0, genstore.MANIFEST))
     assert lines[0].endswith("gc=[]"), lines[0]
 
     caplog.clear()
@@ -242,6 +247,37 @@ def test_refused_commit_leaves_nothing_behind(tmp_path):
     assert genstore.read_pointer(store) == ("gen-0000000000", {"a": 0}, {})
     with open(os.path.join(store, "gen-0000000000", "a.parquet")) as fh:
         assert fh.read() == "winner"
+
+
+def test_gc_names_only_generations_whose_dir_is_gone(tmp_path):
+    """A superseded generation whose file the current manifest carries
+    by reference loses its manifest to GC but keeps its directory: it is
+    not reported removed, on the first pass or any later one, and the
+    carried file stays."""
+    from presto_rakam_kafka_spark import genstore
+
+    store = str(tmp_path / "store")
+    tier = sys.modules[__name__]
+    with genstore.Generation(store, None, tier) as g0:
+        with open(os.path.join(g0.dir, "a.parquet"), "w") as fh:
+            fh.write("carried")
+        g0.commit({}, manifest={"files": g0.files()})
+    carried = os.path.join(g0.name, "a.parquet")
+    with genstore.Generation(store, g0.name, tier) as g1:
+        with open(os.path.join(g1.dir, "b.parquet"), "w") as fh:
+            fh.write("new")
+        g1.commit({}, manifest={"files": [carried, *g1.files()]})
+    assert genstore.gc(store, grace_s=0.0) == []
+    assert genstore.gc(store, grace_s=0.0) == []
+    assert os.path.isfile(os.path.join(store, carried))
+    assert not os.path.exists(os.path.join(store, g0.name, genstore.MANIFEST))
+    # once nothing carries it, the generation goes and is named
+    with genstore.Generation(store, g1.name, tier) as g2:
+        with open(os.path.join(g2.dir, "c.parquet"), "w") as fh:
+            fh.write("fresh")
+        g2.commit({}, manifest={"files": g2.files()})
+    assert genstore.gc(store, grace_s=0.0) == [g0.name, g1.name]
+    assert not os.path.exists(os.path.join(store, g0.name))
 
 
 #: the package's ``os.replace``/``os.rename`` calls outside ``genstore``,

@@ -525,6 +525,78 @@ def _events_table(spark, sf_dir, path, **kw):
     return catalog
 
 
+def _json_log_catalog(spark, path, expose_key=False):
+    """A catalog with ``t.ev`` over a 12-frame JSON log: frame ``off``
+    carries ``{"uid": off % 4, "ts": 2024-01-(off+1), "v": off}``,
+    except offset 3, whose value is NULL, and offset 5, which is not
+    JSON."""
+    import json as _json
+
+    from pyspark.sql import types as T
+
+    from presto_rakam_kafka_spark.catalog import EventCatalog
+    from presto_rakam_kafka_spark.metastore import InMemoryMetastore
+
+    rows = []
+    for off in range(12):
+        value = _json.dumps({
+            "uid": off % 4, "ts": f"2024-01-{off + 1:02d}T00:00:00",
+            "v": float(off),
+        }).encode()
+        value = {3: None, 5: b"{not json"}.get(off, value)
+        rows.append((off, str(off % 4).encode(), value, None))
+    raw = spark.createDataFrame(
+        rows, "offset LONG, key BINARY, value BINARY, timestamp TIMESTAMP"
+    )
+    write_segments(raw, path, num_partitions=2, segment_rows=3)
+    ms = InMemoryMetastore()
+    cat = EventCatalog(spark, ms)
+    ms.register_struct("t", "ev", T.StructType([
+        T.StructField("uid", T.LongType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("v", T.DoubleType()),
+    ]))
+    cat.register_kafka_segments("t", "ev", path, expose_key=expose_key)
+    return cat
+
+
+def test_catalog_json_window_parses_each_payload_once(spark, tmp_path):
+    """A windowed read of a JSON catalog table evaluates ``from_json``
+    once per payload: the executed plan holds exactly one ``from_json(``
+    (an aliased parse struct, filtered on, was inlined by Catalyst into
+    the filter beside the projection: 4–6 parses per payload)."""
+    import datetime as dt
+
+    df = _json_log_catalog(spark, str(tmp_path / "log")).table("t", "ev").filter(
+        (F.col("ts") >= F.lit(dt.datetime(2024, 1, 3)))
+        & (F.col("ts") < F.lit(dt.datetime(2024, 1, 9)))
+    )
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("from_json(") == 1, plan
+    # offsets 2..7 in the window, less the NULL (3) and corrupt (5) ones
+    assert sorted(r["v"] for r in df.collect()) == [2.0, 4.0, 6.0, 7.0]
+
+
+@pytest.mark.parametrize("expose_key", [False, True])
+def test_catalog_json_decode_drops_null_and_corrupt_payloads(
+    spark, tmp_path, expose_key
+):
+    """A14 through the one JSON decode, for a plain table (Spark's
+    parquet scan) and an ``expose_key`` one (the ``kafka_segments``
+    DataSource): a NULL value and a payload that is not JSON are
+    dropped, every other frame decodes, hidden columns lead."""
+    df = _json_log_catalog(
+        spark, str(tmp_path / "log"), expose_key
+    ).table("t", "ev", include_hidden=True)
+    hidden = ["_offset", "project", "collection"] + (["_key"] if expose_key else [])
+    assert df.columns == [*hidden, "uid", "ts", "v"]
+    rows = sorted(df.collect(), key=lambda r: r["_offset"])
+    kept = [o for o in range(12) if o not in (3, 5)]
+    assert [r["_offset"] for r in rows] == kept
+    assert [(r["uid"], r["v"]) for r in rows] == [(o % 4, float(o)) for o in kept]
+    assert {(r["project"], r["collection"]) for r in rows} == {("t", "ev")}
+
+
 def test_catalog_native_table_leaves_pushdown_conf_unset(spark, sf_dir, log_dir):
     """Only the ``expose_key`` branch registers the DataSource: a plain
     table resolves and answers in a fresh session without setting
