@@ -21,6 +21,7 @@ surface (:mod:`~presto_rakam_kafka_spark.streaming`), all designed for
 multi-executor scale (no driver-side collection in any hot path).
 """
 
+from presto_rakam_kafka_spark import pyworker  # noqa: F401 — installs itself
 from presto_rakam_kafka_spark.catalog import EventCatalog, TableNotFoundError
 from presto_rakam_kafka_spark.metastore import (
     FieldType,

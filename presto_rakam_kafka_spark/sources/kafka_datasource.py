@@ -81,6 +81,7 @@ from pyspark.sql.types import (
 
 from presto_rakam_kafka_spark import genstore
 from presto_rakam_kafka_spark.locks import FlockTimeoutError
+from presto_rakam_kafka_spark.sources.parquet import read_parquet_files
 
 _log = logging.getLogger(__name__)
 
@@ -458,12 +459,13 @@ def scan_segments(spark, path: str, **bounds) -> tuple[SegmentPlan, DataFrame]:
     planning, no Python-worker read. Returns the plan with the frame:
     pruning is segment-granular, so the caller applies its exact row
     filters (``plan.cut`` names the partitions an offset bound cut
-    through). The file list is fixed here, like Spark's own file index;
+    through). The file list is fixed here, like Spark's own file index,
+    and goes to Spark without a listing job (:func:`read_parquet_files`);
     a plan with no surviving segment is a zero-row frame."""
     plan = plan_segments(path, **bounds)
     if not plan.segments:
         return plan, spark.createDataFrame([], RAW_FRAME_SCHEMA)
-    return plan, spark.read.schema(RAW_FRAME_SCHEMA).parquet(*plan.files)
+    return plan, read_parquet_files(spark, plan.files, RAW_FRAME_SCHEMA)
 
 
 class KafkaLogLayoutError(Exception):

@@ -23,9 +23,38 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from presto_rakam_kafka_spark.metastore import SchemaField
 from presto_rakam_kafka_spark.plans.offset_pushdown import OffsetRange
+
+
+#: Spark lists a read's paths with a parallel job, one task per path,
+#: once there are more than this many
+#: (``spark.sql.sources.parallelPartitionDiscovery.threshold``).
+LISTING_PATHS = 32
+
+
+def read_parquet_files(
+    spark: SparkSession,
+    files: list[str],
+    schema: StructType | None = None,
+    **options: str,
+) -> DataFrame:
+    """Spark's parquet scan of a non-empty explicit file list, built
+    without a listing job: at most :data:`LISTING_PATHS` paths go to
+    each ``parquet()`` call, and the chunks combine by
+    ``unionByName`` (a missing column reads as null)."""
+    reader = spark.read.options(**options)
+    if schema is not None:
+        reader = reader.schema(schema)
+    chunks = [
+        reader.parquet(*files[i : i + LISTING_PATHS])
+        for i in range(0, len(files), LISTING_PATHS)
+    ]
+    return reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), chunks
+    )
 
 
 @dataclass

@@ -78,6 +78,7 @@ from presto_rakam_kafka_spark.gc_utils import (  # noqa: F401 — tier surface
 from presto_rakam_kafka_spark.genstore import (  # noqa: F401 — re-exported
     FencedMaintenanceError,
 )
+from presto_rakam_kafka_spark.sources.parquet import read_parquet_files
 
 _TIER = sys.modules[__name__]
 
@@ -180,7 +181,7 @@ def _read_cell_files(spark: SparkSession, files: list[str]) -> DataFrame:
                         f"{prev.type} vs {f.type}"
                     )
         schema = from_arrow_schema(pa.schema([merged[n] for n in order]))
-        return spark.read.schema(schema).parquet(*files)
+        return read_parquet_files(spark, files, schema)
     except Exception as exc:  # noqa: BLE001 — any surprise → slow correct path
         import logging
 
@@ -188,7 +189,7 @@ def _read_cell_files(spark: SparkSession, files: list[str]) -> DataFrame:
             "driver-side cell-schema merge failed (%s: %s); falling back "
             "to the mergeSchema read", type(exc).__name__, exc,
         )
-        return spark.read.option("mergeSchema", "true").parquet(*files)
+        return read_parquet_files(spark, files, mergeSchema="true")
 
 
 def stored_cell_count(store: str) -> int | None:
@@ -423,7 +424,7 @@ def _fold_cells(
         os.path.join(store, f) for d in touched for f in prev_days.get(d, [])
     ]
     if carry_files:
-        prev_touched = spark.read.parquet(*carry_files).filter(
+        prev_touched = _read_cell_files(spark, carry_files).filter(
             F.col(day_col).isin(touched)
         )
         # allowMissingColumns: a NEW measure added to cell_fn must not

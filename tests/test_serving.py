@@ -17,6 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from presto_rakam_kafka_spark.streaming.serving import (
+    _read_cell_files,
     _read_manifest,
     _read_pointer,
     maintain_rollup,
@@ -26,6 +27,27 @@ from presto_rakam_kafka_spark.streaming.serving import (
 )
 
 GROUP = ["day", "event_type"]
+
+
+def test_cell_read_past_listing_threshold_builds_without_a_job(spark, tmp_path):
+    """Past Spark's 32-path listing threshold a cell read still builds
+    with no Spark job: no listing job and no schema-inference job."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    files = []
+    for i in range(40):
+        files.append(str(tmp_path / f"cells-{i}.parquet"))
+        pq.write_table(pa.table({"k": [i], "n": [1]}), files[-1])
+    sc = spark.sparkContext
+    group = "cell_read_build_probe"
+    sc.setJobGroup(group, group)
+    try:
+        df = _read_cell_files(spark, files)
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert df.agg(F.sum("n"), F.countDistinct("k")).first() == (40, 40)
 
 
 def _cells(df_raw):
