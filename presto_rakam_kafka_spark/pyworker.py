@@ -21,11 +21,7 @@ from __future__ import annotations
 import os
 import zipimport
 
-_original = getattr(
-    zipimport.zipimporter.invalidate_caches,
-    "__wrapped__",
-    zipimport.zipimporter.invalidate_caches,
-)
+_original = zipimport.zipimporter.invalidate_caches
 #: archive path -> (stat signature taken before the read, directory read)
 _read_at: dict[str, tuple[tuple[int, int, int], dict]] = {}
 
@@ -52,5 +48,4 @@ def invalidate_caches(self) -> None:
         _read_at[self.archive] = (sig, self._files)
 
 
-invalidate_caches.__wrapped__ = _original
 zipimport.zipimporter.invalidate_caches = invalidate_caches
